@@ -62,7 +62,9 @@ def convex_hull_stats(points: DataFrame, key_col: str = "key",
         import pandas as pd
         for pdf in it:
             outs = []
-            for key, grp in pdf.groupby("key"):
+            # dropna=False: the null key is a group, as in the Spark
+            # groupBy that merges the local hulls
+            for key, grp in pdf.groupby("key", dropna=False):
                 hull = monotone_chain(
                     list(zip(grp["x"].tolist(), grp["y"].tolist())))
                 outs.append(pd.DataFrame(

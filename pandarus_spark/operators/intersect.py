@@ -31,6 +31,12 @@ Scale design (north_rule):
   dedup afterwards makes salting result-invariant.
 * geometry bytes do NOT travel through the cell shuffle — only ids do;
   WKB is joined back after pair dedup.
+
+The refine (:func:`refine_pairs`) has three tiers, one per input shape:
+rect × rect pairs take a closed-form bbox clip; simple single-ring
+polygon pairs (convex or concave) take one batched convex-cover clip
+per Arrow batch; holes, multi-part geometry, lines and points take the
+scalar kernel.  All three give the scalar kernel's answer.
 """
 
 from __future__ import annotations
@@ -246,109 +252,65 @@ def _refine_rects(fminx, fminy, fmaxx, fmaxy, tminx, tminy, tmaxx, tmaxy):
     return keep, area, wkbs
 
 
-def _refine_simple_batch(rows, B):
-    """Batched general refine for convex-polygon × convex-polygon rows.
-
-    ``rows``: pandas frame of candidate pairs (non-rect, polygon kind).
-    Returns (handled_mask, result_frame): rows the batch path could not
-    take (holes, multi-part, a concave ring on EITHER side, foreign
-    WKB) stay for the scalar path.  Both sides must be convex because
-    Sutherland–Hodgman is only area-exact for convex subjects — a
-    concave subject with a disconnected intersection loses real area
-    to bridge edges (round-2 fuzz; the scalar kernel decomposes concave
-    rings into convex covers for the same reason).  Semantics identical
-    to G.intersection → G.measure (single S-H pass, planar 1e-18 piece
-    filter, Mollweide measure, m<=0 drop)."""
+def _pair_frame(rows, measures, wkbs):
+    """The refine's output frame for the candidate ``rows`` kept, with
+    their measures and intersection WKBs (one helper for every tier)."""
     import pandas as pd
-    f_pts, f_cnt, f_ok = B.decode_simple_polygon_batch(list(rows["from_wkb"]))
-    t_pts, t_cnt, t_ok = B.decode_simple_polygon_batch(list(rows["to_wkb"]))
-    handled = f_ok & t_ok
-    if handled.any():
-        conv = np.zeros(len(rows), dtype=bool)
-        conv[handled] = (B.is_convex_batch(t_pts[handled], t_cnt[handled])
-                         & B.is_convex_batch(f_pts[handled], f_cnt[handled]))
-        handled &= conv
-    if not handled.any():
-        return handled, None
-    sp, sc = f_pts[handled], f_cnt[handled]
-    cp, cc = t_pts[handled], t_cnt[handled]
-    cp = B.ensure_ccw_batch(cp, cc)
-    out_pts, out_cnt = B.clip_convex_batch(sp, sc, cp, cc)
-    keep = out_cnt >= 3
-    if keep.any():
-        keep[keep] &= B.ring_area_batch(out_pts[keep], out_cnt[keep]) > 1e-18
-    measures = np.zeros(len(out_cnt))
-    if keep.any():
-        measures[keep] = B.mollweide_area_batch(out_pts[keep], out_cnt[keep])
-        keep &= measures > 0
-    kept_rows = rows[handled][keep]
-    wkbs = B.multipolygon_wkb_batch(out_pts[keep], out_cnt[keep])
-    frame = pd.DataFrame({
-        "from_id": kept_rows["from_id"].to_numpy(dtype="int64"),
-        "to_id": kept_rows["to_id"].to_numpy(dtype="int64"),
-        "from_label": kept_rows["from_label"].to_numpy(),
-        "to_label": kept_rows["to_label"].to_numpy(),
-        "measure": measures[keep],
+    return pd.DataFrame({
+        "from_id": rows["from_id"].to_numpy(dtype="int64"),
+        "to_id": rows["to_id"].to_numpy(dtype="int64"),
+        "from_label": rows["from_label"].to_numpy(),
+        "to_label": rows["to_label"].to_numpy(),
+        "measure": np.asarray(measures, dtype=np.float64),
         "geom_wkb": wkbs})
-    return handled, frame
 
 
 _CONCAVE_PAIR_CAP = 4096  # piece pairs per row above this defer to scalar
 
 
-def _refine_concave_batch(rows, B):
-    """Batched tier for SIMPLE single-ring pairs with a concave side
-    (round-2 verdict #4: these fell to the scalar loop, ~2x slower
-    than hexagons at 50k features).  Mirrors the scalar kernel
-    exactly: each ring is reduced to its disjoint convex cover
-    (geom._convex_cover — the ring itself when convex, its trapezoid
-    decomposition otherwise), candidate (subject piece × clip piece)
-    pairs are bbox-screened in the scalar's nested-loop order, and ALL
-    surviving pairs across the whole Arrow batch run ONE
-    clip_convex_batch.  Per-row measures sum the piece areas in that
-    same order and the MultiPolygon parts are emitted in it, so output
-    is bit-identical to the scalar tier (pinned by tests).  Rows whose
-    cover fan-out exceeds ``_CONCAVE_PAIR_CAP`` defer to scalar.
+def _refine_cover_batch(rows, B):
+    """Batched tier for every SIMPLE single-ring polygon pair, convex or
+    concave.  Mirrors the scalar kernel exactly: each ring is reduced to
+    its disjoint convex cover (geom._convex_cover — the ring itself when
+    convex, its trapezoid decomposition otherwise), candidate (subject
+    piece × clip piece) pairs are bbox-screened in the scalar's
+    nested-loop order, and ALL surviving pairs across the whole Arrow
+    batch run ONE clip_convex_batch (Sutherland–Hodgman is area-exact
+    only for convex subjects, hence the cover).  Per-row measures sum
+    the piece areas in that same order and the MultiPolygon parts are
+    emitted in it, so output is bit-identical to :func:`_refine_scalar`
+    (pinned by tests).  Rows whose cover fan-out exceeds
+    ``_CONCAVE_PAIR_CAP`` defer to scalar.
 
-    Covers are computed ONCE per distinct geometry via the vectorized
-    ``convex_cover_batch`` (each feature typically appears in several
-    candidate pairs of the same Arrow batch — the cell join emits one
-    row per neighbour), with per-piece bboxes memoized alongside; the
-    per-pair loop below does only bbox screening and index appends."""
+    Each distinct geometry is decoded and covered ONCE (a feature
+    typically appears in several candidate pairs of the same Arrow
+    batch — the cell join emits one row per neighbour).  Returns
+    (handled_mask, result_frame or None); unhandled rows (holes,
+    multi-part, foreign WKB, oversized fan-out) stay for the scalar
+    tier."""
     import pandas as pd
-    wkb_f = list(rows["from_wkb"])
-    wkb_t = list(rows["to_wkb"])
-    f_pts, f_cnt, f_ok = B.decode_simple_polygon_batch(wkb_f)
-    t_pts, t_cnt, t_ok = B.decode_simple_polygon_batch(wkb_t)
-    handled = f_ok & t_ok
+    n = len(rows)
+    handled = np.zeros(n, dtype=bool)
+    codes, uniq = pd.factorize(np.concatenate(
+        [rows["from_wkb"].to_numpy(), rows["to_wkb"].to_numpy()]))
+    if not len(uniq):
+        return handled, None
+    u_pts, u_cnt, u_ok = B.decode_simple_polygon_batch(list(uniq))
+    uf, ut = codes[:n], codes[n:]
+    handled = (uf >= 0) & (ut >= 0) & u_ok[uf] & u_ok[ut]
     if not handled.any():
         return handled, None
-    # distinct geometries across both sides -> one batched cover pass
-    uniq: dict[bytes, int] = {}
-    u_rings: list[np.ndarray] = []
-    hidx = np.nonzero(handled)[0]
-    for i in hidx:
-        for wb, pts, cnt in ((wkb_f[i], f_pts, f_cnt), (wkb_t[i], t_pts, t_cnt)):
-            k = bytes(wb)
-            if k not in uniq:
-                uniq[k] = len(u_rings)
-                u_rings.append(pts[i, :cnt[i]])
-    u_pts, u_cnt = B.pad_rings(u_rings)
+    # rings that failed the decode have cnt 0 and so no cover pieces
     fpts, fcnt, starts, boxes = B.convex_cover_flat(u_pts, u_cnt)
     npieces = np.diff(starts)
     # ragged cross product: every (subject piece x clip piece) of every
     # row, bbox-screened, in the scalar nested-loop order (sub outer)
-    uf = np.fromiter((uniq[bytes(wkb_f[i])] for i in hidx), dtype=np.int64,
-                     count=len(hidx))
-    ut = np.fromiter((uniq[bytes(wkb_t[i])] for i in hidx), dtype=np.int64,
-                     count=len(hidx))
-    fanout = npieces[uf] * npieces[ut]
-    over = fanout > _CONCAVE_PAIR_CAP
-    if over.any():
-        handled[hidx[over]] = False
-        hidx, uf, ut, fanout = hidx[~over], uf[~over], ut[~over], fanout[~over]
+    fanout = np.where(handled, npieces[uf] * npieces[ut], 0)
+    handled &= fanout <= _CONCAVE_PAIR_CAP
     if not handled.any():
         return handled, None
+    hidx = np.nonzero(handled)[0]
+    uf, ut, fanout = uf[hidx], ut[hidx], fanout[hidx]
     rep = np.repeat(np.arange(len(hidx)), fanout)
     ends = np.cumsum(fanout)
     p = np.arange(len(rep)) - np.repeat(ends - fanout, fanout)
@@ -360,65 +322,81 @@ def _refine_concave_batch(rows, B):
               | (sb[:, 3] < cb[:, 1]) | (cb[:, 3] < sb[:, 1]))
     sub_idx, clip_idx = sub_idx[touch], clip_idx[touch]
     piece_row = hidx[rep[touch]]
-    measures = np.zeros(len(rows), dtype=np.float64)
-    parts_by_row: dict[int, list] = {}
-    if len(piece_row):
-        cp = B.ensure_ccw_batch(fpts[clip_idx], fcnt[clip_idx])
-        out_pts, out_cnt = B.clip_convex_batch(
-            fpts[sub_idx], fcnt[sub_idx], cp, fcnt[clip_idx])
-        keep = out_cnt >= 3
-        if keep.any():
-            keep[keep] &= B.ring_area_batch(out_pts[keep], out_cnt[keep]) > 1e-18
-        if keep.any():
-            areas = B.mollweide_area_batch(out_pts[keep], out_cnt[keep])
-            kept_rows = piece_row[keep]
-            kept_pts, kept_cnt = out_pts[keep], out_cnt[keep]
-            # in-order accumulation (kept_rows ascends within each row,
-            # so the += order matches the scalar loop's)
-            for k in range(len(kept_rows)):
-                i = int(kept_rows[k])
-                measures[i] += areas[k]
-                parts_by_row.setdefault(i, []).append((kept_pts[k], int(kept_cnt[k])))
-    emit = handled & (measures > 0)
-    if not emit.any():
+    if not len(piece_row):
         return handled, None
-    idxs = np.nonzero(emit)[0]
-    kept_rows = rows.iloc[idxs]
-    wkbs = [B.multipolygon_parts_wkb(parts_by_row[int(i)]) for i in idxs]
-    frame = pd.DataFrame({
-        "from_id": kept_rows["from_id"].to_numpy(dtype="int64"),
-        "to_id": kept_rows["to_id"].to_numpy(dtype="int64"),
-        "from_label": kept_rows["from_label"].to_numpy(),
-        "to_label": kept_rows["to_label"].to_numpy(),
-        "measure": measures[idxs],
-        "geom_wkb": wkbs})
-    return handled, frame
+    cp = B.ensure_ccw_batch(fpts[clip_idx], fcnt[clip_idx])
+    out_pts, out_cnt = B.clip_convex_batch(fpts[sub_idx], fcnt[sub_idx], cp, fcnt[clip_idx])
+    keep = out_cnt >= 3
+    if keep.any():
+        keep[keep] &= B.ring_area_batch(out_pts[keep], out_cnt[keep]) > 1e-18
+    if not keep.any():
+        return handled, None
+    kept_rows, kept_pts, kept_cnt = piece_row[keep], out_pts[keep], out_cnt[keep]
+    # np.add.at is unbuffered and applies in index order; kept_rows
+    # ascends, so each row sums its pieces in the scalar loop's order
+    measures = np.zeros(n, dtype=np.float64)
+    np.add.at(measures, kept_rows, B.mollweide_area_batch(kept_pts, kept_cnt))
+    idxs = np.nonzero(handled & (measures > 0))[0]
+    if not len(idxs):
+        return handled, None
+    first = np.searchsorted(kept_rows, idxs)
+    nparts = np.searchsorted(kept_rows, idxs, side="right") - first
+    # one-part rows: bulk encode; several parts: per-row MultiPolygon
+    wkbs: list = [None] * len(idxs)
+    one = np.nonzero(nparts == 1)[0]
+    for j, w in zip(one, B.multipolygon_wkb_batch(kept_pts[first[one]], kept_cnt[first[one]])):
+        wkbs[j] = w
+    for j in np.nonzero(nparts > 1)[0]:
+        s = first[j]
+        wkbs[j] = B.multipolygon_parts_wkb(
+            [(kept_pts[k], int(kept_cnt[k])) for k in range(s, s + nparts[j])])
+    return handled, _pair_frame(rows.iloc[idxs], measures[idxs], wkbs)
 
 
-def refine_pairs(pairs_with_geoms: DataFrame, rect_fast: bool = True,
-                 batch_general: bool = True) -> DataFrame:
+def _refine_scalar(pdf):
+    """The scalar kernel, one candidate row at a time: the refine's
+    tier for holes, multi-part geometry, lines, points, collections and
+    oversized rings, and the oracle the batched tiers are tested
+    against.  Topology errors are skipped per row, like the reference
+    (utils/multiprocess.py:102-104)."""
+    keep, measures, wkbs = [], [], []
+    for pos, (fwkb, kind, twkb) in enumerate(zip(pdf["from_wkb"], pdf["from_kind"],
+                                                 pdf["to_wkb"])):
+        try:
+            fg = G.wkb_loads(bytes(fwkb))
+            tg = G.wkb_loads(bytes(twkb))
+            inter = G.intersection(fg, kind, tg)
+        except Exception:
+            continue  # reference skips TopologicalError rows
+        if inter is None:
+            continue
+        m = G.measure(inter, kind)
+        if m <= 0 and kind != "point":
+            continue
+        keep.append(pos)
+        measures.append(m)
+        wkbs.append(G.wkb_dumps(inter))
+    return _pair_frame(pdf.iloc[keep], measures, wkbs)
+
+
+def refine_pairs(pairs_with_geoms: DataFrame) -> DataFrame:
     """Exact refine in Arrow batches: clip + Mollweide measure.
 
-    Input columns: from_id, to_id, from_wkb, from_kind, to_wkb, plus
-    bbox columns (f_minx..t_maxy) and from_rect/to_rect flags.  Three
-    execution tiers, fastest first, identical semantics:
+    Input columns: from_id, to_id, from_label, to_label, from_wkb,
+    from_kind, to_wkb, plus bbox columns (f_minx..t_maxy) and
+    from_rect/to_rect flags.  Three execution tiers, fastest first,
+    identical semantics:
 
     1. rect × rect polygon pairs — closed-form bbox clip, pure numpy
        (``_refine_rects``);
-    2. convex-polygon × convex-polygon pairs — batched
-       Sutherland–Hodgman across the whole Arrow batch
-       (geometry/batch.py; the round-2 fix for the per-row general
-       loop — convex-only on both sides because S-H drops area for
-       concave subjects with disconnected intersections);
-    2.5. simple single-ring pairs with a CONCAVE side — per-row convex
-       cover (trapezoid decomposition), then ONE batched S-H over all
-       (subject piece × clip piece) candidates in the Arrow batch
-       (``_refine_concave_batch``, round-3);
+    2. simple single-ring polygon pairs, convex or concave — per-ring
+       convex cover (the ring itself when convex, its trapezoid
+       decomposition otherwise), then ONE batched Sutherland–Hodgman
+       over all (subject piece × clip piece) candidates in the Arrow
+       batch (``_refine_cover_batch``);
     3. everything else (holes, multi-part, lines, points, collections,
-       oversized rings) — the scalar kernel per row.
-
-    Topology errors are skipped per row, like the reference
-    (utils/multiprocess.py:102-104)."""
+       oversized rings) — the scalar kernel per row
+       (``_refine_scalar``)."""
 
     def gen(batches):
         import pandas as pd
@@ -426,11 +404,9 @@ def refine_pairs(pairs_with_geoms: DataFrame, rect_fast: bool = True,
         from ..geometry import batch as B
         for pdf in batches:
             frames = []
+            poly = (pdf["from_kind"] == "polygon").to_numpy()
             rect = (pdf["from_rect"].to_numpy(dtype=bool)
-                    & pdf["to_rect"].to_numpy(dtype=bool)
-                    & (pdf["from_kind"] == "polygon").to_numpy())
-            if not rect_fast:
-                rect = np.zeros(len(pdf), dtype=bool)
+                    & pdf["to_rect"].to_numpy(dtype=bool) & poly)
             if rect.any():
                 r = pdf[rect]
                 keep, area, wkbs = _refine_rects(
@@ -438,62 +414,15 @@ def refine_pairs(pairs_with_geoms: DataFrame, rect_fast: bool = True,
                     r["f_maxx"].to_numpy(), r["f_maxy"].to_numpy(),
                     r["t_minx"].to_numpy(), r["t_miny"].to_numpy(),
                     r["t_maxx"].to_numpy(), r["t_maxy"].to_numpy())
-                kept = r[keep]
-                frames.append(pd.DataFrame({
-                    "from_id": kept["from_id"].to_numpy(dtype="int64"),
-                    "to_id": kept["to_id"].to_numpy(dtype="int64"),
-                    "from_label": kept["from_label"].to_numpy(),
-                    "to_label": kept["to_label"].to_numpy(),
-                    "measure": area,
-                    "geom_wkb": wkbs}))
-            gen_rows = pdf[~rect]
-            if batch_general and len(gen_rows):
-                poly = gen_rows[(gen_rows["from_kind"] == "polygon").to_numpy()]
-                if len(poly):
-                    handled, frame = _refine_simple_batch(poly, B)
-                    if frame is not None and len(frame):
-                        frames.append(frame)
-                    if handled.any():
-                        drop = poly.index[handled]
-                        gen_rows = gen_rows.drop(index=drop)
-                # tier 2.5: simple single-ring pairs with a concave side
-                poly = gen_rows[(gen_rows["from_kind"] == "polygon").to_numpy()]
-                if len(poly):
-                    handled, frame = _refine_concave_batch(poly, B)
-                    if frame is not None and len(frame):
-                        frames.append(frame)
-                    if handled.any():
-                        drop = poly.index[handled]
-                        gen_rows = gen_rows.drop(index=drop)
-            out = {"from_id": [], "to_id": [], "from_label": [], "to_label": [],
-                   "measure": [], "geom_wkb": []}
-            for fid, tid, flab, tlab, fwkb, kind, twkb in zip(
-                    gen_rows["from_id"], gen_rows["to_id"],
-                    gen_rows["from_label"], gen_rows["to_label"],
-                    gen_rows["from_wkb"], gen_rows["from_kind"], gen_rows["to_wkb"]):
-                try:
-                    fg = G.wkb_loads(bytes(fwkb))
-                    tg = G.wkb_loads(bytes(twkb))
-                    inter = G.intersection(fg, kind, tg)
-                except Exception:
-                    continue  # reference skips TopologicalError rows
-                if inter is None:
-                    continue
-                m = G.measure(inter, kind)
-                if m <= 0 and kind != "point":
-                    continue
-                out["from_id"].append(fid)
-                out["to_id"].append(tid)
-                out["from_label"].append(flab)
-                out["to_label"].append(tlab)
-                out["measure"].append(m)
-                out["geom_wkb"].append(G.wkb_dumps(inter))
-            frames.append(pd.DataFrame({"from_id": pd.Series(out["from_id"], dtype="int64"),
-                                        "to_id": pd.Series(out["to_id"], dtype="int64"),
-                                        "from_label": out["from_label"],
-                                        "to_label": out["to_label"],
-                                        "measure": pd.Series(out["measure"], dtype="float64"),
-                                        "geom_wkb": out["geom_wkb"]}))
+                frames.append(_pair_frame(r[keep], area, wkbs))
+            rest = pdf[~rect]
+            cover = pdf[poly & ~rect]
+            if len(cover):
+                handled, frame = _refine_cover_batch(cover, B)
+                if frame is not None:
+                    frames.append(frame)
+                rest = rest.drop(index=cover.index[handled])
+            frames.append(_refine_scalar(rest))
             yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
     return pairs_with_geoms.mapInPandas(gen, schema=PAIR_REFINE_SCHEMA)
@@ -521,8 +450,7 @@ def intersect(features1: DataFrame, features2: DataFrame,
               res: int = DEFAULT_TARGET_RES, max_cells: int = DEFAULT_MAX_CELLS,
               salt_buckets: int = 0, salt_threshold: int = 50_000,
               broadcast_features: bool | None = None,
-              ids: str = "fast", refine_partitions: int | None = None,
-              rect_fast: bool = True) -> DataFrame:
+              ids: str = "fast") -> DataFrame:
     """The overlay join. Returns
     ``(id, from_label, to_label, measure, geom_wkb)`` matching the
     reference's fixed output schema (core.py:153-161).
@@ -579,27 +507,19 @@ def intersect(features1: DataFrame, features2: DataFrame,
     strict_overlap = ((F.col("f_minx") < F.col("t_maxx")) & (F.col("t_minx") < F.col("f_maxx"))
                       & (F.col("f_miny") < F.col("t_maxy")) & (F.col("t_miny") < F.col("f_maxy")))
     enriched = enriched.filter(strict_overlap | (F.col("from_kind") != "polygon"))
-    if rect_fast:
-        # rect×rect rows are refined from their bboxes alone — null the
-        # WKB payloads JVM-side so the Arrow exchange into the Python
-        # refine doesn't ship geometry bytes it will never read
-        both_rect = (F.col("from_rect") & F.col("to_rect")
-                     & (F.col("from_kind") == "polygon"))
-        enriched = (enriched
-                    .withColumn("from_wkb", F.when(both_rect, F.lit(None))
-                                .otherwise(F.col("from_wkb")))
-                    .withColumn("to_wkb", F.when(both_rect, F.lit(None))
-                                .otherwise(F.col("to_wkb"))))
-    if refine_partitions:
-        # opt-in for Python-heavy (non-rect) workloads: the general clip
-        # kernel is CPU-bound per row, so partition by task-count rather
-        # than letting AQE coalesce the tiny-by-bytes join output onto a
-        # few cores.  Rect-dominated workloads skip the extra shuffle —
-        # the vectorized refine is cheap wherever it lands.
-        enriched = enriched.repartition(refine_partitions)
+    # rect×rect rows are refined from their bboxes alone — null the
+    # WKB payloads JVM-side so the Arrow exchange into the Python
+    # refine doesn't ship geometry bytes it will never read
+    both_rect = (F.col("from_rect") & F.col("to_rect")
+                 & (F.col("from_kind") == "polygon"))
+    enriched = (enriched
+                .withColumn("from_wkb", F.when(both_rect, F.lit(None))
+                            .otherwise(F.col("from_wkb")))
+                .withColumn("to_wkb", F.when(both_rect, F.lit(None))
+                            .otherwise(F.col("to_wkb"))))
     # labels ride through the refine (they're already in the join output),
     # so no post-refine label joins are needed
-    refined = refine_pairs(enriched, rect_fast=rect_fast)
+    refined = refine_pairs(enriched)
 
     if ids == "fast":
         id_col = F.monotonically_increasing_id().alias("id")

@@ -27,8 +27,7 @@ from ..tiling.cells import LAT_MIN, LAT_SPAN, LON_MIN, LON_SPAN
 MAX_BITS = 30           # 2*30 interleaved bits < 63: no sign-bit risk
 
 
-def _quant_sql(expr: str, lo: float, span: float, bits: int,
-               dialect: str) -> str:
+def _quant_sql(expr: str, lo: float, span: float, bits: int) -> str:
     """floor((x - lo) / span * 2^bits) clamped to [0, 2^bits - 1].
     The divide and the power-of-two multiply are each correctly
     rounded, in a fixed order, so both engines produce identical
@@ -84,8 +83,8 @@ def zorder_key(lon_expr: str, lat_expr: str, bits: int = 16) -> Column:
     prefer :func:`with_zorder_key`, which stages the quantized
     indices as intermediate columns so codegen compiles 2 small
     expressions instead of one 32-way-repeated one."""
-    ix = _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits, "spark")
-    iy = _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits, "spark")
+    ix = _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits)
+    iy = _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits)
     return F.expr(interleave_sql(ix, iy, bits, "spark"))
 
 
@@ -99,9 +98,9 @@ def with_zorder_key(df: DataFrame, lon_expr: str = "lon",
     staged), keeping the generated Java small and the quantization
     computed once per row instead of 2*bits times."""
     tmp = df.withColumn("_zx", F.expr(
-              _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits, "spark"))) \
+              _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits))) \
             .withColumn("_zy", F.expr(
-              _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits, "spark")))
+              _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits)))
     return (tmp.withColumn(key_col,
                            F.expr(interleave_sql("_zx", "_zy", bits,
                                                  "spark")))
@@ -111,8 +110,8 @@ def with_zorder_key(df: DataFrame, lon_expr: str = "lon",
 def zorder_key_sql(lon_expr: str, lat_expr: str, bits: int = 16) -> str:
     """DuckDB rendering of :func:`zorder_key` (same quantization, same
     interleave, bit-identical)."""
-    ix = _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits, "duckdb")
-    iy = _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits, "duckdb")
+    ix = _quant_sql(lon_expr, LON_MIN, LON_SPAN, bits)
+    iy = _quant_sql(lat_expr, LAT_MIN, LAT_SPAN, bits)
     return interleave_sql(ix, iy, bits, "duckdb")
 
 

@@ -160,7 +160,6 @@ def _tile_candidates(features: DataFrame, cells: DataFrame,
 def raster_statistics(features: DataFrame, cells: DataFrame,
                       method: str = "coverage", strategy: str = "broadcast",
                       res: int = 12, max_cells: int = 64,
-                      batch_weights: bool = True,
                       weight_cells: DataFrame | None = None) -> DataFrame:
     """Zonal stats: (label, min, max, mean, count).
 
@@ -232,7 +231,7 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
                         mask |= _centers_in(pts, rings)
                     out["label"].extend(labels[mask]); out["value"].extend(vals[mask])
                     out["weight"].extend([1.0] * int(mask.sum()))
-                elif batch_weights:
+                else:
                     # batched coverage weights: clip each feature ring's
                     # CONVEX COVER (the ring itself when convex, its
                     # trapezoid decomposition otherwise) against every
@@ -272,20 +271,6 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
                     out["weight"].extend(np.minimum(frac[keep], 1.0))
                     if has_w:
                         out["wval"].extend(wvals[keep])
-                else:
-                    for i in range(len(vals)):
-                        box = [np.array([[mnx[i], mny[i]], [mxx[i], mny[i]], [mxx[i], mxy[i]],
-                                         [mnx[i], mxy[i]], [mnx[i], mny[i]]])]
-                        frac = 0.0
-                        cell_area = (mxx[i] - mnx[i]) * (mxy[i] - mny[i])
-                        for rings in rings_list:
-                            pieces = G.clip_polygon_by_polygon(box, rings)
-                            frac += sum(G.polygon_area(p) for p in pieces) / cell_area
-                        if frac > 1e-12:
-                            out["label"].append(labels[i]); out["value"].append(vals[i])
-                            out["weight"].append(min(frac, 1.0))
-                            if has_w:
-                                out["wval"].append(wvals[i])
             cols = {"label": pd.Series(out["label"], dtype="object"),
                     "value": pd.Series(out["value"], dtype="float64"),
                     "weight": pd.Series(out["weight"], dtype="float64")}
@@ -318,6 +303,24 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
         sel += [F.col("vwmean").cast("float").cast("double").alias("weighted_mean"),
                 F.col("vwsum").cast("float").cast("double").alias("weighted_sum")]
     return stats.select(*sel)
+
+
+def _coverage_weights_scalar(rings_list: list, mnx: np.ndarray, mny: np.ndarray,
+                             mxx: np.ndarray, mxy: np.ndarray) -> np.ndarray:
+    """Reference coverage fractions, one cell at a time: the exact
+    polygon clip (``geom.clip_polygon_by_polygon``) of every polygon
+    part against each cell box, over the cell area.  The batched
+    weights in :func:`raster_statistics` are tested against this; the
+    caller keeps cells above 1e-12 and caps the weight at 1."""
+    frac = np.zeros(len(mnx))
+    for i in range(len(mnx)):
+        box = [np.array([[mnx[i], mny[i]], [mxx[i], mny[i]], [mxx[i], mxy[i]],
+                         [mnx[i], mxy[i]], [mnx[i], mny[i]]])]
+        cell_area = (mxx[i] - mnx[i]) * (mxy[i] - mny[i])
+        for rings in rings_list:
+            pieces = G.clip_polygon_by_polygon(box, rings)
+            frac[i] += sum(G.polygon_area(p) for p in pieces) / cell_area
+    return frac
 
 
 def _centers_in(pts: np.ndarray, rings: list) -> np.ndarray:

@@ -291,7 +291,8 @@ def unigram_logprob_sql(source: str = "documents", text_expr: str = "text",
     ``functions/detmath.py``, and the same explicit integer
     round-half-up mean, so the output is bit-identical — no libm, no
     float anywhere).  DuckDB ``sum(BIGINT)`` is HUGEINT and ``//`` on
-    HUGEINT stays HUGEINT, hence the final CAST."""
+    HUGEINT stays HUGEINT, hence the final CASTs: Arrow carries HUGEINT
+    as decimal128, which would not stringify like Spark's bigint."""
     from ..functions.detmath import det_ln_micro_sql
     w = WORDS_SQL.format(t=text_expr)
     nll_m1 = det_ln_micro_sql("t.t", "freq.c", "duckdb")
@@ -304,7 +305,7 @@ scored_tok AS (SELECT freq.token, {nll_m1} AS nll_m1 FROM freq, t),
 scored AS (
   SELECT tf.doc_id, tf.tf, tf.tf * st.nll_m1 AS nll_m
   FROM tf JOIN scored_tok st USING (token))
-SELECT doc_id, sum(tf) AS n_tokens,
+SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
        CAST((2 * sum(nll_m) + sum(tf)) // (2 * sum(tf)) AS BIGINT) AS nll_micro
 FROM scored GROUP BY doc_id"""
 

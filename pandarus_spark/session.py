@@ -80,6 +80,16 @@ def apply_engine_confs(spark: SparkSession,
     return confs
 
 
+def default_local_heap(total_bytes: int | None = None) -> str:
+    """Driver heap for a ``local[N]`` session when
+    ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the physical memory,
+    capped at 48g (the cap is what a 128 GiB host gets).  A fixed 48g
+    on a smaller host lets the JVM grow past the memory it has."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, total_bytes // 2 // 2**20)}m"
+
+
 def build_session(app: str = "pandarus-spark", master: str | None = None,
                   shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -91,9 +101,10 @@ def build_session(app: str = "pandarus-spark", master: str | None = None,
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", ncpu))
     cluster = master.startswith("spark://")
     # local[N] runs executors inside the driver JVM; the 1g default heap
-    # OOMs real workloads — size it from the env (128 GiB box here).
-    # Against a standalone cluster the executors hold the data instead.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g" if cluster else "48g")
+    # OOMs real workloads — size it from the env, else from the host's
+    # memory.  Against a standalone cluster the executors hold the data.
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                "8g" if cluster else default_local_heap())
     builder = (
         SparkSession.builder.master(master).appName(app)
         .config("spark.driver.memory", driver_mem)

@@ -166,6 +166,20 @@ def test_unigram_logprob_duckdb_parity(spark):
     assert got == want
 
 
+def test_unigram_logprob_sql_columns_are_int64_through_arrow():
+    """The driver fetches oracle results through Arrow, where DuckDB's
+    HUGEINT (``sum(BIGINT)``) arrives as decimal128 and stringifies
+    unlike Spark's bigint; both output columns must come out int64."""
+    import pyarrow as pa
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": [1, 2],
+                                            "text": ["a a b", "a b c"]}))
+    tbl = con.execute(unigram_logprob_sql()).fetch_arrow_table()
+    assert tbl.schema.field("n_tokens").type == pa.int64()
+    assert tbl.schema.field("nll_micro").type == pa.int64()
+    assert sorted(tbl.column("n_tokens").to_pylist()) == [3, 3]
+
+
 def test_line_dedup_doc_scope(spark):
     docs = spark.createDataFrame([(1, "x\ny\nx"), (2, "x\nz")],
                                  "doc_id long, text string")

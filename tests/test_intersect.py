@@ -85,10 +85,11 @@ def test_single_point_touches_all_four(spark, grid):
 
 def test_rect_fast_path_matches_general_kernel(spark, grid):
     """The vectorized rect×rect refine must agree with the general clip
-    kernel to fp round-off (same corners, same Mollweide shoelace)."""
+    kernel to fp round-off (same corners, same Mollweide shoelace).
+    Inputs without an ``is_rect`` column never take the rect tier."""
     square = extract_features(pages_df(spark, "square"))
     fast = _rows(ps.intersect(square, grid))
-    slow = _rows(ps.intersect(square, grid, rect_fast=False))
+    slow = _rows(ps.intersect(square.drop("is_rect"), grid.drop("is_rect")))
     assert set(fast) == set(slow)
     for k in fast:
         assert fast[k] == pytest.approx(slow[k], rel=1e-12)

@@ -55,9 +55,29 @@ def test_zonal_stats_centers_exact_goldens(spark, range_cells):
     _check(raster_statistics(grid, range_cells, method="centers"), GOLDEN_CENTERS)
 
 
+def _coverage_stats_reference(fdf, cells):
+    """(min, max, mean, count) per label from the reference per-cell
+    clip loop, aggregated and float32-rounded like raster_statistics."""
+    from pandarus_spark.operators.raster_stats import _coverage_weights_scalar
+    c = cells.toPandas()
+    box = [c[k].to_numpy() for k in ("minx", "miny", "maxx", "maxy")]
+    vals = c["value"].to_numpy()
+    f32 = lambda x: float(np.float32(x))  # noqa: E731
+    out = {}
+    for r in fdf.collect():
+        parts = G.extract_kind_parts(G.wkb_loads(bytes(r["geom_wkb"])), "polygon")
+        frac = _coverage_weights_scalar(parts, *box)
+        keep = frac > 1e-12
+        if keep.any():
+            w, v = np.minimum(frac[keep], 1.0), vals[keep]
+            out[r["label"]] = (f32(v.min()), f32(v.max()),
+                               f32((v * w).sum() / w.sum()), f32(w.sum()))
+    return out
+
+
 def test_coverage_batch_weights_match_scalar(spark, range_cells):
-    """Round-2 batched coverage weights vs the scalar clip loop on
-    awkward shapes: concave exterior and a polygon with a hole."""
+    """Round-2 batched coverage weights vs the reference per-cell clip
+    loop on awkward shapes: concave exterior and a polygon with a hole."""
     lring = np.array([[0.1, 0.2], [1.9, 0.2], [1.9, 1.0], [1.0, 1.0],
                       [1.0, 1.9], [0.1, 1.9], [0.1, 0.2]])
     holed = [np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]),
@@ -67,9 +87,7 @@ def test_coverage_batch_weights_match_scalar(spark, range_cells):
     fdf = extract_features(pages_df(spark, "zshapes", features=feats))
     fast = {r["label"]: (r["min"], r["max"], r["mean"], r["count"])
             for r in raster_statistics(fdf, range_cells, method="coverage").collect()}
-    slow = {r["label"]: (r["min"], r["max"], r["mean"], r["count"])
-            for r in raster_statistics(fdf, range_cells, method="coverage",
-                                       batch_weights=False).collect()}
+    slow = _coverage_stats_reference(fdf, range_cells)
     assert set(fast) == set(slow) == {"Lcave", "donut"}
     for k in slow:
         assert fast[k] == pytest.approx(slow[k], rel=1e-9), k
@@ -244,9 +262,7 @@ def test_coverage_batch_weights_concave_stars_match_scalar(spark, range_cells):
     fdf = extract_features(pages_df(spark, "zstars", features=feats))
     fast = {r["label"]: (r["min"], r["max"], r["mean"], r["count"])
             for r in raster_statistics(fdf, range_cells, method="coverage").collect()}
-    slow = {r["label"]: (r["min"], r["max"], r["mean"], r["count"])
-            for r in raster_statistics(fdf, range_cells, method="coverage",
-                                       batch_weights=False).collect()}
+    slow = _coverage_stats_reference(fdf, range_cells)
     assert set(fast) == set(slow)
     for k in slow:
         assert fast[k] == pytest.approx(slow[k], rel=1e-9), k

@@ -1,6 +1,7 @@
-"""End-to-end tests for the batched general refine (tier 2): non-rect
-polygon workloads through intersect() must match the scalar kernel's
-answers exactly."""
+"""Tests for the batched convex-cover refine tier: non-rect simple
+polygon pairs (convex or concave) through intersect() and refine_pairs()
+must match the scalar kernel's answers exactly, and the flat convex
+cover must reproduce the scalar cover bit for bit."""
 
 import numpy as np
 import pytest
@@ -17,7 +18,7 @@ def _hexagon(cx, cy, r):
 
 
 def _lshape(x0, y0, s):
-    """Concave (L-shaped) polygon — forces the scalar tier."""
+    """Concave (L-shaped) polygon — a multi-piece convex cover."""
     r = np.array([[x0, y0], [x0 + s, y0], [x0 + s, y0 + s / 2], [x0 + s / 2, y0 + s / 2],
                   [x0 + s / 2, y0 + s], [x0, y0 + s], [x0, y0]], dtype=float)
     return {"type": "Polygon", "coordinates": [r]}
@@ -54,7 +55,7 @@ def test_hexagons_over_grid_match_scalar(spark, grid):
 
 
 def test_hexagons_over_hexgrid_match_scalar(spark):
-    """Convex × convex, neither rect: pure tier-2 batch on both sides."""
+    """Convex × convex, neither rect: one cover piece per side."""
     probes = [{"name": f"p{i}", "geometry": _hexagon(0.3 * i, 0.2 * i, 0.45)}
               for i in range(5)]
     base = [{"name": f"b{j}", "geometry": _hexagon(0.25 * j + 0.1, 0.25 * j, 0.5)}
@@ -70,8 +71,8 @@ def test_hexagons_over_hexgrid_match_scalar(spark):
 
 
 def test_concave_base_routes_scalar_and_matches(spark):
-    """Concave to-side cannot take the batched tier; results must still
-    be correct through the scalar fallback."""
+    """Concave to-side: the cover tier clips its trapezoid pieces and
+    must match the scalar kernel."""
     probes = [{"name": f"hex {i}", "geometry": _hexagon(0.5 + 0.3 * i, 0.7, 0.4)}
               for i in range(3)]
     base = [{"name": f"L{j}", "geometry": _lshape(0.2 + 0.5 * j, 0.3, 1.0)}
@@ -87,7 +88,8 @@ def test_concave_base_routes_scalar_and_matches(spark):
 
 
 def test_mixed_rect_and_hex_batch(spark, grid):
-    """A batch mixing tier-1 (rect), tier-2 (hex), and empty overlaps."""
+    """A batch mixing the rect tier, the cover tier (hex), and empty
+    overlaps."""
     mixed = ([{"name": "sq", "geometry": {"type": "Polygon", "coordinates": [np.array(
         [[0.5, 0.5], [1.5, 0.5], [1.5, 1.5], [0.5, 1.5], [0.5, 0.5]])]}}]
         + [{"name": f"hex {i}", "geometry": _hexagon(0.8 + 0.2 * i, 1.0, 0.35)}
@@ -105,9 +107,9 @@ def test_mixed_rect_and_hex_batch(spark, grid):
 def test_concave_disconnected_intersection_through_intersect(spark):
     """A C-shaped feature over a box that overlaps both arms: the true
     intersection is two disjoint rects.  Single-pass S-H lost area here
-    (round-2 fuzz), and the tier-2 batch path must defer concave
-    subjects to the scalar kernel — the overlay measure must equal the
-    sum of the two rects' Mollweide measures exactly."""
+    (round-2 fuzz), so the batched tier clips the C-shape's convex cover
+    pieces — the overlay measure must equal the sum of the two rects'
+    Mollweide measures exactly."""
     c_shape = {"type": "Polygon", "coordinates": [np.array(
         [[0, 0], [3, 0], [3, 1], [1, 1], [1, 2], [3, 2], [3, 3], [0, 3], [0, 0]],
         dtype=float)]}
@@ -140,16 +142,29 @@ def _star(cx, cy, r1, r2, n=7):
     return {"type": "Polygon", "coordinates": [np.vstack([ring, ring[0]])]}
 
 
-def test_concave_tier_bit_identical_to_scalar(spark):
-    """Tier 2.5 (batched convex-cover clip for concave sides) must be
-    BIT-identical to the scalar kernel: same rows, same float measures,
-    same WKB bytes — on L-shapes, stars, concave×concave, and the
-    disconnected C-shape case."""
-    from pandarus_spark.operators.intersect import refine_pairs
-
+def _pair_rows(froms, tos):
     def _bx(g):
         r = np.asarray(g["coordinates"][0])
         return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())
+
+    return [(fi, ti, f"f{fi}", f"t{ti}",
+             bytearray(G.wkb_dumps(f)), "polygon", bytearray(G.wkb_dumps(t)),
+             *_bx(f), *_bx(t), False, False)
+            for fi, f in enumerate(froms) for ti, t in enumerate(tos)]
+
+
+def _scalar_rows(df):
+    """The scalar tier's answer for a refine input, computed in-process."""
+    from pandarus_spark.operators.intersect import _refine_scalar
+    return _refine_scalar(df.toPandas()).to_dict("records")
+
+
+def test_concave_tier_bit_identical_to_scalar(spark):
+    """The batched convex-cover tier must be BIT-identical to the
+    scalar kernel: same rows, same float measures, same WKB bytes — on
+    L-shapes, stars, concave×concave, the disconnected C-shape case, and
+    hexagon × hexagon (one cover piece per side)."""
+    from pandarus_spark.operators.intersect import refine_pairs
 
     c_shape = {"type": "Polygon", "coordinates": [np.array(
         [[0, 0], [3, 0], [3, 1], [1, 1], [1, 2], [3, 2], [3, 3], [0, 3], [0, 0]],
@@ -160,25 +175,20 @@ def test_concave_tier_bit_identical_to_scalar(spark):
            + [_lshape(0.5, 0.5, 1.4), _star(1.0, 1.0, 0.4, 1.1),
               {"type": "Polygon", "coordinates": [np.array(
                   [[2, 0.5], [3, 0.5], [3, 2.5], [2, 2.5], [2, 0.5]], dtype=float)]}])
-    rows = []
-    for fi, f in enumerate(froms):
-        for ti, t in enumerate(tos):
-            fb, tb = _bx(f), _bx(t)
-            rows.append((fi, ti, f"f{fi}", f"t{ti}",
-                         bytearray(G.wkb_dumps(f)), "polygon", bytearray(G.wkb_dumps(t)),
-                         *fb, *tb, False, False))
-    df = spark.createDataFrame(rows, _PAIRS_SCHEMA).coalesce(1)
+    hexes = [_hexagon(0.3 * i, 0.2 * i, 0.45) for i in range(5)]
     key = lambda r: (r["from_id"], r["to_id"])  # noqa: E731
-    batched = sorted(refine_pairs(df, batch_general=True).collect(), key=key)
-    scalar = sorted(refine_pairs(df, batch_general=False).collect(), key=key)
-    assert len(batched) == len(scalar) > 10
-    for b, s in zip(batched, scalar):
-        assert key(b) == key(s)
-        # identical vertices (bytes); measures agree to the shoelace
-        # summation-order ulp (the batched shoelace masks padded slots,
-        # the scalar one walks the closed ring)
-        assert bytes(b["geom_wkb"]) == bytes(s["geom_wkb"])
-        assert b["measure"] == pytest.approx(s["measure"], rel=1e-12)
+    for rows in (_pair_rows(froms, tos), _pair_rows(hexes, hexes)):
+        df = spark.createDataFrame(rows, _PAIRS_SCHEMA).coalesce(1)
+        batched = sorted(refine_pairs(df).collect(), key=key)
+        scalar = sorted(_scalar_rows(df), key=key)
+        assert len(batched) == len(scalar) > 10
+        for b, s in zip(batched, scalar):
+            assert key(b) == key(s)
+            # identical vertices (bytes); measures agree to the shoelace
+            # summation-order ulp (the batched shoelace masks padded slots,
+            # the scalar one walks the closed ring)
+            assert bytes(b["geom_wkb"]) == bytes(s["geom_wkb"])
+            assert b["measure"] == pytest.approx(s["measure"], rel=1e-12)
 
 
 def test_convex_cover_batch_bit_identical_to_scalar():
@@ -233,23 +243,18 @@ def test_concave_pair_cap_defers_to_scalar(spark, monkeypatch):
     """Rows whose cover fan-out exceeds _CONCAVE_PAIR_CAP must fall to
     the scalar tier and still produce the identical result."""
     import pandarus_spark.operators.intersect as I
-    from pandarus_spark.operators.intersect import refine_pairs
+    from pandarus_spark.geometry import batch as B
 
     star = _star(0.8, 0.9, 0.3, 0.9, n=9)     # 18-vertex concave: 16 quads
     box = {"type": "Polygon", "coordinates": [np.array(
         [[0, 0], [1.5, 0], [1.5, 1.5], [0, 1.5], [0, 0]], dtype=float)]}
-
-    def _bx(g):
-        r = np.asarray(g["coordinates"][0])
-        return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())
-
-    rows = [(0, 0, "f0", "t0", bytearray(G.wkb_dumps(star)), "polygon",
-             bytearray(G.wkb_dumps(box)), *_bx(star), *_bx(box), False, False)]
-    df = spark.createDataFrame(rows, _PAIRS_SCHEMA).coalesce(1)
-    want = refine_pairs(df, batch_general=False).collect()
+    df = spark.createDataFrame(_pair_rows([star], [box]), _PAIRS_SCHEMA).coalesce(1)
+    want = _scalar_rows(df)
 
     monkeypatch.setattr(I, "_CONCAVE_PAIR_CAP", 4)   # force the deferral
-    got = refine_pairs(df, batch_general=True).collect()
+    handled, _ = I._refine_cover_batch(df.toPandas(), B)
+    assert not handled.any()
+    got = I.refine_pairs(df).collect()
     assert len(got) == len(want) == 1
     assert got[0]["measure"] == want[0]["measure"]
     assert bytes(got[0]["geom_wkb"]) == bytes(want[0]["geom_wkb"])

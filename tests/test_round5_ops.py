@@ -1256,10 +1256,8 @@ def test_zorder_decode_roundtrip(spark):
                                                  deinterleave_sql,
                                                  with_zorder_key)
     dec = (with_zorder_key(_pts(spark), "lon", "lat", 8, "z")
-           .withColumn("ix", F.expr(_quant_sql("lon", -180.0, 360.0,
-                                               8, "spark")))
-           .withColumn("iy", F.expr(_quant_sql("lat", -90.0, 180.0,
-                                               8, "spark")))
+           .withColumn("ix", F.expr(_quant_sql("lon", -180.0, 360.0, 8)))
+           .withColumn("iy", F.expr(_quant_sql("lat", -90.0, 180.0, 8)))
            .withColumn("dx", F.expr(deinterleave_sql("z", 8, 0, "spark")))
            .withColumn("dy", F.expr(deinterleave_sql("z", 8, 1, "spark"))))
     assert dec.filter((F.col("dx") != F.col("ix")) |
@@ -1694,6 +1692,19 @@ def test_hull_kernel_and_operator(spark):
     out = {r.key: (r.n_hull, r.hull_2area)
            for r in convex_hull_stats(df).collect()}
     assert out == {"a": (4, 32), "b": (2, 0), "c": (1, 0)}
+
+
+def test_hull_keeps_the_null_key_group(spark):
+    # null keys form one group, as in a Spark groupBy, even when the
+    # group's points are spread over several partitions
+    from pandarus_spark.operators.hull import convex_hull_stats
+    rows = [(None, 0, 0), (None, 6, 0), (None, 0, 6), (None, 1, 1),
+            ("a", 0, 0), ("a", 2, 0), ("a", 0, 2)]
+    df = spark.createDataFrame(rows, "key string, x long, y long")
+    for parts in (1, 3):
+        out = {r.key: (r.n_hull, r.hull_2area)
+               for r in convex_hull_stats(df.repartition(parts)).collect()}
+        assert out == {None: (3, 36), "a": (3, 4)}
 
 
 def test_hull_two_stage_matches_single_stage(spark):

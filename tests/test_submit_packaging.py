@@ -101,3 +101,12 @@ def test_apply_engine_confs_matches_build_session(spark):
     assert cl["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] == "64"
     # restore the conftest session's width (conftest.py pins 4)
     apply_engine_confs(spark, shuffle_partitions=4)
+
+
+def test_default_local_heap_is_half_the_host_capped_at_48g():
+    from pandarus_spark.session import default_local_heap
+    assert default_local_heap(128 * 2**30) == "49152m"   # the 48g cap
+    assert default_local_heap(15 * 2**30) == "7680m"
+    assert default_local_heap(2**30) == "512m"
+    mb = int(default_local_heap()[:-1])                  # the running host
+    assert 0 < mb <= 48 * 1024
