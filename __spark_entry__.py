@@ -979,24 +979,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                          n_tables=16, n_planes=3)
 
     def q_ann_lsh_embeddings(spark, sf_dir):
-        # value-exact since round 4: S.ann_lsh_sql reproduces the seeded
-        # plane literals + bucket join + window top-k in DuckDB (r3
-        # verdict #5); subset-of-bruteforce additionally asserted in
-        # tests/test_pipeline_ops.py
+        # one-table SRP-LSH; value-exact since round 4: S.ann_lsh_sql
+        # reproduces the seeded plane literals + bucket join + window
+        # top-k in DuckDB (r3 verdict #5); subset-of-bruteforce
+        # additionally asserted in tests/test_pipeline_ops.py
         emb = _emb(spark, sf_dir)
         q = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        return S.ann_lsh_topk(emb, q, k=3, n_planes=6, dim=64)
+        return S.ann_lsh_topk(emb, q, k=3, n_tables=1, n_planes=6, dim=64)
 
     def q_ann_multiprobe_embeddings(spark, sf_dir):
         # multi-table SRP union — the configuration that actually
         # reaches high recall (16 tables x 4 planes: measured recall
-        # 1.0 on this corpus); value-exact vs S.ann_multiprobe_sql
+        # 1.0 on this corpus); value-exact vs S.ann_lsh_sql with the
+        # same n_tables
         emb = _emb(spark, sf_dir)
         q = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        return S.ann_lsh_multiprobe_topk(emb, q, k=3, n_tables=16,
-                                         n_planes=4, dim=64)
+        return S.ann_lsh_topk(emb, q, k=3, n_tables=16, n_planes=4, dim=64)
 
     def q_ann_recall_embeddings(spark, sf_dir):
         # measured recall@k of the multi-probe SRP-LSH path vs brute
@@ -1007,8 +1007,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
         brute = S.cosine_topk(emb, q, k=3) \
             .select("query_id", "neighbor_id", F.lit(1).alias("_b"))
-        ann = S.ann_lsh_multiprobe_topk(emb, q, k=3, n_tables=16,
-                                        n_planes=4, dim=64) \
+        ann = S.ann_lsh_topk(emb, q, k=3, n_tables=16, n_planes=4, dim=64) \
             .select("query_id", "neighbor_id", F.lit(1).alias("_a"))
         j = brute.join(ann, ["query_id", "neighbor_id"], "full_outer")
         # integer-PPM recall — same exact-rational-tie rationale as
@@ -2740,9 +2739,9 @@ FROM (SELECT count(*) AS n FROM tru) t,
      (SELECT count(*) AS n FROM lshp) l,
      (SELECT count(*) AS n FROM lshp JOIN tru USING (doc_a, doc_b)) h"""
 
-    ann_lsh = S.ann_lsh_sql(k=3, n_planes=6, seed=7, dim=64)
-    ann_multiprobe = S.ann_multiprobe_sql(k=3, n_tables=16, n_planes=4,
-                                          seed=7, dim=64)
+    ann_lsh = S.ann_lsh_sql(k=3, n_tables=1, n_planes=6, seed=7, dim=64)
+    ann_multiprobe = S.ann_lsh_sql(k=3, n_tables=16, n_planes=4, seed=7,
+                                   dim=64)
 
     ann_recall = f"""
 WITH brute AS (SELECT query_id, neighbor_id FROM ({cosine_topk}) z),

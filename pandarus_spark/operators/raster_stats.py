@@ -440,8 +440,9 @@ def horn_gradient(cells: DataFrame, row_col: str = "row",
     gx_num BIGINT, gy_num BIGINT)`` — the INTEGER numerators (the
     /8Δ normalization and the atan/sqrt slope-degree conversion are
     left to the consumer), so integer-valued DEMs are bit-exact
-    under any partitioning; border cells (incomplete windows) are
-    excluded, the standard Horn edge rule.
+    under any partitioning; fractional sums round half away from zero
+    (both engines), never truncate.  Border cells (incomplete windows)
+    are excluded, the standard Horn edge rule.
 
     Plan shape (100 TB test): the same scatter-gather convolution as
     :func:`focal_statistics` — each cell scatters to its 8 neighbor
@@ -471,15 +472,16 @@ def horn_gradient(cells: DataFrame, row_col: str = "row",
                              F.col("_c").alias("col")).distinct(),
                   ["row", "col"])
             .select("row", "col",
-                    F.col("_gx").cast("long").alias("gx_num"),
-                    F.col("_gy").cast("long").alias("gy_num")))
+                    F.round(F.col("_gx")).cast("long").alias("gx_num"),
+                    F.round(F.col("_gy")).cast("long").alias("gy_num")))
 
 
 def horn_gradient_sql(source: str = "cells", row_expr: str = "row",
                       col_expr: str = "col",
                       val_expr: str = "value") -> str:
     """DuckDB rendering of :func:`horn_gradient` (same scatter
-    weights, same completeness rule)."""
+    weights, same completeness rule, same half-away-from-zero rounding
+    — a bare ``CAST(double AS BIGINT)`` would round half to even)."""
     offs = ", ".join(
         f"{{'dr': {dr}, 'dc': {dc}, 'wx': {(-dc) * (2 - abs(dr))}, "
         f"'wy': {(-dr) * (2 - abs(dc))}}}"
@@ -494,8 +496,8 @@ scat AS (
 agg AS (
   SELECT row, col, count(*) AS n, sum(gx) AS gx, sum(gy) AS gy
   FROM scat GROUP BY row, col)
-SELECT agg.row, agg.col, CAST(gx AS BIGINT) AS gx_num,
-       CAST(gy AS BIGINT) AS gy_num
+SELECT agg.row, agg.col, CAST(round(gx) AS BIGINT) AS gx_num,
+       CAST(round(gy) AS BIGINT) AS gy_num
 FROM agg JOIN (SELECT DISTINCT r, c FROM src) s
   ON agg.row = s.r AND agg.col = s.c
 WHERE n = 8"""

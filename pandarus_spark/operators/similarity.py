@@ -1,16 +1,33 @@
 """Embedding similarity search (graft addition for training-data
-pipelines): brute-force cosine top-k as the exactness baseline, and an
-LSH-bucketed approximate variant as the 100 TB scale path.
+pipelines): brute-force cosine top-k as the exactness baseline, and the
+approximate candidate generators that are the 100 TB scale path —
+multi-table SRP-LSH (:func:`ann_lsh_topk`), IVF (:func:`ivf_topk`) and
+the int8-code prescreen (:func:`ann_quantized_topk`) — plus embedding
+near-dup pairs and SemDeDup.
 
-The embedding column is ``array<float>``; all arithmetic is cast to
-double and stays JVM-side (``zip_with`` + ``aggregate`` — no Python).
+Every top-k ends in the same exact-cosine scorer (:func:`_exact_cos`)
+and the same per-query window (:func:`_top_per_query`).  The embedding
+column is ``array<float>``; all arithmetic is cast to double and stays
+JVM-side (``zip_with`` + ``aggregate`` — no Python), except where a
+plane matrix or codebook outgrows its plan-literal cap and ships as one
+broadcast matrix to an Arrow matmul UDF (:func:`_matmul_udfs`).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+# Plan-literal caps, checked on the driver when the plan is built.  Up to
+# the cap the projection/codebook is pure-Catalyst literals (zero
+# Python); past it, per-coefficient literals bloat the plan and stop
+# constant-folding, so the matrix ships as one broadcast to an Arrow
+# matmul UDF instead.  Each path wins on some input size.
+_SRP_LITERAL_MAX = 4096     # SRP plane coefficients: n_tables*n_planes*dim
+_CENTROID_LITERAL_MAX = 64  # codebook size, IVF and SemDeDup
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -59,6 +76,66 @@ def _empty_topk(embeddings: DataFrame, queries: DataFrame,
         StructField("rank", IntegerType())]))
 
 
+def _corpus(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(neighbor_id, v, nv): the corpus side of every top-k."""
+    return embeddings.select(F.col(id_col).alias("neighbor_id"),
+                             _as_double(F.col(vec_col)).alias("v")) \
+        .withColumn("nv", norm(F.col("v")))
+
+
+def _queries(queries: DataFrame, qid_col: str, qvec_col: str) -> DataFrame:
+    """(query_id, qv, nq): the query side of every top-k."""
+    return queries.select(F.col(qid_col).alias("query_id"),
+                          _as_double(F.col(qvec_col)).alias("qv")) \
+        .withColumn("nq", norm(F.col("qv")))
+
+
+def _exact_cos(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos) over candidate pairs carrying
+    (qv, nq, v, nv): the 6-digit exact cosine every top-k ranks by."""
+    return pairs.select("query_id", "neighbor_id",
+                        F.round(_cos_prenorm(F.col("qv"), F.col("v"),
+                                             F.col("nq"), F.col("nv")), 6)
+                         .alias("cos"))
+
+
+def _top_per_query(scored: DataFrame, order_col: str, n: int) -> DataFrame:
+    """The ``n`` best rows per query by (``order_col`` desc, neighbor_id
+    asc) as (query_id, neighbor_id, order_col, rank) — ``rank`` is the
+    ``row_number`` (an int), so ties never widen the cut."""
+    w = Window.partitionBy("query_id").orderBy(F.col(order_col).desc(),
+                                               F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= n)
+            .select("query_id", "neighbor_id", order_col, "rank"))
+
+
+def _matmul_udfs(spark, M: np.ndarray,
+                 *reduces: tuple[str, Callable[[np.ndarray], object]]) -> list:
+    """Arrow-batched matmuls against ONE broadcast of the ``(m, dim)``
+    float64 matrix ``M`` (SRP planes or a codebook) — the big-matrix
+    path of every literal/UDF split here: one broadcast per job, one
+    BLAS matmul per Arrow batch, plan size O(1) in ``m * dim``.
+
+    Returns one pandas UDF per ``(return_type, reduce)`` pair; each
+    stacks the batch's vectors into ``X`` (an empty batch is a
+    ``(0, dim)`` block) and returns ``reduce(X @ M.T)`` — the caller's
+    row-wise reduce (sign bits, argmax, top-nprobe) of the ``(n, m)``
+    score block, which must accept ``n == 0``."""
+    bc = spark.sparkContext.broadcast(np.ascontiguousarray(M, dtype=np.float64))
+
+    def make(return_type: str, reduce):
+        @F.pandas_udf(return_type)
+        def matmul_udf(v: pd.Series) -> pd.Series:
+            m = bc.value
+            X = (np.stack([np.asarray(x, dtype=np.float64) for x in v])
+                 if len(v) else np.empty((0, m.shape[1])))
+            return pd.Series(reduce(X @ m.T))
+        return matmul_udf
+
+    return [make(t, r) for t, r in reduces]
+
+
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 qid_col: str = "query_id", qvec_col: str = "qvec",
@@ -68,22 +145,12 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
 
     Output: (query_id, neighbor_id, cos, rank). At 100 TB this is the
     verification baseline; :func:`ann_lsh_topk` is the scale path."""
-    e = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("nv", norm(F.col("v")))
-    q = F.broadcast(queries.select(F.col(qid_col).alias("query_id"),
-                                   _as_double(F.col(qvec_col)).alias("qv"))
-                    .withColumn("nq", norm(F.col("qv"))))
-    scored = e.crossJoin(q).select(
-        "query_id", "neighbor_id",
-        F.round(_cos_prenorm(F.col("qv"), F.col("v"),
-                             F.col("nq"), F.col("nv")), 6).alias("cos"))
+    e = _corpus(embeddings, id_col, vec_col)
+    q = F.broadcast(_queries(queries, qid_col, qvec_col))
+    scored = _exact_cos(e.crossJoin(q))
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
+    return _top_per_query(scored, "cos", k)
 
 
 def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
@@ -110,8 +177,8 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
 def cosine_neardup_bucketed(embeddings: DataFrame, threshold: float = 0.9,
                             n_tables: int = 8, n_planes: int = 8, seed: int = 7,
                             dim: int | None = None,
-                            id_col: str = "vec_id", vec_col: str = "embedding",
-                            literal_max: int = 4096) -> DataFrame:
+                            id_col: str = "vec_id",
+                            vec_col: str = "embedding") -> DataFrame:
     """First-class BUCKETED embedding near-dup pairs — the scale path
     :func:`cosine_neardup_pairs`'s docstring promises (round-1 verdict
     item #4 made it a named operator).
@@ -121,12 +188,9 @@ def cosine_neardup_bucketed(embeddings: DataFrame, threshold: float = 0.9,
     ``seed..seed+n_tables-1``); candidate pairs collide in at least one
     table.  The plan is scale-shaped end-to-end:
 
-    * candidate generation joins on the (table, bucket) key — a hash
-      join whose fan-in is bucket-sized, never the |E|² theta join;
-    * only ids ride the bucket shuffle (vectors join back per side
-      after pair-dedup, mirroring the overlay's geometry join-back);
-    * pair dedup across tables is an aggregation on (id_a, id_b), not
-      a distinct over vector payloads;
+    * candidate generation is :func:`_bucket_pairs` — an ids-only
+      (table, bucket) hash join whose fan-in is bucket-sized, never the
+      |E|² theta join, deduped on (id_a, id_b);
     * the exact cosine verify runs once per surviving pair.
 
     Recall: P[miss] = (1 - (1 - θ/π)^n_planes)^n_tables per pair.  For
@@ -147,14 +211,10 @@ def cosine_neardup_bucketed(embeddings: DataFrame, threshold: float = 0.9,
     # localCheckpoint: the hashed table feeds both self-join sides —
     # without it each side recomputes every table's n_planes dot
     # products (same hygiene as dedup.py's shared LSH subtrees).
-    hashed = _lsh_hashed(e, dim, n_tables, n_planes, seed, literal_max) \
+    hashed = _lsh_hashed(e, dim, n_tables, n_planes, seed) \
         .localCheckpoint(eager=True)
-    a = hashed.select(F.col("id").alias("id_a"), "t", "bucket")
-    b = hashed.select(F.col("id").alias("id_b"), "t", "bucket")
-    cand = (a.join(b, ["t", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .groupBy("id_a", "id_b").agg(F.lit(1).alias("_one")).drop("_one"))
+    cand = _bucket_pairs(hashed, hashed, "id_a", "id_b",
+                         F.col("id_a") < F.col("id_b"))
     va = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                   norm(F.col("v")).alias("na"))
     vb = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
@@ -184,60 +244,56 @@ def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
 
 
 def _lsh_hashed(e: DataFrame, dim: int, n_tables: int, n_planes: int,
-                seed: int, literal_max: int) -> DataFrame:
+                seed: int) -> DataFrame:
     """(id, t, bucket) signature table for multi-table SRP-LSH — one
     pass over the vectors computing all table signatures at once, then
     posexplode so the candidate join key is a single (t, bucket) pair.
     ``e`` must have columns (id, v: array<double>).
 
     Path choice mirrors :func:`ivf_topk`: at ``n_tables * n_planes *
-    dim <= literal_max`` the buckets are pure-Catalyst literal
-    expressions (zero Python); above it the planes ship as ONE
-    broadcast float64 matrix consumed by an Arrow matmul UDF, keeping
-    the plan O(1) in plane count (round-2 verdict #1)."""
-    if n_tables * n_planes * dim <= literal_max:
+    dim <= _SRP_LITERAL_MAX`` the buckets are pure-Catalyst literal
+    expressions (zero Python); above it (round-2 verdict #1: realistic
+    dims of 768-4096 at 8x8 tables/planes bake 50k-500k constants into
+    one projection) the ``(n_tables*n_planes, dim)`` planes ship to
+    :func:`_matmul_udfs`, keeping the plan O(1) in plane count.
+
+    Bit semantics are the same on both paths: bit i of table t is set
+    iff vec · planes[t*n_planes + i] > 0 (strict), so both assign
+    identical buckets up to float summation order at the sign boundary
+    (measure-zero for random planes; parity pinned by
+    ``test_lsh_udf_and_literal_paths_agree``)."""
+    if n_tables * n_planes * dim <= _SRP_LITERAL_MAX:
         tables = [lsh_bucket(F.col("v"), random_hyperplanes(dim, n_planes, seed + t))
                   for t in range(n_tables)]
         sig = F.array(*tables)
     else:
         planes = np.vstack([random_hyperplanes(dim, n_planes, seed + t)
                             for t in range(n_tables)])
-        sig = _lsh_buckets_udf(e.sparkSession, planes,
-                               n_tables, n_planes)(F.col("v"))
+        weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+        def to_buckets(S: np.ndarray) -> list:
+            bits = (S > 0).astype(np.int64).reshape(len(S), n_tables, n_planes)
+            return (bits @ weights).tolist()  # (n, n_tables) bucket ids
+
+        (buckets_udf,) = _matmul_udfs(e.sparkSession, planes,
+                                      ("array<long>", to_buckets))
+        sig = buckets_udf(F.col("v"))
     return e.select("id", F.posexplode(sig).alias("t", "bucket"))
 
 
-def _lsh_buckets_udf(spark, planes: np.ndarray, n_tables: int, n_planes: int):
-    """Arrow-batched SRP bucketing against a BROADCAST plane matrix —
-    the big-dimension path (round-2 verdict #1: at realistic embedding
-    dims (768-4096) and 8x8 tables/planes, :func:`lsh_bucket`'s
-    per-coefficient literals bake 50k-500k constants into one
-    projection — the same plan/codegen explosion the IVF codebook hit
-    at >64 centroids, fixed the same way: one broadcast of the
-    ``(n_tables*n_planes, dim)`` float64 matrix per job, one BLAS
-    matmul per Arrow batch).
-
-    Bit semantics mirror the literal path exactly: bit i of table t is
-    set iff vec · planes[t*n_planes + i] > 0 (strict), so both paths
-    assign identical buckets up to float summation order at the sign
-    boundary (measure-zero for random planes; parity pinned by
-    ``test_lsh_udf_and_literal_paths_agree``).  Returns an
-    ``array<long>`` of ``n_tables`` bucket ids per row."""
-    P = np.ascontiguousarray(planes, dtype=np.float64).T  # (dim, T*P)
-    bc = spark.sparkContext.broadcast(P)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    @F.pandas_udf("array<long>")
-    def buckets_udf(v: pd.Series) -> pd.Series:
-        M = bc.value
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        bits = (X @ M > 0).astype(np.int64).reshape(len(X), n_tables, n_planes)
-        B = bits @ weights  # (n, n_tables)
-        return pd.Series(list(B.tolist()))
-
-    return buckets_udf
+def _bucket_pairs(ha: DataFrame, hb: DataFrame, a_id: str, b_id: str,
+                  keep: Column | None = None) -> DataFrame:
+    """Distinct (a_id, b_id) candidate pairs colliding in at least one
+    SRP table of two :func:`_lsh_hashed` tables.  Only ids ride the
+    (t, bucket) hash join — vectors join back per side after the dedup,
+    mirroring the overlay's geometry join-back — and the cross-table
+    dedup is an aggregation on the id pair, never a distinct over
+    vector payloads.  ``keep`` filters pairs before the dedup."""
+    cand = ha.select(F.col("id").alias(a_id), "t", "bucket") \
+        .join(hb.select(F.col("id").alias(b_id), "t", "bucket"), ["t", "bucket"])
+    if keep is not None:
+        cand = cand.filter(keep)
+    return cand.select(a_id, b_id).distinct()
 
 
 def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = 16,
@@ -278,53 +334,12 @@ def _centroid_sims(vec_col: Column, centroids: np.ndarray) -> Column:
         for c in centroids])
 
 
-def _ivf_assign_udfs(spark, centroids: np.ndarray, nprobe: int):
-    """Arrow-batched assignment/probing against a BROADCAST codebook —
-    the big-codebook path (round-1 verdict #6: at 4k-64k centroids the
-    per-centroid literal expressions explode the plan; Faiss-style
-    practice is a matmul against the codebook).  One broadcast of the
-    (C, dim) float64 array per job; each Arrow batch does a single BLAS
-    matmul.  Tie-breaks mirror the literal path: assignment prefers the
-    LARGER centroid index on exact similarity ties; probes are the
-    nprobe best by (similarity, index) descending."""
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids, dtype=np.float64))
-
-    def _stack(v: pd.Series) -> np.ndarray:
-        if len(v) == 0:
-            return np.empty((0, bc.value.shape[1]))
-        return np.stack([np.asarray(x, dtype=np.float64) for x in v])
-
-    @F.pandas_udf("int")
-    def assign_udf(v: pd.Series) -> pd.Series:
-        C = bc.value
-        X = _stack(v)
-        if not len(X):
-            return pd.Series([], dtype="int32")
-        S = X @ C.T  # row norm does not change the per-row argmax
-        j = (C.shape[0] - 1) - np.argmax(S[:, ::-1], axis=1)
-        return pd.Series(j.astype("int32"))
-
-    @F.pandas_udf("array<int>")
-    def probes_udf(qv: pd.Series) -> pd.Series:
-        C = bc.value
-        X = _stack(qv)
-        if not len(X):
-            return pd.Series([], dtype="object")
-        S = X @ C.T
-        idx = np.arange(C.shape[0])
-        out = [np.lexsort((idx, srow))[::-1][:nprobe].astype("int32").tolist()
-               for srow in S]
-        return pd.Series(out)
-
-    return assign_udf, probes_udf
-
-
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
              n_centroids: int = 8, nprobe: int = 2, iters: int = 10,
              centroids: np.ndarray | None = None,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "query_id", qvec_col: str = "qvec",
-             exclude_self: bool = True, literal_max: int = 64) -> DataFrame:
+             exclude_self: bool = True) -> DataFrame:
     """IVF approximate top-k: assign every embedding to its nearest
     codebook centroid (the inverted file), probe the ``nprobe`` most
     similar centroids per query, exact cosine within the probed
@@ -334,9 +349,13 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
     EXACTLY brute-force top-k (the driver-gate configuration); smaller
     nprobe trades recall for a 1/(C/nprobe) candidate-set cut, which at
     100 TB turns the |E|×|Q| cross join into a bucket-key shuffle join
-    scanning only nprobe/C of the corpus per query.  Assignment and
-    probing are Catalyst expressions over centroid literals (no Python
-    in the per-row path); training cost is one bounded sample scan."""
+    scanning only nprobe/C of the corpus per query.  Up to
+    ``_CENTROID_LITERAL_MAX`` centroids, assignment and probing are
+    Catalyst expressions over centroid literals (no Python in the
+    per-row path); bigger codebooks (round-1 verdict #6: 4k-64k
+    centroids explode a literal plan) go through :func:`_matmul_udfs`
+    with the same tie-breaks.  Training cost is one bounded sample
+    scan."""
     if centroids is None:
         centroids = train_ivf_centroids(embeddings, n_centroids, iters,
                                         id_col=id_col, vec_col=vec_col)
@@ -347,13 +366,9 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
         return _empty_topk(embeddings, queries, id_col, qid_col)
     nprobe = min(nprobe, n_centroids)
 
-    e = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("nv", norm(F.col("v")))
-    q = queries.select(F.col(qid_col).alias("query_id"),
-                       _as_double(F.col(qvec_col)).alias("qv")) \
-        .withColumn("nq", norm(F.col("qv")))
-    if n_centroids <= literal_max:
+    e = _corpus(embeddings, id_col, vec_col)
+    q = _queries(queries, qid_col, qvec_col)
+    if n_centroids <= _CENTROID_LITERAL_MAX:
         # small codebook: pure-Catalyst centroid literals, zero Python
         sims = _centroid_sims(F.col("v"), centroids)
         # argmax via zip(sim, index): array_max of structs compares sim
@@ -367,42 +382,53 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
                              lambda s: s.getField("i"))
         q = q.withColumn("bucket", F.explode(probes))
     else:
-        # big codebook: broadcast ndarray + Arrow matmul — plan size is
-        # O(1) in n_centroids; scoring below stays Catalyst either way
-        assign_udf, probes_udf = _ivf_assign_udfs(embeddings.sparkSession,
-                                                  centroids, nprobe)
+        # big codebook: the row norm never changes a per-row argmax, so
+        # raw dot products stand in for the literal path's cosines
+        last = n_centroids - 1
+
+        def nearest(S: np.ndarray) -> np.ndarray:
+            # argmax over the reversed row = ties to the LARGER index
+            return (last - np.argmax(S[:, ::-1], axis=1)).astype("int32")
+
+        def top_probes(S: np.ndarray) -> list:
+            # nprobe best by (similarity, index) descending
+            idx = np.arange(n_centroids)
+            return [np.lexsort((idx, s))[::-1][:nprobe].astype("int32").tolist()
+                    for s in S]
+
+        assign_udf, probes_udf = _matmul_udfs(
+            embeddings.sparkSession, centroids,
+            ("int", nearest), ("array<int>", top_probes))
         e = e.withColumn("bucket", assign_udf(F.col("v")))
         q = q.withColumn("bucket", F.explode(probes_udf(F.col("qv"))))
 
-    scored = (e.join(q, "bucket")
-              .select("query_id", "neighbor_id",
-                      F.round(_cos_prenorm(F.col("qv"), F.col("v"),
-                                           F.col("nq"), F.col("nv")), 6).alias("cos")))
+    scored = _exact_cos(e.join(q, "bucket"))
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
+    return _top_per_query(scored, "cos", k)
 
 
-def ann_lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
-                            k: int = 3, n_tables: int = 16, n_planes: int = 4,
-                            seed: int = 7, dim: int | None = None,
-                            id_col: str = "vec_id", vec_col: str = "embedding",
-                            qid_col: str = "query_id", qvec_col: str = "qvec",
-                            exclude_self: bool = True,
-                            literal_max: int = 4096) -> DataFrame:
-    """Multi-probe ANN top-k — :func:`ann_lsh_topk` with ``n_tables``
-    independent SRP tables (seeds ``seed..seed+n_tables-1``) and the
-    candidate union across tables, which is how SRP-LSH actually
+def ann_lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
+                 n_tables: int = 16, n_planes: int = 4, seed: int = 7,
+                 dim: int | None = None,
+                 id_col: str = "vec_id", vec_col: str = "embedding",
+                 qid_col: str = "query_id", qvec_col: str = "qvec",
+                 exclude_self: bool = True) -> DataFrame:
+    """SRP-LSH approximate top-k: hash both sides into ``n_tables``
+    independent signed-random-projection tables (``n_planes`` bits
+    each, seeds ``seed..seed+n_tables-1``), take the candidate union
+    across tables, exact cosine once per surviving candidate, then the
+    per-query window top-k.
+
+    Recall < 1 by construction; the union over tables is how SRP-LSH
     reaches high recall (per-pair miss probability decays as
-    ``(1 - (1-θ/π)^planes)^tables``).  Candidate generation is the same
-    ids-only (t, bucket) hash join as :func:`cosine_neardup_bucketed`;
-    pair dedup is an aggregation on (query, neighbor); the exact cosine
-    runs once per surviving candidate, then the per-query window top-k.
-    Plan stays O(1) in dim×tables×planes through the same
-    literal/broadcast-matmul split as every SRP path here."""
+    ``(1 - (1-θ/π)^planes)^tables``) — the defaults are the
+    high-recall configuration (16 tables x 4 planes, measured recall
+    1.0 on the testdata corpus), ``n_tables=1`` is a single bucket
+    join.  At scale the ids-only (t, bucket) hash join of
+    :func:`_bucket_pairs` replaces the |E|×|Q| cross join, and the plan
+    stays O(1) in dim×tables×planes through :func:`_lsh_hashed`'s
+    literal/broadcast-matmul split."""
     if dim is None:
         # dim probe costs one extra one-row Spark job per call — pass
         # dim explicitly in hot loops to skip it (r4 advice)
@@ -410,42 +436,32 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
         if head is None or head[0] is None:
             return _empty_topk(embeddings, queries, id_col, qid_col)
         dim = len(head[0])
-    e = embeddings.select(F.col(id_col).alias("id"),
-                          _as_double(F.col(vec_col)).alias("v"))
-    q = queries.select(F.col(qid_col).alias("id"),
-                       _as_double(F.col(qvec_col)).alias("v"))
-    he = _lsh_hashed(e, dim, n_tables, n_planes, seed, literal_max) \
-        .withColumnRenamed("id", "neighbor_id")
-    hq = _lsh_hashed(q, dim, n_tables, n_planes, seed, literal_max) \
-        .withColumnRenamed("id", "query_id")
-    cand = (hq.join(he, ["t", "bucket"])
-            .select("query_id", "neighbor_id")
-            .groupBy("query_id", "neighbor_id").agg(F.lit(1).alias("_one"))
-            .drop("_one"))
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    ev = e.select(F.col("id").alias("neighbor_id"), F.col("v"),
-                  norm(F.col("v")).alias("nv"))
-    qv = q.select(F.col("id").alias("query_id"), F.col("v").alias("qv"),
-                  norm(F.col("v")).alias("nq"))
-    scored = (cand.join(ev, "neighbor_id").join(qv, "query_id")
-              .select("query_id", "neighbor_id",
-                      F.round(_cos_prenorm(F.col("qv"), F.col("v"),
-                                           F.col("nq"), F.col("nv")), 6).alias("cos")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
+    e = _corpus(embeddings, id_col, vec_col)
+    q = _queries(queries, qid_col, qvec_col)
+    he = _lsh_hashed(e.select(F.col("neighbor_id").alias("id"), "v"),
+                     dim, n_tables, n_planes, seed)
+    hq = _lsh_hashed(q.select(F.col("query_id").alias("id"), F.col("qv").alias("v")),
+                     dim, n_tables, n_planes, seed)
+    keep = F.col("query_id") != F.col("neighbor_id") if exclude_self else None
+    cand = _bucket_pairs(hq, he, "query_id", "neighbor_id", keep)
+    scored = _exact_cos(cand.join(e, "neighbor_id").join(q, "query_id"))
+    return _top_per_query(scored, "cos", k)
 
 
-def ann_multiprobe_sql(k: int = 3, n_tables: int = 16, n_planes: int = 4,
-                       seed: int = 7, dim: int = 64,
-                       query_where: str = "vec_id < 5",
-                       source: str = "embeddings") -> str:
-    """DuckDB lockstep oracle for :func:`ann_lsh_multiprobe_topk`
-    (literal-plane path): per-table bucket ids from the same seeded
-    plane literals, candidates where ANY table's buckets collide, then
-    the identical exact-cosine window top-k."""
+def ann_lsh_sql(k: int = 3, n_tables: int = 16, n_planes: int = 4,
+                seed: int = 7, dim: int = 64,
+                query_where: str = "vec_id < 5",
+                source: str = "embeddings") -> str:
+    """DuckDB lockstep oracle for :func:`ann_lsh_topk` (literal-plane
+    path): per-table bucket ids from the SAME seeded hyperplanes as
+    repr'd double literals with the same strict ``dot > 0`` sign bits,
+    candidates where ANY table's buckets collide, then the identical
+    exact cosine + (cos desc, neighbor_id) window top-k.  The dot
+    product is ``list_dot_product``, which sums in array order exactly
+    like the engine's sequential ``aggregate`` fold (the brute-force
+    cosine gates have pinned that equivalence since round 1), so bucket
+    bits can only diverge if an engine re-associates IEEE addition —
+    none does (value-exact since VERDICT.md r3 next-round item #5)."""
     cols = []
     for t in range(n_tables):
         planes = random_hyperplanes(dim, n_planes, seed + t)
@@ -469,82 +485,6 @@ r AS (SELECT query_id, neighbor_id, cos,
              row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
       FROM scored)
 SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank FROM r WHERE rank <= {k}"""
-
-
-def ann_lsh_sql(k: int = 3, n_planes: int = 8, seed: int = 7, dim: int = 64,
-                query_where: str = "vec_id < 5",
-                source: str = "embeddings") -> str:
-    """DuckDB lockstep oracle for :func:`ann_lsh_topk` (literal-plane
-    path): the SAME seeded hyperplanes as repr'd double literals, the
-    same strict ``dot > 0`` sign bits, the same bucket join + exact
-    cosine + (cos desc, neighbor_id) window top-k.  The dot product is
-    ``list_dot_product``, which sums in array order exactly like the
-    engine's sequential ``aggregate`` fold (the brute-force cosine
-    gates have pinned that equivalence since round 1), so bucket bits
-    can only diverge if an engine re-associates IEEE addition — none
-    does.  Upgrades the round-3 rows-only gate to value-exact
-    (VERDICT.md r3 next-round item #5)."""
-    planes = random_hyperplanes(dim, n_planes, seed)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, [{', '.join(repr(float(x)) for x in p)}]) > 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes))
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {source}),
-b AS (SELECT vec_id, v, {bucket} AS bucket FROM e),
-q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE {query_where}),
-scored AS (
-  SELECT query_id, b.vec_id AS neighbor_id,
-         round(list_dot_product(qv, b.v)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-  FROM q JOIN b ON q.bucket = b.bucket AND b.vec_id != q.query_id),
-r AS (SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cos, CAST(rank AS INT) AS rank FROM r WHERE rank <= {k}"""
-
-
-def ann_lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
-                 n_planes: int = 8, seed: int = 7, dim: int | None = None,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 qid_col: str = "query_id", qvec_col: str = "qvec",
-                 literal_max: int = 4096) -> DataFrame:
-    """Approximate top-k: hash both sides into signed-random-projection
-    buckets, join on bucket id, exact cosine within the bucket.
-
-    Recall < 1 by construction (multi-probe = run with several seeds and
-    union). At scale the bucket join replaces the cross join — shuffle
-    on a 2^n_planes-ary key instead of |E|×|Q| pairs."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    planes = random_hyperplanes(dim, n_planes, seed)
-    if n_planes * dim <= literal_max:
-        def bucket_of(col: Column) -> Column:
-            return lsh_bucket(col, planes)
-    else:
-        # realistic dims: broadcast plane matrix + Arrow matmul instead
-        # of n_planes*dim plan literals (same fix as the IVF codebook)
-        budf = _lsh_buckets_udf(embeddings.sparkSession,
-                                np.asarray(planes), 1, n_planes)
-
-        def bucket_of(col: Column) -> Column:
-            return budf(col).getItem(0)
-    e = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("v"))
-    e = e.withColumn("bucket", bucket_of(F.col("v"))) \
-        .withColumn("nv", norm(F.col("v")))
-    q = queries.select(F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("qv"))
-    q = q.withColumn("bucket", bucket_of(F.col("qv"))) \
-        .withColumn("nq", norm(F.col("qv")))
-    scored = (e.join(q, "bucket")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.round(_cos_prenorm(F.col("qv"), F.col("v"),
-                                           F.col("nq"), F.col("nv")), 6).alias("cos")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -645,16 +585,13 @@ def ann_quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
     sequential dot-product folds, one sqrt), so the full pipeline —
     prescreen ordering included — reproduces bit-for-bit in SQL.
     """
-    e = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(F.col(vec_col)).alias("v"))
+    e = _corpus(embeddings, id_col, vec_col)
     codes = e.select("neighbor_id",
                      _int8_codes(F.col("v")).alias("c")) \
              .withColumn("nc", F.sqrt(F.aggregate(
                  F.transform(F.col("c"), lambda x: (x * x).cast("double")),
                  F.lit(0.0), lambda a, x: a + x)))
-    q = queries.select(F.col(qid_col).alias("query_id"),
-                       _as_double(F.col(qvec_col)).alias("qv")) \
-        .withColumn("nq", norm(F.col("qv")))
+    q = _queries(queries, qid_col, qvec_col)
 
     qdot = F.aggregate(F.zip_with(F.col("qv"), F.col("c"),
                                   lambda x, c: x * c.cast("double")),
@@ -664,25 +601,10 @@ def ann_quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3,
         "query_id", "neighbor_id", approx.alias("approx"))
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("approx").desc(),
-                                               F.col("neighbor_id"))
-    survivors = (scored.withColumn("arank", F.row_number().over(w))
-                 .filter(F.col("arank") <= refine_m)
-                 .select("query_id", "neighbor_id"))
-
-    ev = e.withColumn("nv", norm(F.col("v")))
-    exact = (survivors.join(ev, "neighbor_id")
-             .join(q.select("query_id", "qv", "nq"), "query_id")
-             .select("query_id", "neighbor_id",
-                     F.round(_cos_prenorm(F.col("qv"), F.col("v"),
-                                          F.col("nq"), F.col("nv")), 6)
-                      .alias("cos")))
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                                F.col("neighbor_id"))
-    return (exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos",
-                    F.col("rank").cast("int").alias("rank")))
+    survivors = _top_per_query(scored, "approx", refine_m) \
+        .select("query_id", "neighbor_id")
+    exact = _exact_cos(survivors.join(e, "neighbor_id").join(q, "query_id"))
+    return _top_per_query(exact, "cos", k)
 
 
 def ann_quantized_sql(k: int = 3, refine_m: int = 32,
@@ -742,8 +664,7 @@ WHERE rank <= {k}"""
 def semantic_dedup(embeddings: DataFrame, n_clusters: int = 8,
                    threshold: float = 0.9, id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   centroids: DataFrame | None = None,
-                   assign_strategy: str = "auto") -> DataFrame:
+                   centroids: DataFrame | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space, then
     mark near-duplicates WITHIN each cluster — semantic dedup at a cost
     of within-cluster pairs instead of all-pairs (graft addition; no
@@ -766,15 +687,15 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int = 8,
     bounded by definition, so collecting it is the same contract as
     training it, and assignment costs ZERO joins and ZERO shuffles —
     an earlier crossJoin+max_by draft materialized N x |C| rows
-    carrying two vectors each.  Past ~64 centroids the literal plan
-    degrades (per-centroid literal-array folds stop constant-folding —
-    the IVF round-1 finding), so ``assign_strategy="auto"`` switches
-    to an Arrow-batched matmul against the broadcast codebook: one
-    BLAS call per batch, argmax ties to the smallest centroid id like
-    the literal path, but numpy summation order is not bit-pinned —
-    which is why the value gates stay at literal scale (pass
-    ``assign_strategy="literal"`` to force it).  The within-cluster pass
-    shuffles ids+vectors once on the cluster key; cluster count grows
+    carrying two vectors each.  Past ``_CENTROID_LITERAL_MAX``
+    centroids the literal plan degrades (per-centroid literal-array
+    folds stop constant-folding — the IVF round-1 finding), so
+    assignment switches to :func:`_matmul_udfs` against the broadcast
+    codebook: one BLAS call per batch, argmax ties to the smallest
+    centroid id like the literal path, but numpy summation order is not
+    bit-pinned — which is why the value gates stay at literal scale.
+    The within-cluster pass shuffles ids+vectors once on the cluster
+    key; cluster count grows
     with N (SemDeDup uses sqrt-ish k), so bucket sizes stay bounded —
     the same never-all-pairs contract as the LSH/SRP dedup family.
     Cosines are the fold-ordered ``dot`` everywhere — the exact
@@ -800,30 +721,15 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int = 8,
             StructField("is_dup", BooleanType()),
             StructField("dup_of", id_type)]))
     cid_arr = F.array(*[F.lit(r.cid) for r in cent_rows])
-    if assign_strategy not in ("auto", "literal", "udf"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
-    use_udf = (assign_strategy == "udf"
-               or (assign_strategy == "auto" and len(cent_rows) > 64))
-    if use_udf:
-        import numpy as np
-        import pandas as pd
+    if len(cent_rows) > _CENTROID_LITERAL_MAX:
         C = np.array([r.cv for r in cent_rows], dtype=np.float64)
         Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-24)
-        bc = embeddings.sparkSession.sparkContext.broadcast(
-            np.ascontiguousarray(Cn))
-
-        @F.pandas_udf("int")
-        def _assign_udf(v: pd.Series) -> pd.Series:
-            Cb = bc.value
-            if len(v) == 0:
-                return pd.Series([], dtype="int32")
-            X = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-            # row norm never changes a per-row argmax; np.argmax takes
-            # the FIRST max = smallest centroid id (ascending cid order)
-            j = np.argmax(X @ Cb.T, axis=1)
-            return pd.Series(j.astype("int32"))
-
-        idx1 = (_assign_udf(F.col("v")) + F.lit(1)).alias("_i")
+        # row norm never changes a per-row argmax; np.argmax takes the
+        # FIRST max = smallest centroid id (ascending cid order)
+        (assign_udf,) = _matmul_udfs(
+            embeddings.sparkSession, Cn,
+            ("int", lambda S: np.argmax(S, axis=1).astype("int32")))
+        idx1 = (assign_udf(F.col("v")) + F.lit(1)).alias("_i")
     else:
         # ascending cid order => the FIRST max in the sims array is the
         # smallest qualifying centroid id (the tie-break contract)

@@ -63,3 +63,23 @@ def test_row_count_and_schema_still_checked():
     t = _load_tool()
     assert t.compare(["a"], [(1,)], ["b"], [(1,)], exact=True)
     assert t.compare(["a"], [(1,)], ["a"], [(1,), (2,)], exact=True)
+
+
+def test_arrow_fetch_surfaces_hugeint_as_float():
+    """Oracle rows come through fetch_arrow_table() like the driver's:
+    a DuckDB HUGEINT sum arrives as decimal128 -> float, so an int64
+    Spark column against it is red (fetchall() would hand back an int
+    and hide the driver red, as it did for unigram_logprob_docs)."""
+    import duckdb
+    t = _load_tool()
+    con = duckdb.connect()
+    sql = "SELECT sum(x) AS n FROM range(4) t(x)"
+    assert con.execute(sql).fetchall() == [(6,)]
+    cols, rows = t.arrow_rows(con.execute(sql))
+    assert cols == ["n"]
+    assert t.compare(["n"], [(6,)], cols, rows, exact=True)
+    cols, rows = t.arrow_rows(con.execute(
+        "SELECT CAST(sum(x) AS BIGINT) AS n FROM range(4) t(x)"))
+    assert not t.compare(["n"], [(6,)], cols, rows, exact=True)
+    assert t.arrow_rows(con.execute(
+        "SELECT 1 AS a, 'x' AS b WHERE false")) == (["a", "b"], [])

@@ -118,6 +118,17 @@ def test_ivf_empty_embeddings(spark):
     assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
 
 
+def test_ann_lsh_empty_embeddings(spark):
+    # dim=None probes the corpus for its dimension: an empty corpus must
+    # give the empty-but-well-typed result, not a NoneType subscript
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, qvec array<float>")
+    for n_tables in (1, 16):
+        out = S.ann_lsh_topk(emb, q, k=3, n_tables=n_tables)
+        assert out.count() == 0
+        assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
+
+
 def test_ivf_zero_norm_vector_still_retrievable(spark):
     emb = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],

@@ -145,7 +145,7 @@ def test_ann_lsh_self_retrieval(spark):
         [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(50)],
         "vec_id long, embedding array<float>")
     q = emb.limit(3).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    out = S.ann_lsh_topk(emb, q, k=3, n_planes=4)
+    out = S.ann_lsh_topk(emb, q, k=3, n_tables=1, n_planes=4)
     rows = out.collect()
     assert all(r["cos"] <= 1.0 + 1e-9 for r in rows)
     assert all(r["query_id"] != r["neighbor_id"] for r in rows)
@@ -168,8 +168,8 @@ def test_ann_multiprobe_recall_floor(spark):
     brute = {(r["query_id"], r["neighbor_id"])
              for r in S.cosine_topk(emb, q, k=3).collect()}
     ann = {(r["query_id"], r["neighbor_id"])
-           for r in S.ann_lsh_multiprobe_topk(emb, q, k=3, n_tables=16,
-                                              n_planes=4, dim=64).collect()}
+           for r in S.ann_lsh_topk(emb, q, k=3, n_tables=16,
+                                   n_planes=4, dim=64).collect()}
     assert len(brute) == 15
     assert len(ann & brute) / len(brute) >= 0.8
 
@@ -178,13 +178,13 @@ def test_ann_multiprobe_matches_duckdb_oracle(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    got = sorted(map(tuple, S.ann_lsh_multiprobe_topk(
+    got = sorted(map(tuple, S.ann_lsh_topk(
         emb, q, k=3, n_tables=16, n_planes=4, dim=64).collect()))
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "'/root/testdata/sf0.001/embeddings.parquet'")
     want = sorted(map(tuple, con.execute(
-        S.ann_multiprobe_sql(k=3, n_tables=16, n_planes=4, dim=64)).fetchall()))
+        S.ann_lsh_sql(k=3, n_tables=16, n_planes=4, dim=64)).fetchall()))
     assert got == want
 
 
@@ -252,21 +252,22 @@ def test_ivf_partial_probe_recall_on_clustered_data(spark):
         assert bcos[(r["query_id"], r["neighbor_id"])] == pytest.approx(r["cos"], abs=1e-6)
 
 
-def test_ivf_big_codebook_udf_path_full_probe(spark):
-    """n_centroids above literal_max takes the broadcast-codebook Arrow
-    path; at full probe it must still equal brute force exactly."""
+def test_ivf_big_codebook_udf_path_full_probe(spark, monkeypatch):
+    """n_centroids above _CENTROID_LITERAL_MAX takes the broadcast-codebook
+    Arrow path; at full probe it must still equal brute force exactly."""
+    monkeypatch.setattr(S, "_CENTROID_LITERAL_MAX", 64)
     rng = np.random.default_rng(13)
     emb = spark.createDataFrame(
         [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(300)],
         "vec_id long, embedding array<float>")
     q = emb.limit(3).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    ivf = sorted(map(tuple, S.ivf_topk(emb, q, k=3, n_centroids=96, nprobe=96,
-                                       literal_max=64).collect()))
+    ivf = sorted(map(tuple, S.ivf_topk(emb, q, k=3, n_centroids=96,
+                                       nprobe=96).collect()))
     brute = sorted(map(tuple, S.cosine_topk(emb, q, k=3).collect()))
     assert ivf == brute
 
 
-def test_ivf_udf_and_literal_paths_agree(spark):
+def test_ivf_udf_and_literal_paths_agree(spark, monkeypatch):
     """Same codebook, partial probe: the broadcast-UDF path must pick
     the same buckets/probes as the literal path (tie-break parity)."""
     rng = np.random.default_rng(17)
@@ -275,10 +276,12 @@ def test_ivf_udf_and_literal_paths_agree(spark):
         "vec_id long, embedding array<float>")
     q = emb.limit(5).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     cents = S.train_ivf_centroids(emb, n_centroids=8, iters=5)
-    lit = sorted(map(tuple, S.ivf_topk(emb, q, k=4, nprobe=2, centroids=cents,
-                                       literal_max=64).collect()))
-    udf = sorted(map(tuple, S.ivf_topk(emb, q, k=4, nprobe=2, centroids=cents,
-                                       literal_max=0).collect()))
+    monkeypatch.setattr(S, "_CENTROID_LITERAL_MAX", 64)
+    lit = sorted(map(tuple, S.ivf_topk(emb, q, k=4, nprobe=2,
+                                       centroids=cents).collect()))
+    monkeypatch.setattr(S, "_CENTROID_LITERAL_MAX", 0)
+    udf = sorted(map(tuple, S.ivf_topk(emb, q, k=4, nprobe=2,
+                                       centroids=cents).collect()))
     assert lit == udf
 
 
@@ -299,7 +302,7 @@ def test_cosine_neardup_bucketed_exhaustive_matches_bruteforce(spark):
     assert bucketed == brute and len(brute) >= 5
 
 
-def test_lsh_udf_and_literal_paths_agree(spark):
+def test_lsh_udf_and_literal_paths_agree(spark, monkeypatch):
     """Same planes, same data: the broadcast-matrix Arrow path must
     assign the same buckets as the literal path (sign-bit parity), so
     both near-dup pairs and ANN top-k are identical."""
@@ -310,21 +313,23 @@ def test_lsh_udf_and_literal_paths_agree(spark):
         v = base[i] + 0.05 * rng.standard_normal(16)
         rows.append((100 + i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    lit = sorted(map(tuple, S.cosine_neardup_bucketed(
-        emb, threshold=0.8, n_tables=6, n_planes=4, literal_max=10**9).collect()))
-    udf = sorted(map(tuple, S.cosine_neardup_bucketed(
-        emb, threshold=0.8, n_tables=6, n_planes=4, literal_max=0).collect()))
-    assert lit == udf and len(lit) >= 5
     q = emb.limit(3).select(F.col("vec_id").alias("query_id"),
                             F.col("embedding").alias("qvec"))
-    lit_k = sorted(map(tuple, S.ann_lsh_topk(emb, q, k=3, n_planes=4,
-                                             literal_max=10**9).collect()))
-    udf_k = sorted(map(tuple, S.ann_lsh_topk(emb, q, k=3, n_planes=4,
-                                             literal_max=0).collect()))
+    monkeypatch.setattr(S, "_SRP_LITERAL_MAX", 10**9)
+    lit = sorted(map(tuple, S.cosine_neardup_bucketed(
+        emb, threshold=0.8, n_tables=6, n_planes=4).collect()))
+    lit_k = sorted(map(tuple, S.ann_lsh_topk(emb, q, k=3, n_tables=1,
+                                             n_planes=4).collect()))
+    monkeypatch.setattr(S, "_SRP_LITERAL_MAX", 0)
+    udf = sorted(map(tuple, S.cosine_neardup_bucketed(
+        emb, threshold=0.8, n_tables=6, n_planes=4).collect()))
+    udf_k = sorted(map(tuple, S.ann_lsh_topk(emb, q, k=3, n_tables=1,
+                                             n_planes=4).collect()))
+    assert lit == udf and len(lit) >= 5
     assert lit_k == udf_k and len(lit_k) > 0
 
 
-def test_cosine_neardup_bucketed_udf_path_exhaustive(spark):
+def test_cosine_neardup_bucketed_udf_path_exhaustive(spark, monkeypatch):
     """Exhaustive config through the broadcast-planes path must still
     equal brute force exactly (the at-scale configuration of the
     driver-gate guarantee)."""
@@ -336,8 +341,9 @@ def test_cosine_neardup_bucketed_udf_path_exhaustive(spark):
         rows.append((100 + i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     brute = sorted(map(tuple, S.cosine_neardup_pairs(emb, threshold=0.8).collect()))
+    monkeypatch.setattr(S, "_SRP_LITERAL_MAX", 0)
     bucketed = sorted(map(tuple, S.cosine_neardup_bucketed(
-        emb, threshold=0.8, n_tables=24, n_planes=2, literal_max=0).collect()))
+        emb, threshold=0.8, n_tables=24, n_planes=2).collect()))
     assert bucketed == brute and len(brute) >= 4
 
 

@@ -227,6 +227,27 @@ def test_semdedup_explicit_centroids(spark):
     # 0 ties both centroids at cos=0.7071.. -> smallest centroid id (0)
     assert out[0] == 0 and out[1] == 0 and out[2] == 1
 
+
+def test_semdedup_big_codebook_udf_path_matches_literal(spark, monkeypatch):
+    """More than _CENTROID_LITERAL_MAX centroids assigns through the
+    broadcast-codebook matmul UDF; on random data (no near-ties) it
+    must give the same rows as the literal path."""
+    import numpy as np
+    rng = np.random.default_rng(19)
+    base = rng.standard_normal((300, 8))
+    # a few scaled/jittered copies so the within-cluster pass finds dups
+    vecs = np.vstack([base, 2.0 * base[:10],
+                      base[10:20] + 1e-3 * rng.standard_normal((10, 8))])
+    emb = _emb_df(spark, vecs)
+    udf = sorted(map(tuple, S.semantic_dedup(emb, n_clusters=80,
+                                             threshold=0.99).collect()))
+    monkeypatch.setattr(S, "_CENTROID_LITERAL_MAX", 80)
+    lit = sorted(map(tuple, S.semantic_dedup(emb, n_clusters=80,
+                                             threshold=0.99).collect()))
+    assert udf == lit and len(udf) == len(vecs)
+    assert sum(r[2] for r in udf) >= 20
+    assert len({r[1] for r in udf}) > 64
+
 # ---------------------------------------------------------------------------
 # bigram_logprob
 # ---------------------------------------------------------------------------
@@ -1834,6 +1855,45 @@ def test_horn_gradient_plane_and_parity(spark):
     g, h, i = Z[r+1, c-1], Z[r+1, c], Z[r+1, c+1]
     assert out2[(3, 4)] == (int((cc + 2*f + i) - (a + 2*d + g)),
                             int((g + 2*h + i) - (a + 2*b + cc)))
+
+
+def test_horn_gradient_half_valued_dem_rounds_half_away_in_both_engines(spark):
+    """Fractional numerators round half away from zero on both sides:
+    a truncating cast gives -3 for -3.5 and a half-to-even cast gives
+    2 for 2.5, so the two engines only agree when both round."""
+    import numpy as np
+    from pandarus_spark.operators.raster_stats import (horn_gradient,
+                                                       horn_gradient_sql)
+    Z = np.random.default_rng(7).integers(-20, 20, (9, 10)) / 2.0
+    rows = [(r, c, float(Z[r, c])) for r in range(9) for c in range(10)]
+    df = spark.createDataFrame(rows, "row long, col long, value double")
+    got = {(x.row, x.col): (x.gx_num, x.gy_num)
+           for x in horn_gradient(df).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE cells AS SELECT * FROM (VALUES " +
+                ", ".join(f"({r}, {c}, {v})" for r, c, v in rows) +
+                ") t(row, col, value)")
+    want = {(r, c): (gx, gy) for r, c, gx, gy in
+            con.execute(horn_gradient_sql()).fetchall()}
+    assert got == want and len(got) == 7 * 8
+
+    def half_away(x):
+        return int(np.sign(x) * np.floor(abs(x) + 0.5))
+
+    raw = []
+    for r in range(1, 8):
+        for c in range(1, 9):
+            a, b, cc = Z[r-1, c-1], Z[r-1, c], Z[r-1, c+1]
+            d, f = Z[r, c-1], Z[r, c+1]
+            g, h, i = Z[r+1, c-1], Z[r+1, c], Z[r+1, c+1]
+            gx = (cc + 2*f + i) - (a + 2*d + g)
+            gy = (g + 2*h + i) - (a + 2*b + cc)
+            raw += [gx, gy]
+            assert got[(r, c)] == (half_away(gx), half_away(gy))
+    # the DEM exercises both failure modes: negative and even-floor .5s
+    halves = [x for x in raw if x % 1 == 0.5]
+    assert any(x < 0 for x in halves)
+    assert any(x > 0 and int(x) % 2 == 0 for x in halves)
 
 
 # ---------------------------------------------------------------------------

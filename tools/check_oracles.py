@@ -5,6 +5,9 @@ column names, and order-insensitive values.
 DEFAULT comparison is EXACT STRINGIFIED equality, mirroring the
 driver's value-hash: the driver stringifies every cell and hashes, so
 a 1-ulp float difference (or int64 vs float64) is a real red there.
+Oracle rows are read the way the driver reads them too: through
+``fetch_arrow_table()``, so a HUGEINT sum arrives as decimal128 (and
+compares as a float), not as the Python int ``fetchall()`` would give.
 Round 3 proved the gap: this tool's old 1e-12-tolerance compare stayed
 green on `unigram_logprob_docs` while the driver hashed it red
 (VERDICT.md r3 "What's wrong" #3).  Use ``--tol`` to opt back into the
@@ -25,6 +28,14 @@ import duckdb  # noqa: E402
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
+
+
+def arrow_rows(cur):
+    """(column names, row tuples) of a DuckDB result, fetched through
+    Arrow like the driver (``fetch_arrow_table()``, then per-cell
+    Python values)."""
+    tbl = cur.fetch_arrow_table()
+    return tbl.column_names, list(zip(*(c.to_pylist() for c in tbl.columns)))
 
 
 def norm_rows(cols, rows):
@@ -118,9 +129,7 @@ def main():
                 failures.append((name, "rows-only query returned 0 rows"))
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
+            ocols, orows = arrow_rows(con.execute(oracles[name]))
         except Exception as ex:
             failures.append((name, f"ORACLE ERROR: {ex}"))
             print(f"[FAIL] {name}: oracle error {ex}")
