@@ -13,7 +13,7 @@ engine's Mollweide measures to ~1e-12 relative purely in SQL.
 from __future__ import annotations
 
 from ..geometry.projection import WGS84_A
-from ..tiling.cells import LAT_MIN, LAT_SPAN, LON_MIN, LON_SPAN, RES_SHIFT, Y_SHIFT
+from ..tiling.cells import cell_id_sql, point_index_sql
 
 import math as _math
 
@@ -75,16 +75,15 @@ def cell_cover_sql(rel: str, res: int, label_col: str = "label",
                    maxx: str = "maxx", maxy: str = "maxy") -> str:
     """SELECT (label, cell) — the bbox cover of each row's box at
     ``res``, identical to tiling.cells.cover_bbox."""
-    n = 1 << res
-    def fl(e, lo, span):
-        return f"CAST(LEAST(GREATEST(FLOOR(({e} - ({lo})) / {span} * {n}), 0), {n - 1}) AS BIGINT)"
+    def fl(e, axis):
+        return f"CAST({point_index_sql(e, axis, res)} AS BIGINT)"
     return f"""
 SELECT {label_col} AS label,
-       ({res} * {1 << RES_SHIFT} + iy * {1 << Y_SHIFT} + ix) AS cell
+       {cell_id_sql(res, "ix", "iy")} AS cell
 FROM (
   SELECT {label_col},
-         {fl(minx, LON_MIN, LON_SPAN)} AS x0, {fl(maxx, LON_MIN, LON_SPAN)} AS x1,
-         {fl(miny, LAT_MIN, LAT_SPAN)} AS y0, {fl(maxy, LAT_MIN, LAT_SPAN)} AS y1
+         {fl(minx, "x")} AS x0, {fl(maxx, "x")} AS x1,
+         {fl(miny, "y")} AS y0, {fl(maxy, "y")} AS y1
   FROM {rel}
 ) b, LATERAL unnest(range(x0, x1 + 1)) AS ux(ix),
      LATERAL unnest(range(y0, y1 + 1)) AS uy(iy)

@@ -38,8 +38,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..tiling.cells import (LAT_MIN, LAT_SPAN, LON_MIN, LON_SPAN, MAX_RES,
-                            RES_SHIFT, Y_SHIFT)
+from ..tiling.cells import LAT_SPAN, LON_SPAN, MAX_RES, RES_SHIFT, Y_SHIFT, point_index_sql
 
 EARTH_R = 6371008.8                       # IUGG mean Earth radius, metres
 M_PER_DEG = math.pi / 180.0 * EARTH_R     # metres per degree of latitude
@@ -115,11 +114,8 @@ def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
         cols = [F.col(c).alias(c + sfx if c in (lon_col, lat_col)
                                or c in common else c)
                 for c in df.columns]
-        lon, lat = F.col(lon_col), F.col(lat_col)
-        ix = F.least(F.greatest(F.floor((lon - LON_MIN) / LON_SPAN * n), F.lit(0)),
-                     F.lit(n - 1)).cast("long")
-        iy = F.least(F.greatest(F.floor((lat - LAT_MIN) / LAT_SPAN * n), F.lit(0)),
-                     F.lit(n - 1)).cast("long")
+        ix = F.expr(point_index_sql(f"`{lon_col}`", "x", res))
+        iy = F.expr(point_index_sql(f"`{lat_col}`", "y", res))
         return df.select(*cols, ix.alias("__ix"), iy.alias("__iy"))
 
     common = set(left.columns) & set(right.columns) - {lon_col, lat_col}

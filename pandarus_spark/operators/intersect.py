@@ -55,6 +55,40 @@ DEFAULT_TARGET_RES = 12
 DEFAULT_MAX_CELLS = 64
 
 
+_UNITS = ("_ux0", "_uy0", "_ux1", "_uy1")
+
+
+def _with_units(df: DataFrame) -> DataFrame:
+    """``df`` plus its bbox in unit coordinates (``cells.unit_sql``)."""
+    return df.selectExpr("*", *(f"{C.unit_sql(v, axis)} AS {u}" for v, axis, u in zip(
+        ("minx", "miny", "maxx", "maxy"), "xyxy", _UNITS)))
+
+
+def _with_native(df: DataFrame, res: int, max_cells: int) -> DataFrame:
+    """``df`` plus unit coordinates and each row's ``native_res``."""
+    return _with_units(df).selectExpr(
+        "*", f"{C.native_res_sql(*_UNITS, target_res=res, max_cells=max_cells)} AS native_res")
+
+
+def _explode_cells(df: DataFrame, levels: str) -> DataFrame:
+    """``df`` (with :func:`_with_units` columns, which it drops) plus
+    ``cell``: one row per cell of each row's clipped bbox cover at every
+    resolution in the SQL array ``levels`` — the Catalyst form of
+    ``cells._cover_level``.  A bbox outside the domain emits nothing; so
+    does a non-finite one.  Built as SQL text, one step per call, to
+    keep plan building cheap: it runs once per side on every call."""
+    def axis(u0, u1):
+        lo, hi = C.range_sql(u0, u1, "_r")
+        # guarded: sequence(a, b) counts down when a > b
+        return f"explode(CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) END)"
+    keep = [c for c in df.columns if c not in _UNITS]
+    return (df.where(C.finite_sql(*_UNITS))
+            .selectExpr("*", f"explode({levels}) AS _r")
+            .selectExpr("*", f"{axis('_ux0', '_ux1')} AS _ix")
+            .selectExpr("*", f"{axis('_uy0', '_uy1')} AS _iy")
+            .selectExpr(*keep, f"{C.cell_id_sql('_r', '_ix', '_iy')} AS cell"))
+
+
 def cover_features(features: DataFrame, res: int, max_cells: int = DEFAULT_MAX_CELLS,
                    with_parents_to: int | None = None, with_meta: bool = False) -> DataFrame:
     """(feature_id, cell) tile-assignment relation for one side.
@@ -64,45 +98,22 @@ def cover_features(features: DataFrame, res: int, max_cells: int = DEFAULT_MAX_C
     ``with_parents_to`` so mixed-resolution sides still collide.
 
     ``with_meta`` adds (native_res, minx, miny) per row — required by
-    the reference-point pair dedup in :func:`candidate_pairs`."""
+    the reference-point pair dedup in :func:`candidate_pairs`.
 
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            mnx = pdf["minx"].to_numpy(); mny = pdf["miny"].to_numpy()
-            mxx = pdf["maxx"].to_numpy(); mxy = pdf["maxy"].to_numpy()
-            fpos, cells, native = C.cover_features_batch(
-                mnx, mny, mxx, mxy, target_res=res, max_cells=max_cells,
-                parents_to=with_parents_to)
-            fids = pdf["feature_id"].to_numpy(dtype="int64")[fpos]
-            out = {"feature_id": pd.Series(fids, dtype="int64"),
-                   "cell": pd.Series(cells, dtype="int64")}
-            if with_meta:
-                out["native_res"] = pd.Series(native[fpos].astype("int32"), dtype="int32")
-                out["minx"] = pd.Series(mnx[fpos], dtype="float64")
-                out["miny"] = pd.Series(mny[fpos], dtype="float64")
-            yield pd.DataFrame(out)
-
-    schema = "feature_id bigint, cell bigint"
-    if with_meta:
-        schema += ", native_res int, minx double, miny double"
-    return features.select("feature_id", "minx", "miny", "maxx", "maxy") \
-                   .mapInPandas(gen, schema=schema)
+    All Catalyst, no Python worker: the same multiset of rows as the
+    numpy reference ``cells.cover_features_batch``."""
+    levels = ("array(native_res)" if with_parents_to is None
+              else f"sequence(LEAST({with_parents_to}, native_res), native_res)")
+    f = _with_native(features.select("feature_id", "minx", "miny", "maxx", "maxy"),
+                     res, max_cells)
+    meta = ["native_res", "minx", "miny"] if with_meta else []
+    return _explode_cells(f, levels).select("feature_id", "cell", *meta)
 
 
 def _min_emit_res(features: DataFrame, res: int, max_cells: int) -> int:
     """Coarsest per-feature emission resolution on this side (tiny agg)."""
-
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            rs = C.pick_resolution_batch(pdf["minx"].to_numpy(), pdf["miny"].to_numpy(),
-                                         pdf["maxx"].to_numpy(), pdf["maxy"].to_numpy(),
-                                         target_res=res, max_cells=max_cells)
-            yield pd.DataFrame({"r": pd.Series(rs if len(rs) else [res], dtype="int32")})
-
-    row = (features.select("minx", "miny", "maxx", "maxy")
-           .mapInPandas(gen, schema="r int").agg(F.min("r").alias("r")).collect())
+    row = (_with_native(features.select("minx", "miny", "maxx", "maxy"), res, max_cells)
+           .agg(F.min("native_res").alias("r")).collect())
     return int(row[0]["r"]) if row and row[0]["r"] is not None else res
 
 
@@ -115,20 +126,10 @@ def _owner_cell_filter():
     guaranteed to emit that cell (native cover on the coarser side, the
     ancestor chain on the finer side), so every bbox-overlapping pair
     survives exactly once — no dropDuplicates shuffle at all."""
-    rr = F.least(F.col("f_native"), F.col("t_native"))
-    # 2^rr (exact in double for rr <= 20; shiftleft needs a literal count)
-    n = F.pow(F.lit(2.0), rr.cast("double")).cast("long")
-    gx = F.greatest(F.col("f_minx"), F.col("t_minx"))
-    gy = F.greatest(F.col("f_miny"), F.col("t_miny"))
-    # must mirror tiling.cells.lonlat_to_xy exactly: floor((v-min)/span*n), clipped
-    oix = F.least(F.greatest(F.floor((gx - F.lit(C.LON_MIN)) / F.lit(C.LON_SPAN) * n),
-                             F.lit(0).cast("long")), n - 1)
-    oiy = F.least(F.greatest(F.floor((gy - F.lit(C.LAT_MIN)) / F.lit(C.LAT_SPAN) * n),
-                             F.lit(0).cast("long")), n - 1)
-    mask = F.lit((1 << C.Y_SHIFT) - 1).cast("long")
-    return ((F.shiftright(F.col("cell"), C.RES_SHIFT) == rr.cast("long"))
-            & (F.col("cell").bitwiseAND(mask) == oix)
-            & (F.shiftright(F.col("cell"), C.Y_SHIFT).bitwiseAND(mask) == oiy))
+    rr = "LEAST(f_native, t_native)"
+    # the cheap resolution test first: most ancestor-level matches fail it
+    return F.expr(f"shiftright(cell, {C.RES_SHIFT}) = {rr} AND cell = "
+                  + C.point_cell_sql("GREATEST(f_minx, t_minx)", "GREATEST(f_miny, t_miny)", rr))
 
 
 def _prepare_sides(features1: DataFrame, features2: DataFrame,
@@ -145,20 +146,9 @@ def _prepare_sides(features1: DataFrame, features2: DataFrame,
     cols = ["kind", "minx", "miny", "maxx", "maxy"]
     u = (features1.select(F.lit(0).alias("side"), *cols)
          .unionByName(features2.select(F.lit(1).alias("side"), *cols)))
-
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            rs = C.pick_resolution_batch(pdf["minx"].to_numpy(), pdf["miny"].to_numpy(),
-                                         pdf["maxx"].to_numpy(), pdf["maxy"].to_numpy(),
-                                         target_res=res, max_cells=max_cells)
-            yield pd.DataFrame({
-                "side": pdf["side"].astype("int32"),
-                "r": pd.Series(rs, dtype="int32"),
-                "bad": ((pdf["side"] == 1) & (pdf["kind"] != "polygon")).astype("int32")})
-
-    rows = (u.mapInPandas(gen, schema="side int, r int, bad int")
-            .groupBy("side").agg(F.min("r").alias("lo"), F.max("bad").alias("bad"))
+    rows = (_with_native(u, res, max_cells).groupBy("side")
+            .agg(F.min("native_res").alias("lo"),
+                 F.expr("max(side = 1 AND NOT kind <=> 'polygon')").alias("bad"))
             .collect())
     d = {row["side"]: row for row in rows}
     if 1 in d and d[1]["bad"]:

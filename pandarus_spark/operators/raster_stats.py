@@ -109,14 +109,15 @@ def _tile_candidates(features: DataFrame, cells: DataFrame,
     """Cell-key candidate join for zonal stats at scale.
 
     Feature side: adaptive native cover (cover_features with_meta).
-    Raster side: pure-Catalyst tile emission of each cell's bbox cover
-    at EVERY resolution in [coarsest feature native, res] — a join
+    Raster side: the feature cover's Catalyst bbox → cells explode
+    (``intersect._explode_cells``) of each raster cell's bbox at EVERY
+    resolution in [coarsest feature native, res] — a join
     match then implies tile res == that feature's native res, and the
     owner-tile point filter (same reference-point trick as
     operators/intersect.py) keeps each (cell, feature) pair exactly
     once.  No broadcast of the feature side, no dedup shuffle."""
     from ..tiling import cells as C
-    from .intersect import _min_emit_res, cover_features
+    from .intersect import _explode_cells, _min_emit_res, _with_units, cover_features
 
     lo = _min_emit_res(features, res, max_cells)
     fcov = (cover_features(features, res, max_cells, with_meta=True)
@@ -125,36 +126,14 @@ def _tile_candidates(features: DataFrame, cells: DataFrame,
     feats_geom = features.select("feature_id", "label", "geom_wkb")
     fcov = fcov.join(feats_geom, "feature_id")
 
-    r = F.explode(F.array(*[F.lit(x) for x in range(lo, res + 1)])).alias("r")
-    tiles = cells.select("*", r)
-    n = F.pow(F.lit(2.0), F.col("r").cast("double")).cast("long")
-
-    def idx(v, mn, span):
-        return F.least(F.greatest(F.floor((v - F.lit(mn)) / F.lit(span) * n),
-                                  F.lit(0).cast("long")), n - 1)
-
-    tiles = (tiles
-             .withColumn("tx", F.explode(F.sequence(idx(F.col("minx"), C.LON_MIN, C.LON_SPAN),
-                                                    idx(F.col("maxx"), C.LON_MIN, C.LON_SPAN))))
-             .withColumn("ty", F.explode(F.sequence(idx(F.col("miny"), C.LAT_MIN, C.LAT_SPAN),
-                                                    idx(F.col("maxy"), C.LAT_MIN, C.LAT_SPAN))))
-             .withColumn("cell", (F.col("r").cast("long") * F.lit(1 << C.RES_SHIFT)
-                                  + F.col("ty") * F.lit(1 << C.Y_SHIFT) + F.col("tx")))
-             .drop("r"))
-
+    tiles = _explode_cells(_with_units(cells), f"sequence({lo}, {res})")
     joined = tiles.join(fcov, "cell")
     # owner-tile filter: keep only the tile containing the reference
-    # point (max of the two bbox minima) — mirrors lonlat_to_xy exactly
-    rr = F.shiftright(F.col("cell"), C.RES_SHIFT)
-    n2 = F.pow(F.lit(2.0), rr.cast("double")).cast("long")
-    gx = F.greatest(F.col("minx"), F.col("f_minx"))
-    gy = F.greatest(F.col("miny"), F.col("f_miny"))
-    oix = F.least(F.greatest(F.floor((gx - F.lit(C.LON_MIN)) / F.lit(C.LON_SPAN) * n2),
-                             F.lit(0).cast("long")), n2 - 1)
-    oiy = F.least(F.greatest(F.floor((gy - F.lit(C.LAT_MIN)) / F.lit(C.LAT_SPAN) * n2),
-                             F.lit(0).cast("long")), n2 - 1)
-    return joined.filter((F.col("tx") == oix) & (F.col("ty") == oiy)) \
-                 .drop("cell", "tx", "ty", "f_native", "f_minx", "f_miny", "feature_id")
+    # point (max of the two bbox minima)
+    owner = C.point_cell_sql("GREATEST(minx, f_minx)", "GREATEST(miny, f_miny)",
+                             f"shiftright(cell, {C.RES_SHIFT})")
+    return joined.filter(F.expr(f"cell = {owner}")) \
+                 .drop("cell", "f_native", "f_minx", "f_miny", "feature_id")
 
 
 def raster_statistics(features: DataFrame, cells: DataFrame,

@@ -16,8 +16,11 @@ over the WGS84 lon/lat rectangle with Z-order-flavoured cell ids:
 where at resolution ``res`` the world splits into 2^res × 2^res tiles
 (lon in [-180, 180), lat in [-90, 90)).  Everything is closed-form
 integer arithmetic — deliberately: the same mapping is expressible in
-ANSI SQL, so tile assignments can be cross-checked by an independent
-SQL engine (the driver's DuckDB oracle).
+ANSI SQL.  The SQL rendering at the bottom of this module is the form
+that runs: the engine's cover (``operators/intersect.py:cover_features``),
+resolution pick and owner-cell filters are Catalyst expressions built
+from it, and the driver's DuckDB oracle evaluates the same strings.  The
+numpy functions are the reference the tests compare it against.
 
 Skew handling (the reference has none — SURVEY.md §4):
 
@@ -172,9 +175,10 @@ def cover_features_batch(minx, miny, maxx, maxy, target_res: int = 12,
     miny = np.asarray(miny, dtype=np.float64); maxy = np.asarray(maxy, dtype=np.float64)
     native = pick_resolution_batch(minx, miny, maxx, maxy, target_res, max_cells)
     pos_parts, cell_parts = [], []
-    # native level (per-feature resolution)
-    p, c = _cover_level(minx, miny, maxx, maxy, native,
-                        np.ones(len(minx), dtype=bool))
+    # native level (per-feature resolution); a non-finite bbox (empty
+    # geometry, NaN) has native 0 and no cells
+    finite = np.isfinite(minx) & np.isfinite(miny) & np.isfinite(maxx) & np.isfinite(maxy)
+    p, c = _cover_level(minx, miny, maxx, maxy, native, finite)
     pos_parts.append(p); cell_parts.append(c)
     if parents_to is not None:
         lvl = np.empty(len(minx), dtype=np.int64)
@@ -227,14 +231,78 @@ def kring(cid: int, k: int) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# SQL rendering of the cell mapping (for independent-oracle verification)
+# SQL rendering of the cell mapping — the form the engine runs (Catalyst)
+# and the independent oracle evaluates (DuckDB); numpy above is the reference
 # ---------------------------------------------------------------------------
 
-def point_cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
+def _tiles_sql(res) -> str:
+    """2^res as SQL: a literal for an int ``res``, else a BIGINT shift."""
+    return str(1 << res) if isinstance(res, int) else f"(CAST(1 AS BIGINT) << {res})"
+
+
+def unit_sql(v: str, axis: str) -> str:
+    """Position of coordinate ``v`` along ``axis`` (``"x"`` lon, ``"y"``
+    lat) as a fraction of the domain: ``(v - min) / span``.  Typed
+    literals: a bare 360.0 is DECIMAL in both engines, which would make
+    the arithmetic decimal for an integer-typed ``v``."""
+    mn, span = (LON_MIN, LON_SPAN) if axis == "x" else (LAT_MIN, LAT_SPAN)
+    return f"(({v} - CAST({mn} AS DOUBLE)) / CAST({span} AS DOUBLE))"
+
+
+def floor_sql(u: str, res) -> str:
+    """THE tile-index definition, unclipped: ``FLOOR(u * 2^res)`` for a
+    :func:`unit_sql` value ``u`` — with it, the same IEEE double ops in
+    the same order as :func:`lonlat_to_xy`, :func:`pick_resolution_batch`
+    and :func:`_cover_level`.  ``res`` is an int or a SQL expression."""
+    return f"FLOOR({u} * {_tiles_sql(res)})"
+
+
+def point_index_sql(v: str, axis: str, res) -> str:
+    """A point's tile index on one axis: clipped to [0, 2^res - 1]."""
+    return f"LEAST(GREATEST({floor_sql(unit_sql(v, axis), res)}, 0), {_tiles_sql(res)} - 1)"
+
+
+def range_sql(u0: str, u1: str, res) -> tuple[str, str]:
+    """A bbox cover's index range on one axis (unit coordinates), clipped
+    the way :func:`_cover_level` clips: the lower end to >= 0, the upper
+    to <= 2^res - 1 (a bbox outside the domain gives lo > hi: no cells)."""
+    return (f"GREATEST({floor_sql(u0, res)}, 0)",
+            f"LEAST({floor_sql(u1, res)}, {_tiles_sql(res)} - 1)")
+
+
+def cell_id_sql(res, ix: str, iy: str) -> str:
+    """SQL twin of :func:`cell_id` (sums of disjoint bit fields)."""
+    return f"({res} * {1 << RES_SHIFT} + {iy} * {1 << Y_SHIFT} + {ix})"
+
+
+def point_cell_sql(lon_expr: str, lat_expr: str, res) -> str:
     """ANSI-SQL expression computing the same cell id as
     ``lonlat_to_xy`` + ``cell_id`` for a point — used to let DuckDB act
-    as an independent oracle for tile assignments."""
-    n = 1 << res
-    ix = (f"CAST(LEAST(GREATEST(FLOOR(({lon_expr} - ({LON_MIN})) / {LON_SPAN} * {n}), 0), {n - 1}) AS BIGINT)")
-    iy = (f"CAST(LEAST(GREATEST(FLOOR(({lat_expr} - ({LAT_MIN})) / {LAT_SPAN} * {n}), 0), {n - 1}) AS BIGINT)")
-    return f"({res} * {1 << RES_SHIFT} + {iy} * {1 << Y_SHIFT} + {ix})"
+    as an independent oracle for tile assignments, and by the engine's
+    owner-cell filters (``res`` may then be a per-row expression)."""
+    ix = f"CAST({point_index_sql(lon_expr, 'x', res)} AS BIGINT)"
+    iy = f"CAST({point_index_sql(lat_expr, 'y', res)} AS BIGINT)"
+    return cell_id_sql(res, ix, iy)
+
+
+def finite_sql(*exprs: str) -> str:
+    """Spark SQL: every value finite.  Spark orders NaN above +inf, so a
+    NaN fails the ``<`` too."""
+    return f"GREATEST({', '.join(f'ABS({e})' for e in exprs)}) < DOUBLE('inf')"
+
+
+def native_res_sql(ux0: str, uy0: str, ux1: str, uy1: str,
+                   target_res: int = 12, max_cells: int = 64) -> str:
+    """Spark SQL twin of :func:`pick_resolution_batch` over a bbox's
+    :func:`unit_sql` coordinates: a ``CASE`` over res = min(target_res,
+    MAX_RES) … 1, else 0.  Floors go through BIGINT and back to DOUBLE
+    (exact below 2^63), so the span products are the numpy doubles and
+    no BIGINT difference can overflow under ANSI mode.  A non-finite
+    bbox (empty geometry: inf, inf, -inf, -inf; NaN) gets 0, numpy's
+    answer."""
+    def span(u0, u1, r):
+        return f"(CAST({floor_sql(u1, r)} AS DOUBLE) - CAST({floor_sql(u0, r)} AS DOUBLE) + 1)"
+    whens = "".join(
+        f" WHEN {span(ux0, ux1, r)} * {span(uy0, uy1, r)} <= {max_cells} THEN {r}"
+        for r in range(min(target_res, MAX_RES), 0, -1))
+    return f"CASE WHEN NOT ({finite_sql(ux0, uy0, ux1, uy1)}) THEN 0{whens} ELSE 0 END"

@@ -63,18 +63,21 @@ def test_sql_parity_with_duckdb():
     assert py_cells == sql_cells
 
 
-def test_batch_cover_matches_scalar_loop():
-    """cover_features_batch == per-feature pick_resolution +
-    cover_with_parents/cover_bbox on random bboxes (including
-    domain-edge clipping and multi-level ancestor chains)."""
-    rng = np.random.default_rng(7)
-    n = 300
+def _random_bboxes(seed, n=300):
+    rng = np.random.default_rng(seed)
     cx = rng.uniform(-185, 185, n)          # some past the domain edge
     cy = rng.uniform(-95, 95, n)
     w = 10 ** rng.uniform(-4, 1.2, n)       # spans 1e-4 .. ~16 degrees
     h = 10 ** rng.uniform(-4, 1.2, n)
-    minx, maxx = cx - w / 2, cx + w / 2
-    miny, maxy = cy - h / 2, cy + h / 2
+    return cx - w / 2, cy - h / 2, cx + w / 2, cy + h / 2
+
+
+def test_batch_cover_matches_scalar_loop():
+    """cover_features_batch == per-feature pick_resolution +
+    cover_with_parents/cover_bbox on random bboxes (including
+    domain-edge clipping and multi-level ancestor chains)."""
+    n = 300
+    minx, miny, maxx, maxy = _random_bboxes(7, n)
 
     for parents_to in (None, 0, 3, 9):
         fpos, cells, native = C.cover_features_batch(
@@ -108,3 +111,100 @@ def test_knn_cell_udf_matches_kring(spark):
         ix, iy = C.lonlat_to_xy(np.array([x]), np.array([y]), 6)
         want = set(C.kring(C.cell_id(6, int(ix[0]), int(iy[0])), 2))
         assert set(cells) == want
+
+
+def _bbox_frame(spark, minx, miny, maxx, maxy):
+    # rows of Python floats: a pandas frame would turn NaN into null
+    rows = [(i, float(a), float(b), float(c), float(d))
+            for i, (a, b, c, d) in enumerate(zip(minx, miny, maxx, maxy))]
+    return spark.createDataFrame(
+        rows, "feature_id bigint, minx double, miny double, maxx double, maxy double")
+
+
+def _aligned_and_zero_bboxes(seed):
+    """Boxes whose edges sit on cell boundaries at res 1..20, and
+    zero-size boxes (points and segments, some on boundaries)."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for r in range(1, 21):
+        sx, sy = C.LON_SPAN / (1 << r), C.LAT_SPAN / (1 << r)
+        for _ in range(6):
+            ix = int(rng.integers(0, 1 << r)); iy = int(rng.integers(0, 1 << r))
+            kx = int(rng.integers(0, 4)); ky = int(rng.integers(0, 4))
+            x0, y0 = C.LON_MIN + ix * sx, C.LAT_MIN + iy * sy
+            out.append((x0, y0, x0 + kx * sx, y0 + ky * sy))
+    for _ in range(40):
+        x, y = rng.uniform(-180, 180), rng.uniform(-90, 90)
+        out += [(x, y, x, y), (x, y, x + 1e-3, y), (round(x), round(y), round(x), round(y))]
+    out += [(-180.0, -90.0, 180.0, 90.0), (180.0, 90.0, 180.0, 90.0)]
+    return [np.array(c, dtype=np.float64) for c in zip(*out)]
+
+
+def test_catalyst_cover_matches_numpy(spark):
+    """cover_features (Catalyst) emits the same multiset of
+    (feature_id, cell, native_res, minx, miny) rows as the numpy
+    reference cover_features_batch, and _min_emit_res equals the
+    reference's minimum native resolution."""
+    from pandarus_spark.operators.intersect import _min_emit_res, cover_features
+    boxes = [np.concatenate(p) for p in zip(_random_bboxes(7), _aligned_and_zero_bboxes(11))]
+    minx, miny, maxx, maxy = boxes
+    df = _bbox_frame(spark, *boxes).cache()
+    cols = ["feature_id", "cell", "native_res", "minx", "miny"]
+    for res, max_cells in ((8, 64), (12, 64), (12, 256), (20, 16)):
+        native = C.pick_resolution_batch(*boxes, target_res=res, max_cells=max_cells)
+        assert _min_emit_res(df, res, max_cells) == native.min()
+        for p in (None, 0, 3, 9):
+            fpos, cells, native = C.cover_features_batch(
+                *boxes, target_res=res, max_cells=max_cells, parents_to=p)
+            want = np.rec.fromarrays([fpos, cells, native[fpos], minx[fpos], miny[fpos]],
+                                     names=cols)
+            got = cover_features(df, res, max_cells, with_parents_to=p,
+                                 with_meta=True).toPandas()
+            got = np.rec.fromarrays([got[c].to_numpy() for c in cols], names=cols)
+            want.sort(order=cols[:2]); got.sort(order=cols[:2])
+            assert len(got) == len(want), (res, max_cells, p)
+            for c in cols:
+                np.testing.assert_array_equal(got[c], want[c], err_msg=f"{c} {res} {max_cells} {p}")
+
+
+def test_non_finite_bbox_has_no_cover(spark):
+    """Empty geometry (bbox inf, inf, -inf, -inf) and NaN boxes: native
+    res 0 and no cover rows, with no ANSI overflow error — the numpy
+    reference's answer."""
+    from pandarus_spark.operators.intersect import _min_emit_res, _with_native, cover_features
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    inf, nan = float("inf"), float("nan")
+    bad = [(inf, inf, -inf, -inf), (nan, nan, nan, nan), (nan, 0.0, 1.0, 1.0),
+           (-inf, 0.0, 1.0, 1.0), (0.0, 0.0, inf, 1.0)]
+    boxes = [np.array(c) for c in zip(*bad)]
+    df = _bbox_frame(spark, *boxes)
+    ref_pos, _, ref_native = C.cover_features_batch(*boxes, target_res=12, parents_to=0)
+    assert len(ref_pos) == 0 and not ref_native.any()
+    native = _with_native(df, 12, 64).toPandas()["native_res"]
+    assert native.tolist() == [0] * len(bad)
+    assert _min_emit_res(df, 12, 64) == 0
+    for p in (None, 0, 5):
+        assert cover_features(df, 12, with_parents_to=p, with_meta=True).count() == 0
+    # a finite row alongside keeps its own cover
+    ok = _bbox_frame(spark, *[np.append(b, v) for b, v in zip(boxes, (1.0, 1.0, 2.0, 2.0))])
+    got = cover_features(ok, 12).toPandas()
+    assert set(got["feature_id"]) == {len(bad)} and len(got) > 0
+
+
+def test_intersect_ignores_empty_polygon_feature(spark):
+    """An empty polygon on the probe side contributes nothing and
+    breaks nothing: same rows as without it."""
+    import pandarus_spark as ps
+    from pandarus_spark.sources.pages import extract_features, grid_features, pages_df
+    empty = {"name": "empty", "geometry": {"type": "Polygon", "coordinates": []}}
+    square = extract_features(pages_df(spark, "square"))
+    grid = extract_features(pages_df(spark, "grid"))
+    grid_e = extract_features(pages_df(spark, "grid", grid_features() + [empty]))
+    assert grid_e.filter("label = 'empty'").first()["minx"] == float("inf")
+
+    def rows(df):
+        return sorted((r["from_label"], r["to_label"], r["measure"], bytes(r["geom_wkb"]))
+                      for r in df.collect())
+    want = rows(ps.intersect(square, grid))
+    assert len(want) == 4
+    assert rows(ps.intersect(square, grid_e)) == want
