@@ -246,21 +246,24 @@ def hits_sql(edges_sql: str, n_iters: int = 5,
              src_col: str = "src", dst_col: str = "dst") -> str:
     """DuckDB rendering of :func:`hits`: the identical arithmetic
     circuit as chained CTEs (one authority/hub pair per iteration;
-    HUGEINT carries the DECIMAL(38,0) product)."""
+    HUGEINT carries the DECIMAL(38,0) product).  Every CTE is
+    MATERIALIZED: DuckDB otherwise inlines them, and since each
+    ``{out}`` reads ``{out}_raw`` twice, the plan grows exponentially
+    with ``n_iters``."""
     if n_iters < 1:
         raise ValueError("n_iters must be positive")
-    parts = [f"""e AS (SELECT CAST({src_col} AS BIGINT) AS u,
+    parts = [f"""e AS MATERIALIZED (SELECT CAST({src_col} AS BIGINT) AS u,
                             CAST({dst_col} AS BIGINT) AS v
                      FROM ({edges_sql})),
-nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-h0 AS (SELECT node, CAST({MICRO} AS BIGINT) AS s FROM nodes)"""]
+nodes AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v FROM e),
+h0 AS MATERIALIZED (SELECT node, CAST({MICRO} AS BIGINT) AS s FROM nodes)"""]
 
     def _half(out, inn, edge_key, agg_key):
-        return f"""{out}_raw AS (
+        return f"""{out}_raw AS MATERIALIZED (
   SELECT e.{agg_key} AS node, sum({inn}.s) AS raw
   FROM e JOIN {inn} ON e.{edge_key} = {inn}.node
   GROUP BY e.{agg_key}),
-{out} AS (
+{out} AS MATERIALIZED (
   SELECT nodes.node,
          CAST(CAST(coalesce({out}_raw.raw, 0) AS HUGEINT) * {MICRO}
               // greatest((SELECT coalesce(max(raw), 0) FROM {out}_raw),
@@ -422,17 +425,19 @@ def label_propagation_sql(edges_sql: str, n_iters: int = 5,
                           dst_col: str = "dst") -> str:
     """DuckDB rendering of :func:`label_propagation` (same
     symmetrization, the same self-vote, the same count-desc/label-asc
-    tie-break, one CTE per synchronous round)."""
+    tie-break, one CTE per synchronous round).  The CTEs are
+    MATERIALIZED because ``l{i}`` reads ``l{i-1}`` twice and DuckDB
+    would otherwise inline the chain exponentially."""
     if n_iters < 1:
         raise ValueError("n_iters must be positive")
-    parts = [f"""e AS (
+    parts = [f"""e AS MATERIALIZED (
   SELECT DISTINCT u, v FROM (
     SELECT {src_col} AS u, {dst_col} AS v FROM ({edges_sql})
     UNION ALL
     SELECT {dst_col}, {src_col} FROM ({edges_sql})) WHERE u <> v)""",
-             "l0 AS (SELECT DISTINCT u AS node, u AS label FROM e)"]
+             "l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM e)"]
     for i in range(1, n_iters + 1):
-        parts.append(f"""l{i} AS (
+        parts.append(f"""l{i} AS MATERIALIZED (
   SELECT node, label FROM (
     SELECT node, label,
            row_number() OVER (PARTITION BY node

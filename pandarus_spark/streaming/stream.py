@@ -243,7 +243,8 @@ def stream_simhash_neardup(docs_stream: DataFrame, max_hamming: int = 3,
 
     from ..operators.dedup import nz, simhash_expr
 
-    assert max_hamming < bands, "pigeonhole exactness needs max_hamming < bands"
+    if not max_hamming < bands:
+        raise ValueError("pigeonhole exactness needs max_hamming < bands")
     width = bits // bands
     mask = (1 << width) - 1
 

@@ -332,6 +332,22 @@ def test_stream_simhash_neardup_drops_null_and_empty_text(spark, tmp_path):
     assert got == batch == {(1, 5)}  # only the real pair; no NULL/empty pairs
 
 
+def test_simhash_neardup_rejects_max_hamming_not_below_bands(spark, tmp_path):
+    """Pigeonhole recall needs max_hamming < bands; batch and streaming
+    must refuse otherwise with a ValueError (an assert vanishes under
+    ``python -O`` and the recall loss goes unnoticed)."""
+    from pandarus_spark.operators.dedup import simhash_neardup_pairs
+    from pandarus_spark.streaming.stream import stream_simhash_neardup
+    docs = spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    stream = spark.readStream.schema("doc_id long, text string") \
+        .parquet(str(tmp_path))
+    for max_hamming in (4, 5):
+        with pytest.raises(ValueError):
+            simhash_neardup_pairs(docs, max_hamming=max_hamming, bands=4)
+        with pytest.raises(ValueError):
+            stream_simhash_neardup(stream, max_hamming=max_hamming, bands=4)
+
+
 def test_curation_ops_compose_with_streaming(spark, tmp_path):
     """The curation layer (hash_sample -> chunk_tokens -> redact) is
     stateless/narrow, so it must run unchanged on a streaming

@@ -580,3 +580,17 @@ def test_minhash_lsh_join_exact_cross_dup_recall(spark, docs):
     out = {(r.left_id, r.right_id): r.jaccard
            for r in D.minhash_lsh_join(left, right, threshold=0.5).collect()}
     assert out[(0, 3)] == 1.0
+
+
+def test_minhash_lsh_rejects_bands_outside_num_hashes(spark, docs):
+    """bands must be in [1, num_hashes]: zero bands emit no candidates;
+    more bands than hashes leave zero rows per band, i.e. one constant
+    Spark key (every pair a candidate) and an empty ``()`` DuckDB band
+    predicate.  Both engines, self and cross join, raise ValueError."""
+    for bands in (0, 17):
+        for call in (lambda: D.minhash_lsh_pairs(docs, num_hashes=16, bands=bands),
+                     lambda: D.minhash_lsh_join(docs, docs, num_hashes=16, bands=bands),
+                     lambda: D.minhash_lsh_sql(num_hashes=16, bands=bands),
+                     lambda: D.minhash_lsh_join_sql(num_hashes=16, bands=bands)):
+            with pytest.raises(ValueError):
+                call()

@@ -871,7 +871,7 @@ def _winnow_ref(arr, w):
 
 def test_winnow_three_way_parity(spark):
     from pandarus_spark.operators.dedup import (
-        winnow_fingerprints, winnow_fingerprints_sql, shingle_id_pos_arrays)
+        winnow_fingerprints, winnow_fingerprints_sql, _shingle_id_fold)
     rows = [(0, "a b c d e f g h i j", "s"),
             (1, "x y a b c d e f q r s", "s"),   # shares 6 words with 0
             (2, "z", "s"),                        # shorter than k
@@ -888,8 +888,9 @@ def test_winnow_three_way_parity(spark):
     con.execute(f"CREATE TABLE documents AS "
                 f"SELECT * FROM (VALUES {vals}) t(doc_id, text)")
     orc = sorted(con.execute(winnow_fingerprints_sql(k=K, w=W)).fetchall())
+    lanes, fold = _shingle_id_fold(d, K, "text", ["doc_id"])
     arr = {r.doc_id: r._ids for r in
-           shingle_id_pos_arrays(d, k=K, keep=["doc_id"]).collect()}
+           lanes.select("doc_id", fold.alias("_ids")).collect()}
     assert out == orc == _winnow_ref(arr, W)
     # every doc contributes at least one fingerprint (truncated window)
     assert {i for i, _, _ in out} == {0, 1, 2, 3, 4, 5}
