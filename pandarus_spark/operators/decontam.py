@@ -164,23 +164,32 @@ def bloom_contaminated(docs: DataFrame, bloom, k: int = 8,
     return arr.select(F.col(id_col), probe(F.col("_ids")).alias("contaminated"))
 
 
-def contamination_stats_sql(docs_source: str = "documents",
-                            bench_source: str = "benchmark", k: int = 8,
-                            text_expr: str = "text",
-                            id_expr: str = "doc_id") -> str:
-    """DuckDB rendering of :func:`contamination_stats` (lockstep
-    rolling-hash shingle ids via :func:`dedup.shingle_ids_over_sql` —
-    the word-hash lane arrays bind once per row in the inner select)."""
+def _shingle_sets_sql(docs_source: str, bench_source: str, k: int,
+                      text_expr: str, id_expr: str) -> str:
+    """The two CTEs both DuckDB oracles share: ``bset`` (the benchmark's
+    distinct shingle ids) and ``dsh`` (one (doc_id, shingle) row per
+    document's distinct shingle), rolling-hash ids via
+    :func:`dedup.shingle_ids_over_sql` over word-hash lanes bound once
+    per row in the inner select."""
     h1, h2 = shingle_id_lanes_sql(text_expr)
     ids = shingle_ids_over_sql("h1", "h2", k)
-    return f"""
-WITH bset AS (
+    return f"""bset AS (
   SELECT DISTINCT unnest({ids}) AS shingle
   FROM (SELECT {h1} AS h1, {h2} AS h2 FROM {bench_source}) bl),
 dsh AS (
   SELECT doc_id, unnest({ids}) AS shingle
   FROM (SELECT {id_expr} AS doc_id, {h1} AS h1, {h2} AS h2
-        FROM {docs_source}) dl)
+        FROM {docs_source}) dl)"""
+
+
+def contamination_stats_sql(docs_source: str = "documents",
+                            bench_source: str = "benchmark", k: int = 8,
+                            text_expr: str = "text",
+                            id_expr: str = "doc_id") -> str:
+    """DuckDB rendering of :func:`contamination_stats` over
+    :func:`_shingle_sets_sql`."""
+    return f"""
+WITH {_shingle_sets_sql(docs_source, bench_source, k, text_expr, id_expr)}
 SELECT dsh.doc_id, count(*) AS n_shingles,
        count(bset.shingle) AS n_hits,
        count(bset.shingle) > 0 AS contaminated
@@ -200,20 +209,12 @@ def bloom_contaminated_sql(docs_source: str = "documents",
     — false positives included — is reproducible value-exactly in SQL:
     a corpus shingle is a bloom hit iff ALL ``n_hashes`` of its probe
     positions collide with some benchmark shingle's position set."""
-    h1, h2 = shingle_id_lanes_sql(text_expr)
-    ids = shingle_ids_over_sql("h1", "h2", k)
     pos = (f"((shingle & {_BLOOM_MASK31}) + i * ((shingle >> 31) | 1)) "
            f"% {n_bits}")
     return f"""
 WITH idx AS (SELECT unnest(range({n_hashes})) AS i),
-bsh AS (
-  SELECT DISTINCT unnest({ids}) AS shingle
-  FROM (SELECT {h1} AS h1, {h2} AS h2 FROM {bench_source}) bl),
-bbits AS (SELECT DISTINCT {pos} AS pos FROM bsh, idx),
-dsh AS (
-  SELECT doc_id, unnest({ids}) AS shingle
-  FROM (SELECT {id_expr} AS doc_id, {h1} AS h1, {h2} AS h2
-        FROM {docs_source}) dl),
+{_shingle_sets_sql(docs_source, bench_source, k, text_expr, id_expr)},
+bbits AS (SELECT DISTINCT {pos} AS pos FROM bset, idx),
 probe AS (
   SELECT p.doc_id, p.shingle, count(b.pos) AS nhit
   FROM (SELECT doc_id, shingle, {pos} AS pos FROM dsh, idx) p

@@ -132,31 +132,37 @@ def _owner_cell_filter():
                   + C.point_cell_sql("GREATEST(f_minx, t_minx)", "GREATEST(f_miny, t_miny)", rr))
 
 
+def _side_minima(features1: DataFrame, features2: DataFrame, res: int, max_cells: int,
+                 check_polygons: bool = False) -> tuple[int, int]:
+    """Both sides' coarsest native resolutions (:func:`_min_emit_res`
+    per side) in ONE union aggregate job; ``check_polygons`` also
+    validates the second side is polygonal (reference core.py:51-53)."""
+    cols = ["minx", "miny", "maxx", "maxy"] + (["kind"] if check_polygons else [])
+    u = (features1.select(F.lit(0).alias("side"), *cols)
+         .unionByName(features2.select(F.lit(1).alias("side"), *cols)))
+    aggs = [F.min("native_res").alias("lo")]
+    if check_polygons:
+        aggs.append(F.expr("max(side = 1 AND NOT kind <=> 'polygon')").alias("bad"))
+    d = {row["side"]: row for row in
+         _with_native(u, res, max_cells).groupBy("side").agg(*aggs).collect()}
+    if check_polygons and 1 in d and d[1]["bad"]:
+        raise ValueError("second dataset must contain only polygons "
+                         "(reference core.py:51-53)")
+    return tuple(int(d[side]["lo"]) if side in d else res for side in (0, 1))
+
+
 def _prepare_sides(features1: DataFrame, features2: DataFrame,
                    res: int, max_cells: int) -> tuple[int, int]:
     """One combined Spark job that (a) materializes both persisted
     feature tables (so concurrent plan subtrees don't race the cache),
     (b) computes each side's coarsest native resolution, and (c)
-    validates the second side is polygonal (reference core.py:51-53) —
-    replacing five separate driver actions."""
+    validates the second side is polygonal — replacing five separate
+    driver actions."""
     from pyspark import StorageLevel
     for df in (features1, features2):
         if df.storageLevel == StorageLevel.NONE:
             df.persist(StorageLevel.MEMORY_AND_DISK)
-    cols = ["kind", "minx", "miny", "maxx", "maxy"]
-    u = (features1.select(F.lit(0).alias("side"), *cols)
-         .unionByName(features2.select(F.lit(1).alias("side"), *cols)))
-    rows = (_with_native(u, res, max_cells).groupBy("side")
-            .agg(F.min("native_res").alias("lo"),
-                 F.expr("max(side = 1 AND NOT kind <=> 'polygon')").alias("bad"))
-            .collect())
-    d = {row["side"]: row for row in rows}
-    if 1 in d and d[1]["bad"]:
-        raise ValueError("second dataset must contain only polygons "
-                         "(reference core.py:51-53)")
-    lo1 = int(d[0]["lo"]) if 0 in d else res
-    lo2 = int(d[1]["lo"]) if 1 in d else res
-    return lo1, lo2
+    return _side_minima(features1, features2, res, max_cells, check_polygons=True)
 
 
 def candidate_pairs(features1: DataFrame, features2: DataFrame,
@@ -168,10 +174,10 @@ def candidate_pairs(features1: DataFrame, features2: DataFrame,
     Multi-cell double-matches are eliminated by the owner-cell filter
     (:func:`_owner_cell_filter`) — a codegen'd predicate on the join
     output — instead of a ``dropDuplicates`` shuffle."""
-    if lo1 is None:
-        lo1 = _min_emit_res(features1, res, max_cells)
-    if lo2 is None:
-        lo2 = _min_emit_res(features2, res, max_cells)
+    if lo1 is None or lo2 is None:
+        m1, m2 = _side_minima(features1, features2, res, max_cells)
+        lo1 = m1 if lo1 is None else lo1
+        lo2 = m2 if lo2 is None else lo2
     # each side emits ancestors down to the other side's coarsest level,
     # guaranteeing a shared key for any bbox overlap without emitting the
     # root cell globally (tiling/cells.py docstring).

@@ -8,6 +8,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# directory holding pandarus_spark/ and the pandarus_workerd daemon module
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def engine_sql_confs(cluster: bool, shuffle_partitions: int) -> dict:
     """The engine's recommended runtime configuration, as a dict.
@@ -121,9 +124,19 @@ def build_session(app: str = "pandarus-spark", master: str | None = None,
                    .config("spark.executor.memory",
                            os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "10g"))
                    # total cores cap -> executor count = cores.max / executor.cores
-                   .config("spark.cores.max", str(ncpu))
-                   .config("spark.executorEnv.PYTHONPATH",
-                           os.environ.get("SPARK_GRAFT_PYTHONPATH", os.getcwd())))
+                   .config("spark.cores.max", str(ncpu)))
+    # Python workers start from the top-level pandarus_workerd daemon,
+    # which imports the installed pyspark instead of pyspark.zip when the
+    # versions match (no per-task zip-directory rescans); its directory
+    # (the repo root) goes on the workers' path so any cwd finds it.
+    # A cluster's workers also need SPARK_GRAFT_PYTHONPATH (default cwd).
+    worker_path = [_REPO_ROOT]
+    if cluster:
+        worker_path.insert(0, os.environ.get("SPARK_GRAFT_PYTHONPATH", os.getcwd()))
+    builder = (builder
+               .config("spark.python.daemon.module", "pandarus_workerd")
+               .config("spark.executorEnv.PYTHONPATH",
+                       os.pathsep.join(dict.fromkeys(worker_path))))
     # Plan-shape confs (broadcast threshold: generous 1g local since a
     # broadcast is an in-process reference, 64m on clusters where each
     # executor pays a network copy; shuffled-hash over sort-merge for

@@ -111,6 +111,36 @@ def test_salting_is_result_invariant(spark, grid):
         assert plain[k] == pytest.approx(salted[k], rel=1e-12)
 
 
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_candidate_pairs_finds_both_cover_minima_in_one_job(spark, grid):
+    """Without lo1/lo2, candidate_pairs computes both sides' coarsest
+    cover resolutions in one union aggregate — as many jobs as ONE
+    side's _min_emit_res — and pairs as with the minima passed in."""
+    from pandarus_spark.operators.intersect import (DEFAULT_MAX_CELLS, DEFAULT_TARGET_RES,
+                                                    _min_emit_res, candidate_pairs)
+    res, max_cells = DEFAULT_TARGET_RES, DEFAULT_MAX_CELLS
+    square = extract_features(pages_df(spark, "square")).cache()
+    square.count(), grid.count()  # materialized: count only the minima jobs
+    lo1, one_side = _jobs_in_group(spark, "one-side-minimum",
+                                   lambda: _min_emit_res(square, res, max_cells))
+    pairs, both_sides = _jobs_in_group(spark, "both-side-minima",
+                                       lambda: candidate_pairs(square, grid))
+    assert both_sides == one_side
+    lo2 = _min_emit_res(grid, res, max_cells)
+    given = candidate_pairs(square, grid, lo1=lo1, lo2=lo2)
+    assert sorted(pairs.collect()) == sorted(given.collect())
+    assert pairs.count() == 4
+
+
 def test_intersections_from_intersection(spark, grid):
     """core.py:190-269 — two pure projections of the overlay output."""
     square = extract_features(pages_df(spark, "square"))

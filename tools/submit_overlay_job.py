@@ -19,6 +19,16 @@ one JSON line with the per-partition metrics.
 No SparkSession is created at import time and the package is imported
 lazily inside main() so ``--py-files`` distribution works on executors
 that only see the zip.
+
+This path keeps Spark's stock Python workers (``pyspark.daemon`` with
+``pyspark.zip`` on the path), not the ``pandarus_workerd`` daemon that
+``build_session`` selects: the daemon starts before ``--py-files``
+archives reach a worker's ``sys.path``, so a daemon module shipped in
+the zip could not be imported, and ``spark.python.daemon.module`` is a
+static conf that ``apply_engine_confs`` cannot set on a running
+session anyway.  A cluster whose workers can import the repo root may
+pass ``--conf spark.python.daemon.module=pandarus_workerd`` to
+spark-submit.
 """
 
 from __future__ import annotations
