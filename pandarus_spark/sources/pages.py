@@ -114,21 +114,23 @@ def _geo_json(geometry: dict) -> str:
     return json.dumps(geometry, default=conv, sort_keys=True, separators=(",", ":"))
 
 
+def _page_row(dataset: str, idx: int, label, geometry: dict) -> tuple:
+    """One synthetic crawl page (url, warc_ts, html, text, lang) whose
+    text embeds ``geometry`` and its identifying ``label``."""
+    url = f"https://example.test/{dataset}/{idx}"
+    label_json = json.dumps(label, separators=(",", ":"))
+    text = (f"Synthetic crawl page for dataset {dataset}, feature {idx}.\n"
+            f"NAME:{label_json}\n"
+            f"{GEO_MARK}{_geo_json(geometry)}\n")
+    html = ("<html><head><title>" + url + "</title></head><body><pre>"
+            + text + "</pre></body></html>").encode("utf-8")
+    return url, _EPOCH + _dt.timedelta(seconds=idx), html, text, "en"
+
+
 def page_rows(dataset: str, features: list[dict]) -> list[tuple]:
     """Materialize fixture features as (url, warc_ts, html, text, lang)."""
-    rows = []
-    for idx, feat in enumerate(features):
-        url = f"https://example.test/{dataset}/{idx}"
-        ts = _EPOCH + _dt.timedelta(seconds=idx)
-        name = feat["name"]
-        label_json = json.dumps(name, separators=(",", ":"))
-        text = (f"Synthetic crawl page for dataset {dataset}, feature {idx}.\n"
-                f"NAME:{label_json}\n"
-                f"{GEO_MARK}{_geo_json(feat['geometry'])}\n")
-        html = ("<html><head><title>" + url + "</title></head><body><pre>"
-                + text + "</pre></body></html>").encode("utf-8")
-        rows.append((url, ts, html, text, "en"))
-    return rows
+    return [_page_row(dataset, idx, feat["name"], feat["geometry"])
+            for idx, feat in enumerate(features)]
 
 
 def extract_text(html: bytes) -> str:
@@ -161,9 +163,7 @@ def _np_geometry(g: dict) -> dict:
     if t == "GeometryCollection":
         return {"type": t, "geometries": [_np_geometry(x) for x in g["geometries"]]}
     c = g["coordinates"]
-    if t == "Point":
-        return {"type": t, "coordinates": np.asarray(c, dtype=np.float64)}
-    if t in ("LineString", "MultiPoint"):
+    if t in ("Point", "LineString", "MultiPoint"):
         return {"type": t, "coordinates": np.asarray(c, dtype=np.float64)}
     if t in ("Polygon", "MultiLineString"):
         return {"type": t, "coordinates": [np.asarray(r, dtype=np.float64) for r in c]}
@@ -189,44 +189,37 @@ def doc_box(doc_id: int, probe: bool) -> tuple[float, float, float, float]:
     return (x, y, x + CELL_DEG, y + CELL_DEG)
 
 
+def _doc_page_row(role: str, doc_id: int) -> tuple:
+    """The synthetic page of one document: its doc_id's grid box."""
+    return _page_row(role, doc_id, f"{role} {doc_id}",
+                     _box(*doc_box(doc_id, role == "probe")))
+
+
+def _doc_ids(docs, partitions: int | None):
+    """The documents' ids, spread over ``partitions`` (default: the
+    cluster's parallelism): page synthesis and extraction are CPU-bound
+    Python, and a small parquet reads as one split."""
+    ids = docs.select("doc_id")
+    if partitions is None:
+        partitions = docs.sparkSession.sparkContext.defaultParallelism
+    if ids.rdd.getNumPartitions() < partitions:
+        ids = ids.repartition(partitions)
+    return ids
+
+
 def pages_from_documents(docs, role: str = "base", partitions: int | None = None):
     """documents table → pages table (url, warc_ts, html, text, lang):
     each document becomes one synthetic crawl page embedding the
     deterministic grid geometry of its doc_id.  Fully distributed
     (mapInPandas) — this is how sf-scaled spatial benchmarks derive
     their input from the driver's parquet without external data."""
-    probe = role == "probe"
-
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": [], "text": [], "lang": []}
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                x0, y0, x1, y1 = doc_box(d, probe)
-                geom = _box(x0, y0, x1, y1)
-                url = f"https://example.test/{role}/{d}"
-                label_json = json.dumps(f"{role} {d}", separators=(",", ":"))
-                text = (f"Synthetic crawl page for dataset {role}, feature {d}.\n"
-                        f"NAME:{label_json}\n"
-                        f"{GEO_MARK}{_geo_json(geom)}\n")
-                html = ("<html><head><title>" + url + "</title></head><body><pre>"
-                        + text + "</pre></body></html>").encode("utf-8")
-                rows["url"].append(url)
-                rows["warc_ts"].append(_EPOCH + _dt.timedelta(seconds=d))
-                rows["html"].append(html)
-                rows["text"].append(text)
-                rows["lang"].append("en")
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame([_doc_page_row(role, int(d)) for d in pdf["doc_id"].tolist()],
+                               columns=PAGES_COLUMNS)
 
-    ids = docs.select("doc_id")
-    if partitions is None:
-        # page synthesis + downstream extraction are CPU-bound Python;
-        # a small parquet reads as 1 split — spread over the cluster
-        partitions = docs.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < partitions:
-        ids = ids.repartition(partitions)
-    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return _doc_ids(docs, partitions).mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -238,6 +231,11 @@ PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, lang s
 FEATURES_SCHEMA = ("feature_id bigint, label string, geom_wkb binary, kind string, "
                    "minx double, miny double, maxx double, maxy double, is_rect boolean")
 
+# derived from the schemas so the validated on-ramp and the batch
+# builders can't drift from the schema the synthetic sources emit
+PAGES_COLUMNS = tuple(f.split(" ")[0] for f in PAGES_SCHEMA.split(", "))
+FEATURES_COLUMNS = tuple(f.split(" ")[0] for f in FEATURES_SCHEMA.split(", "))
+
 
 def pages_df(spark, dataset: str, features: list[dict] | None = None, partitions: int | None = None):
     """Synthetic pages table as a Spark DataFrame."""
@@ -246,6 +244,23 @@ def pages_df(spark, dataset: str, features: list[dict] | None = None, partitions
     if partitions:
         df = df.repartition(partitions)
     return df
+
+
+def _feature_row(url: str, html: bytes, text: str, allow_collections: bool = False) -> tuple:
+    """One page -> one FEATURES_SCHEMA row: run the deterministic
+    extractor on ``html``, assert it is byte-identical to the stored
+    ``text``, parse the embedded feature and emit it normalized."""
+    extracted = extract_text(html)
+    if extracted != text:
+        raise ValueError(f"extraction drift for {url!r}: not byte-identical")
+    label, geometry = parse_feature_text(extracted)
+    if geometry["type"] == "GeometryCollection" and not allow_collections:
+        raise ValueError(f"GeometryCollection not allowed as map feature ({url})")
+    geometry = G.clean_geom(geometry)
+    mnx, mny, mxx, mxy = G.bounds(geometry)
+    return (_stable_id(url), label if isinstance(label, str) else json.dumps(label),
+            G.wkb_dumps(geometry), G.geom_kind(geometry), mnx, mny, mxx, mxy,
+            G.is_axis_rect(geometry))
 
 
 def extract_features(pages, validate_unique: bool = True, allow_collections: bool = False):
@@ -268,26 +283,10 @@ def extract_features(pages, validate_unique: bool = True, allow_collections: boo
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            out = {k: [] for k in ("feature_id", "label", "geom_wkb", "kind",
-                                   "minx", "miny", "maxx", "maxy", "is_rect")}
-            for url, html, text in zip(pdf["url"].tolist(), pdf["html"].tolist(),
-                                       pdf["text"].tolist()):
-                extracted = extract_text(bytes(html))
-                if extracted != text:
-                    raise ValueError(f"extraction drift for {url!r}: not byte-identical")
-                label, geometry = parse_feature_text(extracted)
-                if geometry["type"] == "GeometryCollection" and not allow_collections:
-                    raise ValueError(f"GeometryCollection not allowed as map feature ({url})")
-                geometry = G.clean_geom(geometry)
-                mnx, mny, mxx, mxy = G.bounds(geometry)
-                out["feature_id"].append(_stable_id(url))
-                out["label"].append(label if isinstance(label, str) else json.dumps(label))
-                out["geom_wkb"].append(G.wkb_dumps(geometry))
-                out["kind"].append(G.geom_kind(geometry))
-                out["minx"].append(mnx); out["miny"].append(mny)
-                out["maxx"].append(mxx); out["maxy"].append(mxy)
-                out["is_rect"].append(G.is_axis_rect(geometry))
-            yield pd.DataFrame(out)
+            rows = [_feature_row(url, bytes(html), text, allow_collections)
+                    for url, html, text in zip(pdf["url"].tolist(), pdf["html"].tolist(),
+                                               pdf["text"].tolist())]
+            yield pd.DataFrame(rows, columns=FEATURES_COLUMNS)
 
     feats = pages.mapInPandas(gen, schema=FEATURES_SCHEMA)
     if validate_unique:
@@ -309,57 +308,22 @@ def features_from_documents(docs, role: str = "base", partitions: int | None = N
     same synthesis and extraction code per row; asserted in
     tests/test_pages.py), but with half the Arrow traffic — the shape an
     ingest of 10^12 pages needs."""
-    import datetime as _dt2  # noqa: F401  (kept local like the page gen)
-
     def gen(batches):
         import pandas as pd
-        probe = role == "probe"
         for pdf in batches:
-            out = {k: [] for k in ("feature_id", "label", "geom_wkb", "kind",
-                                   "minx", "miny", "maxx", "maxy", "is_rect")}
-            for doc_id in pdf["doc_id"].tolist():
-                d = int(doc_id)
-                x0, y0, x1, y1 = doc_box(d, probe)
-                geom = _box(x0, y0, x1, y1)
-                url = f"https://example.test/{role}/{d}"
-                label_json = json.dumps(f"{role} {d}", separators=(",", ":"))
-                text = (f"Synthetic crawl page for dataset {role}, feature {d}.\n"
-                        f"NAME:{label_json}\n"
-                        f"{GEO_MARK}{_geo_json(geom)}\n")
-                html = ("<html><head><title>" + url + "</title></head><body><pre>"
-                        + text + "</pre></body></html>").encode("utf-8")
-                extracted = extract_text(html)
-                if extracted != text:
-                    raise ValueError(f"extraction drift for {url!r}: not byte-identical")
-                label, geometry = parse_feature_text(extracted)
-                geometry = G.clean_geom(geometry)
-                mnx, mny, mxx, mxy = G.bounds(geometry)
-                out["feature_id"].append(_stable_id(url))
-                out["label"].append(label if isinstance(label, str) else json.dumps(label))
-                out["geom_wkb"].append(G.wkb_dumps(geometry))
-                out["kind"].append(G.geom_kind(geometry))
-                out["minx"].append(mnx); out["miny"].append(mny)
-                out["maxx"].append(mxx); out["maxy"].append(mxy)
-                out["is_rect"].append(G.is_axis_rect(geometry))
-            yield pd.DataFrame(out)
+            rows = []
+            for d in pdf["doc_id"].tolist():
+                url, _, html, text, _ = _doc_page_row(role, int(d))
+                rows.append(_feature_row(url, html, text))
+            yield pd.DataFrame(rows, columns=FEATURES_COLUMNS)
 
-    ids = docs.select("doc_id")
-    if partitions is None:
-        partitions = docs.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < partitions:
-        ids = ids.repartition(partitions)
-    return ids.mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return _doc_ids(docs, partitions).mapInPandas(gen, schema=FEATURES_SCHEMA)
 
 
 def _stable_id(url: str) -> int:
     """Deterministic 63-bit id from the url (no global sort needed)."""
     import hashlib
     return int.from_bytes(hashlib.sha256(url.encode()).digest()[:8], "big") & 0x7FFFFFFFFFFFFFFF
-
-
-# derived from PAGES_SCHEMA so the validated on-ramp can't drift from
-# the schema the synthetic sources emit
-PAGES_COLUMNS = tuple(f.split(" ")[0] for f in PAGES_SCHEMA.split(", "))
 
 
 def iceberg_available(spark) -> bool:

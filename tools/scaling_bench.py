@@ -5,9 +5,8 @@ scaling efficiency (BASELINE.json north_rule; the sandbox proxy for a
 the real-multi-executor variant).
 
 Usage: python tools/scaling_bench.py [--n 800000] [--low 2] [--high 8]
-       [--job overlay_scale]
 
-Runs each leg as a fresh ``bench.py --job <job>`` subprocess
+Runs each leg as a fresh ``bench.py --job overlay_scale`` subprocess
 (own JVM, own SPARK_GRAFT_CPUS) and prints one JSON line. Run when
 ``uptime`` load is low — this VM's external noise is 3-4x (BASELINE.md).
 """
@@ -21,12 +20,13 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+JOB = "overlay_scale"
 
 
-def run_leg(cpus: int, n: int, job: str = "overlay_scale") -> dict:
+def run_leg(cpus: int, n: int) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py"), "--job", job,
+        [sys.executable, os.path.join(HERE, "bench.py"), "--job", JOB,
          "--n", str(n)],
         env=env, capture_output=True, text=True, check=True)
     return json.loads(out.stdout.strip().splitlines()[-1])
@@ -37,30 +37,30 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=800_000)
     ap.add_argument("--low", type=int, default=2)
     ap.add_argument("--high", type=int, default=8)
-    ap.add_argument("--job", default="overlay_scale")
     args = ap.parse_args()
-    assert args.high == 4 * args.low, "north rule compares N vs 4N"
+    if args.high != 4 * args.low:
+        ap.error("the north rule compares N vs 4N: --high must be 4 x --low")
 
-    lo = run_leg(args.low, args.n, args.job)
-    hi = run_leg(args.high, args.n, args.job)
+    lo = run_leg(args.low, args.n)
+    hi = run_leg(args.high, args.n)
     eff = (lo["value"] / hi["value"]) / (args.high / args.low)
     payload = {
         "metric": "scaling_efficiency_N_to_4N",
         "value": round(eff, 3),
         "unit": "ratio",
-        "queries": {f"{args.job}_local[{args.low}]": lo["value"],
-                    f"{args.job}_local[{args.high}]": hi["value"]},
+        "queries": {f"{JOB}_local[{args.low}]": lo["value"],
+                    f"{JOB}_local[{args.high}]": hi["value"]},
         "sf": args.n,
         "per_query_low": lo.get("queries"),
         "per_query_high": hi.get("queries"),
         "steal_low": lo.get("host_steal_pct"),
         "steal_high": hi.get("host_steal_pct"),
         "passes_north_rule": eff >= 0.8,
+        "throughput_low": lo["throughput_rows_per_sec"],
+        "throughput_high": hi["throughput_rows_per_sec"],
+        "phases_low": lo["phases"],
+        "phases_high": hi["phases"],
     }
-    if "throughput_rows_per_sec" in lo:
-        payload["throughput_low"] = lo["throughput_rows_per_sec"]
-        payload["throughput_high"] = hi["throughput_rows_per_sec"]
-        payload["phases_low"], payload["phases_high"] = lo["phases"], hi["phases"]
     print(json.dumps(payload))
 
 
