@@ -2093,152 +2093,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                 threshold=0.4)
 
     # DICT ORDER IS LOAD-BEARING: the driver's correctness gate runs
-    # exactly the FIRST 50 entries (r4 verdict finding #1).  Entries
-    # 1..50 are therefore (a) the 26 gates the r4 driver never saw,
-    # (b) this round's new gates, (c) gates whose OUTPUT changed since
-    # their last driver proof (integer-only tie-break rewrite), and
-    # (d) long-proven sentinels + a diverse proven core.  Gates with
-    # two rounds of driver evidence and unchanged output sit past 50
-    # (they remain judge-checked via tools/check_oracles.py, which
-    # runs all of them).
+    # exactly the FIRST 50 entries; tools/check_oracles.py runs all.
     return {
-        # (a) driver-unproven as of r4 — original relative order
-        "training_corpus": q_training_corpus,
-        "top_tokens_docs": q_top_tokens_docs,
-        "tf_idf_docs": q_tf_idf_docs,
-        "events_asof": q_events_asof,
-        "events_interval_join": q_events_interval_join,
-        "events_session_rows": q_events_session_rows,
-        "stream_sessions": q_stream_sessions,
-        "url_normalize_docs": q_url_normalize_docs,
-        "domain_stats_docs": q_domain_stats_docs,
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "chunk_tokens_docs": q_chunk_tokens_docs,
-        "pii_stats_docs": q_pii_stats_docs,
-        "source_profile_docs": q_source_profile_docs,
-        "flagship_overlay": q_flagship_overlay,
-        "shard_corpus_docs": q_shard_corpus_docs,
-        "areal_interp_overlay": q_areal_interp,
-        "overlay_partition_metrics": q_overlay_partition_metrics,
-        "dup_span_docs": q_dup_span_docs,
-        "bloom_decontam_docs": q_bloom_decontam_docs,
-        "embed_quantize_embeddings": q_embed_quantize,
-        "stream_decontam_docs": q_stream_decontam_docs,
-        "pack_sequences_docs": q_pack_sequences_docs,
-        "gopher_quality_docs": q_gopher_quality_docs,
-        "postings_docs": q_postings_docs,
-        "lm_dataset_docs": q_lm_dataset_docs,
-        "remove_dup_spans_docs": q_remove_dup_spans_docs,
-        # (b) new this round
-        "stream_asof_events": q_stream_asof_events,
-        "stream_simhash_docs": q_stream_simhash_docs,
-        "dup_span_intervals_docs": q_dup_span_intervals_docs,
-        # (c) output changed since last driver proof (r4 verdict #2:
-        # integer-only outputs where round(x,6) can land on .5 ties)
+        # (a) gates no driver round (CORRECTNESS_r01-r05) recorded green
         "unigram_logprob_docs": q_unigram_logprob_docs,
-        "lsh_recall_docs": q_lsh_recall_docs,
-        "ann_recall_embeddings": q_ann_recall_embeddings,
-        # (d) the three family sentinels (intersect_grid_square,
-        # zonal_coverage, exact_dedup_docs — all driver-green in r3
-        # AND r4 with unchanged output) moved just past the window:
-        # every one of the 50 slots goes to a gate the driver has
-        # never proven (or whose output changed this round)
-        # (e) round-5 continuation gates — never driver-proven, so they
-        # take the window slots; the 14 displaced sentinels below were all
-        # driver-green in r4 (and most in r3) with unchanged output.
-        "dsir_weights_docs": q_dsir_weights_docs,
-        "repetition_stats_docs": q_repetition_stats_docs,
-        "mix_select_docs": q_mix_select_docs,
-        "semantic_dedup_embeddings": q_semantic_dedup_embeddings,
-        "bigram_logprob_docs": q_bigram_logprob_docs,
-        "trigram_backoff_docs": q_trigram_backoff_docs,
-        "ppjoin_docs": q_ppjoin_docs,
-        "label_prop_docs": q_label_prop_docs,
-        "zorder_docs": q_zorder_docs,
-        "dissolve_grid": q_dissolve_grid,
-        "bpe_merges_docs": q_bpe_merges_docs,
-        "bpe_tokenize_docs": q_bpe_tokenize_docs,
-        "dissolve_lines": q_dissolve_lines,
-        "dissolve_points": q_dissolve_points,
-        "centroids_grid": q_centroids_grid,
-        "simplify_docs": q_simplify_docs,
-        "hull_points": q_hull_points,
-        "focal_raster": q_focal_raster,
-        # mix_allocation (three sweeps judge-exact; its sibling
-        # mix_select stays in-window on the same fixture) and
-        # pagerank (three rounds judge-exact, and the composed
-        # domain_rank gate exercises it end-to-end) yields its slot
-        # to the hull gate
         "pagerank_docs": q_pagerank_docs,
         "mix_allocation_docs": q_mix_allocation_docs,
-        # hll_registers (three rounds judge-exact; its whole family —
-        # estimate, by-lang, streaming — already sits past the window)
-        # yields its slot to the simplify gate
         "hll_registers_docs": q_hll_registers_docs,
-        # spatial_clusters (two rounds judge-exact, same eps-cluster
-        # family as the driver-proven dup-cluster gates) yields its
-        # slot to the centroids gate;
         "spatial_clusters_points": q_spatial_clusters_points,
-        # hll_estimate (derived from in-window hll_registers) and
-        # blocklist_filter (three rounds judge-exact, same URL fixture
-        # family as in-window url_normalize/domain_stats) yield their
-        # slots to the dissolve line/point gates
         "hll_estimate_docs": q_hll_estimate_docs,
         "blocklist_filter_docs": q_blocklist_filter_docs,
-        "intersect_grid_square": q_intersect_grid_square,
-        "zonal_coverage": q_zonal_coverage,
-        "exact_dedup_docs": q_exact_dedup_docs,
         "ccnet_split_docs": q_ccnet_split_docs,
         "pmi_collocations_docs": q_pmi_collocations_docs,
         "stream_tiles_docs": q_stream_tiles_docs,
-        # new in the first half of round 5 (hot-only postings salting) ->
-        # must sit inside the driver's first-50 proof window.
         "postings_hot_docs": q_postings_hot_docs,
-        # ---- position 51+: one-to-two rounds of driver evidence, unchanged
-        "remaining_outside": q_remaining_outside,
-        "ifi_projections": q_ifi_projections,
-        "tile_assignments": q_tile_assignments,
-        "tile_rollup_grid": q_tile_rollup_grid,
-        "knn_points_grid": q_knn_points_grid,
-        "distance_join_points": q_distance_join_points,
-        "zonal_weighted": q_zonal_weighted,
-        "vectorize_range": q_vectorize_range,
-        "round_raster_lineitem": q_round_raster_lineitem,
-        "minhash_sigs_docs": q_minhash_sigs_docs,
-        "lsh_pairs_docs": q_lsh_pairs_docs,
-        "simhash_neardup_docs": q_simhash_neardup_docs,
-        "line_dedup_docs": q_line_dedup_docs,
-        "decontam_docs": q_decontam_docs,
-        "dup_clusters_docs": q_dup_clusters_docs,
-        "clean_raster_range": q_clean_raster_range,
-        "intersect_outside_grid": q_intersect_outside_grid,
-        "intersect_lines_grid": q_intersect_lines_grid,
-        "intersect_points_grid": q_intersect_points_grid,
-        "zonal_centers": q_zonal_centers,
-        "zonal_coverage_tiles": q_zonal_coverage_tiles,
-        "ngram_jaccard_docs": q_ngram_jaccard_docs,
-        "simhash_docs": q_simhash_docs,
-        "line_dedup_doc_scope": q_line_dedup_doc_scope,
-        "clean_corpus": q_clean_corpus,
-        "pricing_summary": q_pricing_summary,
-        "top_customers": q_top_customers,
-        "events_hourly": q_events_hourly,
-        "events_sessions": q_events_sessions,
-        "events_props_agg": q_events_props_agg,
-        "text_stats_docs": q_text_stats_docs,
-        "cosine_topk_embeddings": q_cosine_topk_embeddings,
-        "cosine_neardup_embeddings": q_cosine_neardup_embeddings,
-        "cosine_neardup_bucketed": q_cosine_neardup_bucketed,
-        "ann_lsh_embeddings": q_ann_lsh_embeddings,
-        "ann_multiprobe_embeddings": q_ann_multiprobe_embeddings,
-        "ann_ivf_embeddings": q_ann_ivf_embeddings,
-        "ann_quantized_embeddings": q_ann_quantized_embeddings,
-        "multimodal_decode": q_multimodal_decode,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_audio": q_multimodal_audio,
-        "multimodal_real_codecs": q_multimodal_real_codecs,
-        "pages_table_roundtrip": q_pages_table_roundtrip,
         "hll_by_lang_docs": q_hll_by_lang_docs,
         "cms_counts_docs": q_cms_counts_docs,
         "bottomk_sample_docs": q_bottomk_sample_docs,
@@ -2261,19 +2129,113 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment_docs": q_containment_docs,
         "normalize_docs": q_normalize_docs,
         "domain_rank_docs": q_domain_rank_docs,
-        # geospatial capstone composition (pages → cover → counts →
-        # focal → top-k); like domain_rank it recombines gates already
-        # in the proof window, so it sits past the window itself
         "tile_heatmap_pages": q_tile_heatmap_pages,
-        # sibling of in-window focal_raster on the same fixture (the
-        # hll-family precedent for sitting past the window)
         "horn_raster": q_horn_raster,
-        # graph-family siblings of in-window label_prop (pagerank/hits/
-        # triangles precedent for sitting past the window)
         "clustering_coef_docs": q_clustering_coef_docs,
         "kcore_docs": q_kcore_docs,
         "map_algebra_raster": q_map_algebra_raster,
         "editdist_docs": q_editdist_docs,
+        # (b) gates whose code changed since their last driver proof
+        # (dedup signatures and cluster stop rule)
+        "minhash_sigs_docs": q_minhash_sigs_docs,
+        "lsh_pairs_docs": q_lsh_pairs_docs,
+        "dup_clusters_docs": q_dup_clusters_docs,
+        "clean_corpus": q_clean_corpus,
+        # (c) long-proven sentinels: one intersect, one zonal, one
+        # streaming gate
+        "intersect_grid_square": q_intersect_grid_square,
+        "zonal_coverage": q_zonal_coverage,
+        "stream_sessions": q_stream_sessions,
+        # (d) driver-proven gates with unchanged code, previous order
+        "training_corpus": q_training_corpus,
+        "top_tokens_docs": q_top_tokens_docs,
+        "tf_idf_docs": q_tf_idf_docs,
+        "events_asof": q_events_asof,
+        "events_interval_join": q_events_interval_join,
+        "events_session_rows": q_events_session_rows,
+        "url_normalize_docs": q_url_normalize_docs,
+        "domain_stats_docs": q_domain_stats_docs,
+        "stratified_sample_docs": q_stratified_sample_docs,
+        "chunk_tokens_docs": q_chunk_tokens_docs,
+        "pii_stats_docs": q_pii_stats_docs,
+        "source_profile_docs": q_source_profile_docs,
+        "flagship_overlay": q_flagship_overlay,
+        "shard_corpus_docs": q_shard_corpus_docs,
+        "areal_interp_overlay": q_areal_interp,
+        "overlay_partition_metrics": q_overlay_partition_metrics,
+        "dup_span_docs": q_dup_span_docs,
+        "bloom_decontam_docs": q_bloom_decontam_docs,
+        "embed_quantize_embeddings": q_embed_quantize,
+        "stream_decontam_docs": q_stream_decontam_docs,
+        "pack_sequences_docs": q_pack_sequences_docs,
+        "gopher_quality_docs": q_gopher_quality_docs,
+        "postings_docs": q_postings_docs,
+        "lm_dataset_docs": q_lm_dataset_docs,
+        "remove_dup_spans_docs": q_remove_dup_spans_docs,
+        "stream_asof_events": q_stream_asof_events,
+        "stream_simhash_docs": q_stream_simhash_docs,
+        "dup_span_intervals_docs": q_dup_span_intervals_docs,
+        "lsh_recall_docs": q_lsh_recall_docs,
+        "ann_recall_embeddings": q_ann_recall_embeddings,
+        "dsir_weights_docs": q_dsir_weights_docs,
+        "repetition_stats_docs": q_repetition_stats_docs,
+        "mix_select_docs": q_mix_select_docs,
+        "semantic_dedup_embeddings": q_semantic_dedup_embeddings,
+        "bigram_logprob_docs": q_bigram_logprob_docs,
+        "trigram_backoff_docs": q_trigram_backoff_docs,
+        "ppjoin_docs": q_ppjoin_docs,
+        "label_prop_docs": q_label_prop_docs,
+        "zorder_docs": q_zorder_docs,
+        "dissolve_grid": q_dissolve_grid,
+        "bpe_merges_docs": q_bpe_merges_docs,
+        "bpe_tokenize_docs": q_bpe_tokenize_docs,
+        "dissolve_lines": q_dissolve_lines,
+        "dissolve_points": q_dissolve_points,
+        "centroids_grid": q_centroids_grid,
+        "simplify_docs": q_simplify_docs,
+        "hull_points": q_hull_points,
+        "focal_raster": q_focal_raster,
+        "exact_dedup_docs": q_exact_dedup_docs,
+        "remaining_outside": q_remaining_outside,
+        "ifi_projections": q_ifi_projections,
+        "tile_assignments": q_tile_assignments,
+        "tile_rollup_grid": q_tile_rollup_grid,
+        "knn_points_grid": q_knn_points_grid,
+        "distance_join_points": q_distance_join_points,
+        "zonal_weighted": q_zonal_weighted,
+        "vectorize_range": q_vectorize_range,
+        "round_raster_lineitem": q_round_raster_lineitem,
+        "simhash_neardup_docs": q_simhash_neardup_docs,
+        "line_dedup_docs": q_line_dedup_docs,
+        "decontam_docs": q_decontam_docs,
+        "clean_raster_range": q_clean_raster_range,
+        "intersect_outside_grid": q_intersect_outside_grid,
+        "intersect_lines_grid": q_intersect_lines_grid,
+        "intersect_points_grid": q_intersect_points_grid,
+        "zonal_centers": q_zonal_centers,
+        "zonal_coverage_tiles": q_zonal_coverage_tiles,
+        "ngram_jaccard_docs": q_ngram_jaccard_docs,
+        "simhash_docs": q_simhash_docs,
+        "line_dedup_doc_scope": q_line_dedup_doc_scope,
+        "pricing_summary": q_pricing_summary,
+        "top_customers": q_top_customers,
+        "events_hourly": q_events_hourly,
+        "events_sessions": q_events_sessions,
+        "events_props_agg": q_events_props_agg,
+        "text_stats_docs": q_text_stats_docs,
+        "cosine_topk_embeddings": q_cosine_topk_embeddings,
+        "cosine_neardup_embeddings": q_cosine_neardup_embeddings,
+        "cosine_neardup_bucketed": q_cosine_neardup_bucketed,
+        "ann_lsh_embeddings": q_ann_lsh_embeddings,
+        "ann_multiprobe_embeddings": q_ann_multiprobe_embeddings,
+        "ann_ivf_embeddings": q_ann_ivf_embeddings,
+        "ann_quantized_embeddings": q_ann_quantized_embeddings,
+        "multimodal_decode": q_multimodal_decode,
+        "multimodal_resize": q_multimodal_resize,
+        "multimodal_frames": q_multimodal_frames,
+        "multimodal_audio": q_multimodal_audio,
+        "multimodal_real_codecs": q_multimodal_real_codecs,
+        "pages_table_roundtrip": q_pages_table_roundtrip,
     }
 
 def oracle_sql() -> dict[str, str]:

@@ -150,12 +150,6 @@ def sample_pred(key: Column, rate: float, salt: str = "sample") -> Column:
     return u < F.lit(threshold).cast("long")
 
 
-def sample_pred_sql(key_expr: str, rate: float, salt: str = "sample") -> str:
-    threshold = int(rate * _HASH_SPACE)
-    return (hash60_sql(f"'{salt}:' || CAST({key_expr} AS VARCHAR)")
-            + f" < {threshold}")
-
-
 def hash_sample(df: DataFrame, rate: float, key_col: str = "doc_id",
                 salt: str = "sample") -> DataFrame:
     """Keep ~``rate`` of rows, deterministically by ``key_col``.  A

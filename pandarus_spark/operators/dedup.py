@@ -334,23 +334,28 @@ def _signatures(df: DataFrame, id_col: str, sh_col: str,
                 num_hashes: int) -> DataFrame:
     """(id_col, sig array<long>) over a shingle-array column:
     sig[i] = min over shingles s of (A_i * h(s) + B_i) mod P, h =
-    md5-derived base hash mod P — pure Catalyst, no UDF.
+    md5-derived base hash mod P — pure Catalyst, no UDF; one output
+    row per input row (ids may repeat).
 
-    The base hash is computed ONCE per shingle in its own projection
-    (md5 is the expensive part; the num_hashes permutations are integer
-    arithmetic over the materialized hash array — the classic
-    one-hash+affine-permutations MinHash construction)."""
-    hashed = df.select(F.col(id_col),
-                       F.transform(F.col(sh_col),
-                                   lambda s: hash60(s) % MINHASH_P).alias("_hs"))
-
-    def perm(a: int, b: int):
-        # keep arity 1 — transform() binds extra params to the array index
-        return lambda h: (a * h + b) % MINHASH_P
-
-    sigs = F.array(*[F.array_min(F.transform(F.col("_hs"), perm(a, b)))
-                     for a, b in minhash_coeffs(num_hashes)])
-    return hashed.select(F.col(id_col), sigs.alias("sig"))
+    The base hash is computed ONCE per shingle (md5 is the expensive
+    part; the classic one-hash + affine-permutations construction).
+    The shingles are exploded and the num_hashes minima are one
+    groupBy aggregate, keyed per input row: higher-order-function
+    lambdas (``array_min(transform(...))``) run interpreted, outside
+    whole-stage codegen, while the aggregate's integer arithmetic is
+    codegen'd.  A null or empty shingle array explodes to one null
+    hash, so its entries stay null as with ``array_min``."""
+    # the row key is bound BEFORE the explode (in the same projection
+    # it would be evaluated once per shingle)
+    hashed = (df.select(F.col(id_col), F.col(sh_col),
+                        F.monotonically_increasing_id().alias("_row"))
+              .select(id_col, "_row", F.explode_outer(sh_col).alias("_s"))
+              .select(id_col, "_row", (hash60(F.col("_s")) % MINHASH_P).alias("_h")))
+    mins = [F.min((a * F.col("_h") + b) % MINHASH_P).alias(f"_m{i}")
+            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))]
+    return (hashed.groupBy("_row", id_col).agg(*mins)
+            .select(F.col(id_col),
+                    F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")))
 
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 16, k: int = 3,
@@ -665,10 +670,16 @@ def duplicate_clusters(pairs: DataFrame, universe: DataFrame | None = None,
     Algorithm: alternating large-star / small-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) — each
     round is two shuffles (groupBy min + join) of pure DataFrame ops,
-    converging in O(log n) rounds; near-dup clusters are shallow, so
-    2-3 rounds in practice.  ``localCheckpoint`` truncates lineage each
-    round so plans don't grow with iteration count — the standard
-    iterative-algorithm hygiene at cluster scale.
+    converging in O(log n) rounds.  ``localCheckpoint`` truncates
+    lineage each round so plans don't grow with iteration count — the
+    standard iterative-algorithm hygiene at cluster scale.
+
+    Stop rule: the rounds' fixpoint is a star forest — every edge
+    points a node at its component minimum.  After each round one
+    aggregate tests that directly (every edge source is a leaf), so no
+    confirming round is spent.  Shallow clusters, e.g. a clique of
+    near-dups, are stars after ONE round, and then
+    ``max_iterations=1`` suffices.
 
     ``universe`` (any DataFrame with ``id_col``) adds singleton
     clusters for ids that appear in no pair.
@@ -700,45 +711,33 @@ def duplicate_clusters(pairs: DataFrame, universe: DataFrame | None = None,
                .unionByName(s.select("u", F.col("m").alias("v"))))
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    def _fingerprint(df):
-        # order-insensitive edge-set fingerprint: one cheap aggregation
-        # instead of an exceptAll shuffle per round (edges are distinct,
-        # so equal (count, hash-sum) pairs identify the set up to a
-        # ~2^-64-per-round hash-sum collision — accepted odds for an
-        # iteration-control check)
-        h = F.xxhash64("u", "v")
-        # two bounded residues, not the raw 64-bit sum (ANSI overflow)
-        row = df.agg(F.count("*").alias("n"),
-                     F.sum(F.pmod(h, F.lit(1_000_000_007))).alias("h1"),
-                     F.sum(F.pmod(F.shiftright(h, 31), F.lit(998_244_353))).alias("h2")
-                     ).collect()[0]
-        return row["n"], row["h1"], row["h2"]
+    def _is_star_forest(df):
+        # small-star emits edges large→small; they form a star forest
+        # (each star a component, centred on its minimum) when every
+        # edge source is a leaf: one aggregate over the node degrees
+        deg = (df.select(F.col("u").alias("n"), F.lit(True).alias("src"))
+               .unionByName(df.select(F.col("v").alias("n"), F.lit(False).alias("src")))
+               .groupBy("n").agg(F.max("src").alias("src"), F.count("*").alias("deg")))
+        return deg.filter(F.col("src") & (F.col("deg") > 1)).isEmpty()
 
-    fp = None
-    converged = False
     for _ in range(max_iterations):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        # converged when every edge already points node→component-min:
-        # large-star + small-star is then the identity on the edge set
-        fp2 = _fingerprint(e)
-        if fp2 == fp:
-            converged = True
+        if _is_star_forest(e):
             break
-        fp = fp2
-    if not converged:
-        # round-2 (advisor): exhausting max_iterations without the
-        # fixpoint silently returned possibly under-merged clusters —
-        # surface it loudly; O(log n) convergence means hitting this
-        # indicates pathological input (or max_iterations set too low),
-        # not normal operation
+    else:
+        # returning before the fixpoint would under-merge clusters
+        # silently; O(log n) convergence means this is pathological
+        # input or a budget set too low
         raise RuntimeError(
             f"duplicate_clusters did not converge within {max_iterations} "
             "large-star/small-star rounds; clusters may be under-merged. "
             "Raise max_iterations (components converge in O(log n) rounds).")
 
-    members = _sym(e).groupBy("u").agg(F.min("v").alias("m"))
-    comp = (members.select(F.col("u").alias(id_col),
-                           F.least("m", "u").alias("cluster_id")))
+    # a star forest names each cluster directly: leaf → center, and
+    # every center is its own cluster id
+    comp = (e.select(F.col("u").alias(id_col), F.col("v").alias("cluster_id"))
+            .unionByName(e.select(F.col("v").alias(id_col),
+                                  F.col("v").alias("cluster_id")).distinct()))
     if universe is not None:
         comp = (universe.select(F.col(id_col).cast("long").alias(id_col)).distinct()
                 .join(comp, id_col, "left")

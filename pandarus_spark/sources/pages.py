@@ -78,29 +78,6 @@ FIXTURES = {
 }
 
 
-def scale_grid_features(n: int, cell_deg: float = 0.5, x0: float = -60.0, y0: float = -30.0) -> list[dict]:
-    """n×n grid for scale sweeps (FIXTURES.md §5 `scale-sweep`),
-    deterministic, no wall-clock."""
-    feats = []
-    for i in range(n):
-        for j in range(n):
-            feats.append({"name": f"cell {i * n + j}",
-                          "geometry": _box(x0 + i * cell_deg, y0 + j * cell_deg,
-                                           x0 + (i + 1) * cell_deg, y0 + (j + 1) * cell_deg)})
-    return feats
-
-
-def scale_overlay_features(n: int, cell_deg: float = 0.5, x0: float = -60.0, y0: float = -30.0) -> list[dict]:
-    """Offset boxes that each straddle 4 grid cells — the bench overlay."""
-    feats = []
-    for i in range(n):
-        for j in range(n):
-            feats.append({"name": f"probe {i * n + j}",
-                          "geometry": _box(x0 + (i + 0.5) * cell_deg, y0 + (j + 0.5) * cell_deg,
-                                           x0 + (i + 1.5) * cell_deg, y0 + (j + 1.5) * cell_deg)})
-    return feats
-
-
 # ---------------------------------------------------------------------------
 # Feature -> page row, html -> text extraction (byte-identical contract)
 # ---------------------------------------------------------------------------

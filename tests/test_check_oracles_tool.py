@@ -83,3 +83,19 @@ def test_arrow_fetch_surfaces_hugeint_as_float():
     assert not t.compare(["n"], [(6,)], cols, rows, exact=True)
     assert t.arrow_rows(con.execute(
         "SELECT 1 AS a, 'x' AS b WHERE false")) == (["a", "b"], [])
+
+
+def test_query_list_names_only_the_unknown_entries():
+    """The query argument is a comma-separated list; a name that is
+    not a queries() key stops the tool before any Spark session
+    starts, naming only the unknown entries."""
+    import os
+    import subprocess
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "check_oracles.py"),
+         "/nonexistent", "lsh_pairs_docs,no_such_gate,dup_clusters_docs"],
+        capture_output=True, text=True, timeout=120, cwd=root)
+    assert out.returncode != 0
+    assert "unknown query names: no_such_gate" in out.stderr
+    assert "comparison mode" not in out.stdout

@@ -130,6 +130,71 @@ def test_duplicate_clusters_nonconvergence_raises(spark):
     assert {r["cluster_id"] for r in out.collect()} == {0}
 
 
+def _random_cluster_graph(seed, n=200):
+    """Seeded edge list over a shuffled labelling of 0..n-1: a random
+    forest, a 72-node path, random cycles, duplicate and reversed
+    edges and self-loops; about 40 ids are in no edge."""
+    rng = np.random.default_rng(seed)
+    edges = [(i, int(rng.integers(0, i))) for i in range(1, 40) if rng.random() < 0.8]
+    edges += [(i, i + 1) for i in range(40, 111)]
+    edges += [tuple(int(x) for x in rng.integers(112, 160, size=2)) for _ in range(30)]
+    edges += edges[:10] + [(b, a) for a, b in edges[10:20]]
+    edges += [(int(k), int(k)) for k in rng.integers(0, n, size=5)]
+    label = rng.permutation(n)
+    return [(int(label[a]), int(label[b])) for a, b in edges]
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_duplicate_clusters_matches_union_find_on_random_graphs(spark, seed):
+    """Forests, a path of 72 nodes, duplicate and reversed edges and
+    self-loops: the clusters equal a driver union-find's, with the
+    universe's edge-free ids as singletons and, without a universe,
+    exactly the ids on a non-loop edge."""
+    n = 200
+    edges = _random_cluster_graph(seed, n)
+    expected = _brute_components(n, edges)
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    universe = spark.range(n).withColumnRenamed("id", "doc_id")
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in D.duplicate_clusters(pairs, universe=universe).collect()}
+    assert got == expected
+    rows = D.duplicate_clusters(pairs).collect()
+    linked = {x for a, b in edges if a != b for x in (a, b)}
+    assert len(rows) == len(linked)
+    assert {r["doc_id"]: r["cluster_id"] for r in rows} == {i: expected[i] for i in linked}
+
+
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_duplicate_clusters_clique_converges_in_one_round(spark):
+    """A complete 5-node group (dedup_lsh's cluster shape) is a star
+    after one large-star/small-star round: a one-round budget runs as
+    many jobs as the default budget, and fewer than a 4-path, which
+    needs two rounds."""
+    ids = [56, 3, 91, 17, 42]
+    clique = spark.createDataFrame([(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]],
+                                   "doc_a long, doc_b long")
+    path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "doc_a long, doc_b long")
+    one, one_round = _jobs_in_group(spark, "clique-one-round",
+                                    lambda: D.duplicate_clusters(clique, max_iterations=1))
+    _, default = _jobs_in_group(spark, "clique-default",
+                                lambda: D.duplicate_clusters(clique))
+    _, two_rounds = _jobs_in_group(spark, "path-two-rounds",
+                                   lambda: D.duplicate_clusters(path, max_iterations=2))
+    assert one_round == default < two_rounds
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.duplicate_clusters(path, max_iterations=1)
+    assert sorted(tuple(r) for r in one.collect()) == [(i, 3) for i in sorted(ids)]
+
+
 def test_cosine_topk_exact(spark):
     vecs = [(0, [1.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0])]
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
@@ -580,6 +645,33 @@ def test_minhash_lsh_join_exact_cross_dup_recall(spark, docs):
     out = {(r.left_id, r.right_id): r.jaccard
            for r in D.minhash_lsh_join(left, right, threshold=0.5).collect()}
     assert out[(0, 3)] == 1.0
+
+
+def test_minhash_keeps_one_signature_row_per_input_row(spark):
+    """Repeated ids keep one signature row per input row, in
+    minhash_signatures and on minhash_lsh_join's left side: id 7 holds
+    two texts, id 8 one text twice.  A signature keyed by the id
+    would merge id 7's rows into one elementwise minimum, which, with
+    one 16-row band, collides with at most one of the right side's
+    copies."""
+    a = "the quick brown fox jumps over the lazy dog"
+    b = "completely different text with unique words here"
+    right = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+    single = {r["doc_id"]: list(r["sig"]) for r in D.minhash_signatures(right).collect()}
+    docs = spark.createDataFrame([(7, a), (7, b), (8, a), (8, a)], "doc_id long, text string")
+    got = sorted((r["doc_id"], list(r["sig"])) for r in D.minhash_signatures(docs).collect())
+    assert got == sorted([(7, single[1]), (7, single[2]), (8, single[1]), (8, single[1])])
+    joined = D.minhash_lsh_join(docs.filter(F.col("doc_id") == 7), right,
+                                num_hashes=16, bands=1)
+    assert sorted(tuple(r) for r in joined.collect()) == [(7, 1, 1.0), (7, 2, 1.0)]
+
+
+def test_signatures_of_null_and_empty_shingle_arrays_are_null(spark):
+    arrs = spark.createDataFrame([(1, None), (2, []), (3, ["x y z"])],
+                                 "id long, sh array<string>")
+    sig = {r["id"]: r["sig"] for r in D._signatures(arrs, "id", "sh", 4).collect()}
+    assert sig[1] == sig[2] == [None] * 4
+    assert None not in sig[3]
 
 
 def test_minhash_lsh_rejects_bands_outside_num_hashes(spark, docs):

@@ -14,7 +14,7 @@ green on `unigram_logprob_docs` while the driver hashed it red
 tolerant compare as a DIAGNOSTIC (it tells you whether a red is a
 rounding ulp or a real value bug) — never as the acceptance gate.
 
-Usage: python tools/check_oracles.py [--tol] [sf_dir] [only_query_name]
+Usage: python tools/check_oracles.py [--tol] [sf_dir] [query_name[,query_name...]]
 """
 
 from __future__ import annotations
@@ -97,10 +97,14 @@ def main():
     exact = "--tol" not in args
     args = [a for a in args if a != "--tol"]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-    only = args[1] if len(args) > 1 else None
+    only = set(args[1].split(",")) if len(args) > 1 else None
 
     import __spark_entry__ as E
     from pandarus_spark.session import build_session
+
+    qs, oracles = E.queries(), E.oracle_sql()
+    if only and only - qs.keys():
+        sys.exit(f"unknown query names: {', '.join(sorted(only - qs.keys()))}")
 
     spark = build_session(app="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
@@ -108,12 +112,11 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracles = E.queries(), E.oracle_sql()
     mode = "exact(stringified, driver-parity)" if exact else "tol(1e-12 diagnostic)"
     print(f"comparison mode: {mode}")
     failures = []
     for name, fn in qs.items():
-        if only and name != only:
+        if only and name not in only:
             continue
         try:
             df = fn(spark, sf_dir)
