@@ -8,8 +8,8 @@ code with it.
 
 Layer map — the near-duplicate stages, one helper each:
 
-* shingle ids — :func:`word_shingles` (k-word strings, MinHash and
-  the exact joins) and the rolling-hash id builder
+* shingle ids — :func:`word_shingles` (distinct :func:`_word_grams`,
+  MinHash and the exact joins) and the rolling-hash id builder
   :func:`_shingle_id_fold` (positional 62-bit ids; distinct via
   :func:`shingle_id_arrays` / :func:`shingle_id_rows`, Column form
   :func:`word_shingle_ids`);
@@ -103,32 +103,48 @@ def words(col: Column) -> Column:
 WORDS_SQL = "string_split(lower(coalesce({t}, '')), ' ')"
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles, JVM-side via zip_with over shifted
-    array slices (cheaper codegen than the older per-index
-    transform/try_element_at chain — ~2x on the sf0.1 corpus, same
-    output bit-for-bit).
+def _word_grams(col: Column, k: int) -> Column:
+    """Every k-word gram of the text in order, repeats kept (k = 1: the
+    words) — the one gram stream of the text layer.  JVM-side via
+    zip_with over shifted array slices (cheaper codegen than the older
+    per-index transform/try_element_at chain — ~2x on the sf0.1
+    corpus, same output bit-for-bit).
 
-    Texts shorter than k words produce one truncated shingle from the
+    Texts shorter than k words produce one truncated gram from the
     available words: ``slice`` past the end yields an empty array,
     ``zip_with`` null-pads it, and ``concat_ws`` skips the nulls —
-    reproducing DuckDB's clamping list slice so the oracle stays
-    bit-identical (pinned by tests/test_edge_cases.py)."""
+    reproducing DuckDB's clamping list slice (:func:`_word_grams_sql`)
+    so the oracle stays bit-identical (pinned by
+    tests/test_kernel_parity.py and tests/test_edge_cases.py)."""
     w = words(col)
+    if k == 1:
+        return w
     m = F.greatest(F.size(w) - (k - 1), F.lit(1))
     sh = F.slice(w, 1, m)
     for j in range(1, k):
         sh = F.zip_with(sh, F.slice(w, 1 + j, m),
                         lambda a, b: F.concat_ws(" ", a, b))
-    return F.array_distinct(sh)
+    return sh
+
+
+def _word_grams_sql(text_expr: str, k: int) -> str:
+    """DuckDB rendering of :func:`_word_grams` (same order, same
+    clamping: the inclusive list slice stops at the last word)."""
+    w = WORDS_SQL.format(t=text_expr)
+    if k == 1:
+        return w
+    return (f"[array_to_string(({w})[i:i+{k - 1}],' ') "
+            f"for i in range(1, greatest(len({w})-{k - 2}, 2))]")
+
+
+def word_shingles(col: Column, k: int = 3) -> Column:
+    """Distinct k-word shingles: :func:`_word_grams` without repeats."""
+    return F.array_distinct(_word_grams(col, k))
 
 
 def shingles_sql(text_expr: str, k: int = 3) -> str:
-    """DuckDB rendering of :func:`word_shingles` (requires a lateral
-    alias ``w`` for the word list; returned as a full subexpression)."""
-    w = WORDS_SQL.format(t=text_expr)
-    return (f"list_distinct([array_to_string(({w})[i:i+{k - 1}],' ') "
-            f"for i in range(1, greatest(len({w})-{k - 2}, 2))])")
+    """DuckDB rendering of :func:`word_shingles`."""
+    return f"list_distinct({_word_grams_sql(text_expr, k)})"
 
 
 # --- rolling-hash shingle ids (round-4 design item: k>=5 shingles) ---------
@@ -420,6 +436,8 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 8, k: 
     output is exact given LSH recall; bands/rows tune the recall/cost
     point). Output: (doc_a, doc_b, jaccard).  ``bands`` must be in
     [1, num_hashes] (ValueError otherwise).
+    Precondition (not checked): ``id_col`` is unique.  A repeated id
+    merges its texts' shingles, giving repeated pairs and wrong Jaccards.
 
     Scale shape: exact duplicates are collapsed FIRST (one
     representative per distinct text), so the signature/bucket/verify
@@ -601,7 +619,9 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact all-pairs shingle Jaccard >= threshold via inverted-index
     self-join: explode shingles, join on shingle, count shared, divide
-    by union size. The small-scale oracle for the LSH path."""
+    by union size. The small-scale oracle for the LSH path.
+    Precondition (not checked): ``id_col`` is unique.  A repeated id
+    sums its texts' shingle sets, giving Jaccards above 1."""
     sh = docs.select(F.col(id_col), word_shingles(F.col(text_col), k).alias("sh"))
     sizes = sh.select(id_col, F.size("sh").alias("n"))
     inv = sh.select(id_col, F.explode("sh").alias("g"))

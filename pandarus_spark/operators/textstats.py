@@ -9,7 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .dedup import NZ_SQL, WORDS_SQL, hash60, nz, word_shingles, words
+from .dedup import (NZ_SQL, WORDS_SQL, _word_grams, _word_grams_sql, hash60,
+                    nz, word_shingles, words)
 
 # small marker sets per language for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -90,9 +91,7 @@ def dup_ngram_fraction(text: Column, n: int = 2) -> Column:
 
 
 def dup_ngram_fraction_sql(t: str, n: int = 2) -> str:
-    w = WORDS_SQL.format(t=t)
-    grams = (f"[array_to_string(({w})[i:i+{n - 1}],' ') "
-             f"for i in range(1, greatest(len({w})-{n - 2}, 2))]")
+    grams = _word_grams_sql(t, n)
     return (f"round(1.0 - len(list_distinct({grams})) * 1.0 "
             f"/ greatest(len({grams}), 1), 6)")
 
@@ -167,16 +166,15 @@ def tf_idf(docs: DataFrame, text_col: str = "text",
     diverge from the DuckDB oracle by a libm ulp (VERDICT.md r3 #1/#2),
     and the transcendental runs per vocab entry, not per (doc, token)."""
     from ..functions.detmath import det_ln_col
-    toks = docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("token"))
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
-    df_tab = tf.groupBy("token").agg(F.count("*").alias("df"))
+    tf = _gram_tf(docs, text_col, id_col, 1)
+    df_tab = tf.groupBy("g").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("__n"))  # 1-row scalar, broadcast below
     idf_tab = (df_tab.crossJoin(F.broadcast(n))
-               .select("token",
+               .select("g",
                        (det_ln_col("__n + 1", "df + 1") + 1).alias("__idf_raw")))
     idf_raw = F.col("__idf_raw")
-    return (tf.join(idf_tab, "token")
-            .select(id_col, "token", "tf",
+    return (tf.join(idf_tab, "g")
+            .select(id_col, F.col("g").alias("token"), "tf",
                     F.round(idf_raw, 6).alias("idf"),
                     F.round(F.col("tf") * idf_raw, 6).alias("tf_idf")))
 
@@ -184,18 +182,87 @@ def tf_idf(docs: DataFrame, text_col: str = "text",
 def tf_idf_sql(source: str = "documents", text_expr: str = "text",
                id_expr: str = "doc_id") -> str:
     from ..functions.detmath import det_ln_sql
-    w = WORDS_SQL.format(t=text_expr)
     idf_raw = f"({det_ln_sql('n.n + 1', 'dfr.df + 1', 'duckdb')} + 1)"
     return f"""
-WITH toks AS (SELECT {id_expr} AS doc_id, unnest({w}) AS token FROM {source}),
-tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token),
-dfr AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+WITH tf AS ({_gram_tf_sql(source, text_expr, id_expr, 1)}),
+dfr AS (SELECT g, count(*) AS df FROM tf GROUP BY g),
 n AS (SELECT count(*) AS n FROM {source}),
-idf_tab AS (SELECT dfr.token, {idf_raw} AS idf_raw FROM dfr, n)
-SELECT tf.doc_id, tf.token, tf.tf,
+idf_tab AS (SELECT dfr.g, {idf_raw} AS idf_raw FROM dfr, n)
+SELECT tf.doc_id, tf.g AS token, tf.tf,
        round(it.idf_raw, 6) AS idf,
        round(tf.tf * it.idf_raw, 6) AS tf_idf
-FROM tf JOIN idf_tab it USING (token)"""
+FROM tf JOIN idf_tab it USING (g)"""
+
+
+# ---------------------------------------------------------------------------
+# n-gram core: gram counts and the per-document micro-nat LM scorer
+# ---------------------------------------------------------------------------
+
+def _gram_tf(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(doc, g, tf): per-document counts of the k-gram stream
+    (``dedup._word_grams``; k = 1 is the token stream) — one partial-agg
+    shuffle keyed on (doc, gram)."""
+    return (docs.select(F.col(id_col),
+                        F.explode(_word_grams(F.col(text_col), k)).alias("g"))
+                .groupBy(id_col, "g").agg(F.count("*").alias("tf")))
+
+
+def _gram_tf_sql(source: str, text_expr: str, id_expr: str, k: int) -> str:
+    """DuckDB rendering of :func:`_gram_tf` (a SELECT, id as doc_id)."""
+    return (f"SELECT doc_id, g, count(*) AS tf FROM (SELECT {id_expr} AS doc_id, "
+            f"unnest({_word_grams_sql(text_expr, k)}) AS g FROM {source}) GROUP BY doc_id, g")
+
+
+def _gram_counts(docs: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(g, c): corpus counts of the k-gram stream — the token table
+    (k = 1) of the bigram LM, PMI and the spectrum; one partial-agg
+    shuffle keyed on the gram."""
+    return (docs.select(F.explode(_word_grams(F.col(text_col), k)).alias("g"))
+                .groupBy("g").agg(F.count("*").alias("c")))
+
+
+def _gram_counts_sql(source: str, text_expr: str, k: int) -> str:
+    """DuckDB rendering of :func:`_gram_counts` (a SELECT)."""
+    return (f"SELECT g, count(*) AS c FROM (SELECT unnest("
+            f"{_word_grams_sql(text_expr, k)}) AS g FROM {source}) GROUP BY g")
+
+
+def _micro_mean(nll_m: str, tf: str) -> Column:
+    """Aggregate: Σnll_m / Σtf rounded half-up to an int64,
+    ``(2·Σnll_m + Σtf) div (2·Σtf)`` — every LM's per-document mean.
+    The former ``round(Σnll_m/(Σtf·1e6), 6)`` landed on exact .5 ties
+    (integer ratios with even denominators make them common; one
+    round-4 gate document read 3400381.5 micro-nats exactly), where
+    Spark's BigDecimal HALF_UP and DuckDB's multiply+nearbyint diverge
+    by engine version (VERDICT.md r4 #1)."""
+    return F.expr(f"(2 * sum({nll_m}) + sum({tf})) DIV (2 * sum({tf}))")
+
+
+def _micro_mean_sql(nll_m: str, tf: str) -> str:
+    """DuckDB rendering of :func:`_micro_mean`.  ``sum(BIGINT)`` is
+    HUGEINT and ``//`` keeps it, hence the CAST: Arrow carries HUGEINT
+    as decimal128, which would not stringify like Spark's bigint."""
+    return f"CAST((2 * sum({nll_m}) + sum({tf})) // (2 * sum({tf})) AS BIGINT)"
+
+
+def _score_docs(tf: DataFrame, scored: DataFrame, keys: list[str],
+                id_col: str, n_name: str, mean_name: str) -> DataFrame:
+    """Per-document LM score: (doc, keys, tf) ⋈ (keys, __nll_m1) →
+    (doc, n_name = Σtf, mean_name = the micro-nat mean).  The ln ran
+    once per distinct gram in ``scored``; the join and the doc-keyed
+    agg move one row per (doc, distinct gram)."""
+    return (tf.join(scored, keys).groupBy(id_col)
+              .agg(F.sum("tf").alias(n_name),
+                   _micro_mean("tf * __nll_m1", "tf").alias(mean_name)))
+
+
+def _score_docs_sql(keys: list[str], n_name: str, mean_name: str) -> str:
+    """DuckDB rendering of :func:`_score_docs`: the final SELECT over the
+    caller's CTEs ``tf(doc_id, keys, tf)`` and ``sg(keys, nll_m1)``."""
+    return f"""
+SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS {n_name},
+       {_micro_mean_sql('tf.tf * sg.nll_m1', 'tf.tf')} AS {mean_name}
+FROM tf JOIN sg USING ({', '.join(keys)}) GROUP BY tf.doc_id"""
 
 
 # ---------------------------------------------------------------------------
@@ -250,38 +317,24 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     built from correctly-rounded arithmetic only — libm ``ln`` differs
     by 1 ulp across engines and flipped the micro-nat rounding of this
     very operator in the round-3 driver gate (VERDICT.md r3 #1);
-    (3) the output itself is INTEGER-only — the former
-    ``round(Σnll_m/(Σtf·1e6), 6)`` landed on exact .5 ties (integer
-    ratios with even denominators make ties structurally common;
-    r4 driver doc 62 = 3400381.5 micro-nats exactly) and Spark's
-    BigDecimal HALF_UP vs DuckDB's multiply+nearbyint tie-break
-    diverge by engine version (VERDICT.md r4 #1).  The mean is the
-    explicit integer tie-break ``(2·Σnll_m + Σtf) div (2·Σtf)`` —
-    round-half-up of Σnll_m/Σtf in pure int64, identical everywhere.
+    (3) the output itself is INTEGER-only: the mean is the explicit
+    integer tie-break ``(2·Σnll_m + Σtf) div (2·Σtf)``
+    (:func:`_micro_mean`).
 
     Plan shape: tf per (doc, token) is one partial-agg shuffle; the
     corpus frequency table derives from tf (vocabulary-sized, shuffle
     keyed on the token — broadcast-eligible at small vocab); the
     micro-nat ln is evaluated on the VOCAB-sized freq table, not per
-    (doc, token) row; the final doc-keyed agg moves one row per
-    (doc, distinct-token).  Every doc appears in the output
-    (empty/NULL text tokenizes to the single '' token, scored like
-    any other)."""
+    (doc, token) row; :func:`_score_docs` joins it back.  Every doc
+    appears in the output (empty/NULL text tokenizes to the single ''
+    token, scored like any other)."""
     from ..functions.detmath import det_ln_micro_col
-    from .dedup import words
-    toks = docs.select(F.col(id_col),
-                       F.explode(words(F.col(text_col))).alias("token"))
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
-    freq = tf.groupBy("token").agg(F.sum("tf").alias("c"))
+    tf = _gram_tf(docs, text_col, id_col, 1)
+    freq = tf.groupBy("g").agg(F.sum("tf").alias("c"))
     total = freq.agg(F.sum("c").alias("__t"))  # 1-row scalar
-    scored_tok = (freq.crossJoin(F.broadcast(total))
-                  .select("token", det_ln_micro_col("__t", "c").alias("__nll_m1")))
-    scored = (tf.join(scored_tok, "token")
-              .select(id_col, "tf", (F.col("tf") * F.col("__nll_m1")).alias("nll_m")))
-    return (scored.groupBy(id_col)
-            .agg(F.sum("tf").alias("n_tokens"),
-                 F.expr("(2 * sum(nll_m) + sum(tf)) DIV (2 * sum(tf))")
-                  .alias("nll_micro")))
+    scored = (freq.crossJoin(F.broadcast(total))
+              .select("g", det_ln_micro_col("__t", "c").alias("__nll_m1")))
+    return _score_docs(tf, scored, ["g"], id_col, "n_tokens", "nll_micro")
 
 
 def unigram_logprob_sql(source: str = "documents", text_expr: str = "text",
@@ -290,24 +343,15 @@ def unigram_logprob_sql(source: str = "documents", text_expr: str = "text",
     integer summation, the same correctly-rounded-arithmetic ln from
     ``functions/detmath.py``, and the same explicit integer
     round-half-up mean, so the output is bit-identical — no libm, no
-    float anywhere).  DuckDB ``sum(BIGINT)`` is HUGEINT and ``//`` on
-    HUGEINT stays HUGEINT, hence the final CASTs: Arrow carries HUGEINT
-    as decimal128, which would not stringify like Spark's bigint."""
+    float anywhere)."""
     from ..functions.detmath import det_ln_micro_sql
-    w = WORDS_SQL.format(t=text_expr)
     nll_m1 = det_ln_micro_sql("t.t", "freq.c", "duckdb")
     return f"""
-WITH toks AS (SELECT {id_expr} AS doc_id, unnest({w}) AS token FROM {source}),
-tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token),
-freq AS (SELECT token, sum(tf) AS c FROM tf GROUP BY token),
+WITH tf AS ({_gram_tf_sql(source, text_expr, id_expr, 1)}),
+freq AS (SELECT g, sum(tf) AS c FROM tf GROUP BY g),
 t AS (SELECT sum(c) AS t FROM freq),
-scored_tok AS (SELECT freq.token, {nll_m1} AS nll_m1 FROM freq, t),
-scored AS (
-  SELECT tf.doc_id, tf.tf, tf.tf * st.nll_m1 AS nll_m
-  FROM tf JOIN scored_tok st USING (token))
-SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-       CAST((2 * sum(nll_m) + sum(tf)) // (2 * sum(tf)) AS BIGINT) AS nll_micro
-FROM scored GROUP BY doc_id"""
+sg AS (SELECT freq.g, {nll_m1} AS nll_m1 FROM freq, t)""" + _score_docs_sql(
+        ["g"], "n_tokens", "nll_micro")
 
 # ---------------------------------------------------------------------------
 # Gopher-style quality rules (per-document filter flags)
@@ -711,11 +755,10 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     * ``top_2gram`` / ``top_2gram_count`` — the most frequent word
       2-gram (ties break to the lexicographically smallest) and its
       occurrence count (the "top n-gram fraction" rule's numerator
-      family).  Shingling follows the suite's clamping convention
-      (``dedup.word_shingles`` minus the distinct): a document with
-      fewer than 2 words yields one truncated gram, so every doc has
-      a top gram — but occurrences here are NON-distinct, since the
-      rule counts repeats.
+      family), over the suite's clamped gram stream
+      (``dedup._word_grams``): a document with fewer than 2 words
+      yields one truncated gram, so every doc has a top gram —
+      occurrences are NON-distinct, since the rule counts repeats.
 
     INTEGER-AND-STRING output only — ratios are left to the consumer
     (``dup_line_chars / total_chars``), so no ``round(float)`` can
@@ -738,19 +781,13 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
                       F.sum(F.col("c") - 1).alias("dup_lines"),
                       F.sum((F.col("c") - 1) * F.length("line"))
                        .alias("dup_line_chars")))
-    # non-distinct 2-gram occurrences: word_shingles' zip_with chain
-    # WITHOUT the final array_distinct (the rule counts repeats)
-    wrd = words(F.col(text_col))
-    m = F.greatest(F.size(wrd) - 1, F.lit(1))
-    sh = F.zip_with(F.slice(wrd, 1, m), F.slice(wrd, 2, m),
-                    lambda a, b: F.concat_ws(" ", a, b))
-    grams = (docs.select(F.col(id_col), F.explode(sh).alias("g"))
-                 .groupBy(id_col, "g").agg(F.count("*").alias("c")))
-    w = Window.partitionBy(id_col).orderBy(F.desc("c"), F.asc("g"))
+    # non-distinct 2-gram occurrences (the rule counts repeats)
+    grams = _gram_tf(docs, text_col, id_col, 2)
+    w = Window.partitionBy(id_col).orderBy(F.desc("tf"), F.asc("g"))
     top = (grams.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .select(F.col(id_col), F.col("g").alias("top_2gram"),
-                        F.col("c").alias("top_2gram_count")))
+                        F.col("tf").alias("top_2gram_count")))
     return (lines.join(top, id_col)
             .select(id_col, "n_lines", "dup_lines", "dup_line_chars",
                     "total_chars", "top_2gram", "top_2gram_count"))
@@ -758,11 +795,9 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
 
 def repetition_stats_sql(source: str = "documents", text_expr: str = "text",
                          id_expr: str = "doc_id") -> str:
-    """DuckDB rendering of :func:`repetition_stats` (same 2-gram
-    shingling as ``dedup.word_shingles``: space-joined adjacent word
-    pairs of the lowercase whitespace split)."""
+    """DuckDB rendering of :func:`repetition_stats` (the same
+    non-distinct 2-gram stream)."""
     t = NZ_SQL.format(t=text_expr)
-    w = WORDS_SQL.format(t=text_expr)
     return f"""
 WITH lc AS (
   SELECT {id_expr} AS doc_id, length({t}) AS total_chars,
@@ -775,17 +810,11 @@ lines AS (
          sum(c) AS n_lines, sum(c - 1) AS dup_lines,
          sum((c - 1) * length(line)) AS dup_line_chars
   FROM lg GROUP BY doc_id, total_chars),
-gr AS (
-  SELECT doc_id, g, count(*) AS c FROM (
-    SELECT {id_expr} AS doc_id,
-           unnest([array_to_string(({w})[i:i+1], ' ')
-                   for i in range(1, greatest(len({w}), 2))]) AS g
-    FROM {source})
-  GROUP BY doc_id, g),
+gr AS ({_gram_tf_sql(source, text_expr, id_expr, 2)}),
 top AS (
-  SELECT doc_id, g AS top_2gram, c AS top_2gram_count,
+  SELECT doc_id, g AS top_2gram, tf AS top_2gram_count,
          row_number() OVER (PARTITION BY doc_id
-                            ORDER BY c DESC, g ASC) AS rn
+                            ORDER BY tf DESC, g ASC) AS rn
   FROM gr)
 SELECT l.doc_id,
        CAST(n_lines AS BIGINT) AS n_lines,
@@ -832,32 +861,19 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     vocabulary-sized, joined on the bigram's left word and broadcast
     back.  The ln runs per distinct BIGRAM, never per occurrence."""
     from ..functions.detmath import det_ln_micro_col
-    from .dedup import words
 
-    w = words(F.col(text_col))
-    m = F.greatest(F.size(w) - 1, F.lit(1))
-    grams = F.zip_with(F.slice(w, 1, m), F.slice(w, 2, m),
-                       lambda a, b: F.concat_ws(" ", a, b))
-    tf2 = (docs.select(F.col(id_col), F.explode(grams).alias("g"))
-               .groupBy(id_col, "g").agg(F.count("*").alias("tf"))
-               .localCheckpoint(eager=False))
+    tf2 = _gram_tf(docs, text_col, id_col, 2).localCheckpoint(eager=False)
     freq2 = tf2.groupBy("g").agg(F.sum("tf").alias("c2"))
-    toks = docs.select(F.explode(w).alias("token"))
-    freq1 = toks.groupBy("token").agg(F.count("*").alias("c1"))
+    freq1 = _gram_counts(docs, text_col, 1)
     vocab = freq1.agg(F.count("*").alias("__v"))       # 1-row scalar
-    scored_g = (freq2
-                .withColumn("w1", F.split(F.col("g"), " ").getItem(0))
-                .join(freq1, F.col("w1") == F.col("token"))
-                .crossJoin(F.broadcast(vocab))
-                .select("g", det_ln_micro_col("c1 + __v", "c2 + 1")
-                        .alias("__nll_m1")))
-    scored = (tf2.join(scored_g, "g")
-              .select(id_col, "tf",
-                      (F.col("tf") * F.col("__nll_m1")).alias("nll_m")))
-    return (scored.groupBy(id_col)
-            .agg(F.sum("tf").alias("n_bigrams"),
-                 F.expr("(2 * sum(nll_m) + sum(tf)) DIV (2 * sum(tf))")
-                  .alias("nll2_micro")))
+    scored = (freq2
+              .withColumn("w1", F.split(F.col("g"), " ").getItem(0))
+              .join(freq1.select(F.col("g").alias("w1"),
+                                 F.col("c").alias("c1")), "w1")
+              .crossJoin(F.broadcast(vocab))
+              .select("g", det_ln_micro_col("c1 + __v", "c2 + 1")
+                      .alias("__nll_m1")))
+    return _score_docs(tf2, scored, ["g"], id_col, "n_bigrams", "nll2_micro")
 
 
 def bigram_logprob_sql(source: str = "documents", text_expr: str = "text",
@@ -867,31 +883,17 @@ def bigram_logprob_sql(source: str = "documents", text_expr: str = "text",
     round-half-up mean — bit-identical by construction)."""
     from ..functions.detmath import det_ln_micro_sql
 
-    w = WORDS_SQL.format(t=text_expr)
-    nll_m1 = det_ln_micro_sql("f1.c1 + v.v", "freq2.c2 + 1", "duckdb")
+    nll_m1 = det_ln_micro_sql("f1.c + v.v", "freq2.c2 + 1", "duckdb")
     return f"""
-WITH g2 AS (
-  SELECT doc_id, g, count(*) AS tf FROM (
-    SELECT {id_expr} AS doc_id,
-           unnest([array_to_string(({w})[i:i+1], ' ')
-                   for i in range(1, greatest(len({w}), 2))]) AS g
-    FROM {source})
-  GROUP BY doc_id, g),
-freq2 AS (SELECT g, sum(tf) AS c2 FROM g2 GROUP BY g),
-freq1 AS (SELECT unnest({w}) AS token FROM {source}),
-f1 AS (SELECT token, count(*) AS c1 FROM freq1 GROUP BY token),
+WITH tf AS ({_gram_tf_sql(source, text_expr, id_expr, 2)}),
+freq2 AS (SELECT g, sum(tf) AS c2 FROM tf GROUP BY g),
+f1 AS ({_gram_counts_sql(source, text_expr, 1)}),
 v AS (SELECT count(*) AS v FROM f1),
 sg AS (
   SELECT freq2.g, {nll_m1} AS nll_m1
   FROM freq2
-  JOIN f1 ON string_split(freq2.g, ' ')[1] = f1.token, v),
-scored AS (
-  SELECT g2.doc_id, g2.tf, g2.tf * sg.nll_m1 AS nll_m
-  FROM g2 JOIN sg ON g2.g = sg.g)
-SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-       CAST((2 * sum(nll_m) + sum(tf)) // (2 * sum(tf)) AS BIGINT)
-         AS nll2_micro
-FROM scored GROUP BY doc_id"""
+  JOIN f1 ON string_split(freq2.g, ' ')[1] = f1.g, v)""" + _score_docs_sql(
+        ["g"], "n_bigrams", "nll2_micro")
 
 # ---------------------------------------------------------------------------
 # CCNet-style quality split (per-language perplexity quantiles)
@@ -1014,23 +1016,18 @@ def pmi_collocations(docs: DataFrame, k: int = 20, min_count: int = 5,
 
     if k < 1 or min_count < 1:
         raise ValueError("k and min_count must be positive")
-    w = words(F.col(text_col))
-    m = F.greatest(F.size(w) - 1, F.lit(1))
-    sh = F.zip_with(F.slice(w, 1, m), F.slice(w, 2, m),
-                    lambda a, b: F.concat_ws(" ", a, b))
-    g2 = (docs.select(F.explode(sh).alias("gram"))
-              .groupBy("gram").agg(F.count("*").alias("c12"))
+    g2 = (_gram_counts(docs, text_col, 2)
+              .select(F.col("g").alias("gram"), F.col("c").alias("c12"))
               .filter(F.col("c12") >= min_count)
               .filter(F.col("gram").contains(" ")))
-    toks = docs.select(F.explode(w).alias("token"))
-    f1 = toks.groupBy("token").agg(F.count("*").alias("c1"))
-    n_tot = toks.agg(F.count("*").alias("__n"))
+    f1 = _gram_counts(docs, text_col, 1)
+    n_tot = docs.agg(F.sum(F.size(words(F.col(text_col)))).alias("__n"))
     scored = (g2.withColumn("w1", F.split(F.col("gram"), " ").getItem(0))
                 .withColumn("w2", F.split(F.col("gram"), " ").getItem(1))
-                .join(f1.select(F.col("token").alias("w1"),
-                                F.col("c1").alias("ca")), "w1")
-                .join(f1.select(F.col("token").alias("w2"),
-                                F.col("c1").alias("cb")), "w2")
+                .join(f1.select(F.col("g").alias("w1"),
+                                F.col("c").alias("ca")), "w1")
+                .join(f1.select(F.col("g").alias("w2"),
+                                F.col("c").alias("cb")), "w2")
                 .crossJoin(F.broadcast(n_tot))
                 .select("gram", "c12",
                         (det_ln_micro_col("c12", "1")
@@ -1053,24 +1050,19 @@ def pmi_collocations_sql(k: int = 20, min_count: int = 5,
     w = WORDS_SQL.format(t=text_expr)
     pmi = (f"({det_ln_micro_sql('c12', '1', 'duckdb')}"
            f" + {det_ln_micro_sql('(SELECT n FROM nt)', '1', 'duckdb')}"
-           f" - {det_ln_micro_sql('ca.c1', '1', 'duckdb')}"
-           f" - {det_ln_micro_sql('cb.c1', '1', 'duckdb')})")
+           f" - {det_ln_micro_sql('ca.c', '1', 'duckdb')}"
+           f" - {det_ln_micro_sql('cb.c', '1', 'duckdb')})")
     return f"""
 WITH g2 AS (
-  SELECT gram, count(*) AS c12 FROM (
-    SELECT unnest([array_to_string(({w})[i:i+1], ' ')
-                   for i in range(1, greatest(len({w}), 2))]) AS gram
-    FROM {source})
-  GROUP BY gram
-  HAVING count(*) >= {min_count} AND contains(gram, ' ')),
-toks AS (SELECT unnest({w}) AS token FROM {source}),
-f1 AS (SELECT token, count(*) AS c1 FROM toks GROUP BY token),
-nt AS (SELECT count(*) AS n FROM toks),
+  SELECT g AS gram, c AS c12 FROM ({_gram_counts_sql(source, text_expr, 2)})
+  WHERE c >= {min_count} AND contains(g, ' ')),
+f1 AS ({_gram_counts_sql(source, text_expr, 1)}),
+nt AS (SELECT sum(len({w})) AS n FROM {source}),
 scored AS (
   SELECT g2.gram, g2.c12, {pmi} AS pmi_micro
   FROM g2
-  JOIN f1 ca ON string_split(g2.gram, ' ')[1] = ca.token
-  JOIN f1 cb ON string_split(g2.gram, ' ')[2] = cb.token),
+  JOIN f1 ca ON string_split(g2.gram, ' ')[1] = ca.g
+  JOIN f1 cb ON string_split(g2.gram, ' ')[2] = cb.g),
 r AS (SELECT *, row_number() OVER (ORDER BY pmi_micro DESC, gram) AS rank
       FROM scored)
 SELECT gram, CAST(c12 AS BIGINT) AS c12, CAST(pmi_micro AS BIGINT) AS pmi_micro,
@@ -1206,10 +1198,8 @@ def token_spectrum(docs: DataFrame, text_col: str = "text") -> DataFrame:
     number of DISTINCT frequency values — O(sqrt(total tokens)) for
     any corpus (Σf over distinct f ≤ N) — so the spectrum itself is
     always tiny.  Integer counts only: bit-identical everywhere."""
-    from .dedup import words
-    toks = docs.select(F.explode(words(F.col(text_col))).alias("token"))
-    freq = toks.groupBy("token").agg(F.count("*").alias("freq"))
-    return (freq.groupBy("freq")
+    return (_gram_counts(docs, text_col, 1)
+                .groupBy(F.col("c").alias("freq"))
                 .agg(F.count("*").alias("n_types"))
                 .select(F.col("freq").cast("long"),
                         F.col("n_types").cast("long")))
@@ -1218,12 +1208,10 @@ def token_spectrum(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def token_spectrum_sql(source: str = "documents",
                        text_expr: str = "text") -> str:
     """DuckDB rendering of :func:`token_spectrum`."""
-    w = WORDS_SQL.format(t=text_expr)
     return f"""
-WITH toks AS (SELECT unnest({w}) AS token FROM {source}),
-freq AS (SELECT token, count(*) AS freq FROM toks GROUP BY token)
-SELECT CAST(freq AS BIGINT) AS freq, CAST(count(*) AS BIGINT) AS n_types
-FROM freq GROUP BY freq"""
+WITH freq AS ({_gram_counts_sql(source, text_expr, 1)})
+SELECT CAST(c AS BIGINT) AS freq, CAST(count(*) AS BIGINT) AS n_types
+FROM freq GROUP BY c"""
 
 # ---------------------------------------------------------------------------
 # Trigram LM with stupid backoff (Brants et al. 2007)
@@ -1274,7 +1262,6 @@ def trigram_backoff_logprob(docs: DataFrame, text_col: str = "text",
     beyond).  No window, no per-doc sort: positions come from an
     array ``transform`` (pure codegen), not a lag window."""
     from ..functions.detmath import det_ln_micro_sql
-    from .dedup import words
 
     w = words(F.col(text_col))
     sent = F.lit(_SENT)
@@ -1316,13 +1303,10 @@ def trigram_backoff_logprob(docs: DataFrame, text_col: str = "text",
         ELSE {det_ln_micro_sql('__n', 'c1', 'spark')}
              + (CASE WHEN {has1} THEN 2 WHEN {has2} THEN 1 ELSE 0 END)
                * {ln25}
-        END""").alias("__nll_m")
+        END""").alias("__nll_m1")
     strip = scored.select("w1", "w2", "w3", nll)
-    return (occ.join(strip, ["w1", "w2", "w3"])
-               .groupBy(id_col)
-               .agg(F.sum("tf").alias("n_tokens"),
-                    F.expr("(2 * sum(tf * __nll_m) + sum(tf)) "
-                           "DIV (2 * sum(tf))").alias("nll3_micro")))
+    return _score_docs(occ, strip, ["w1", "w2", "w3"], id_col,
+                       "n_tokens", "nll3_micro")
 
 
 def trigram_backoff_logprob_sql(source: str = "documents",
@@ -1345,18 +1329,18 @@ occ0 AS (
                    'w3': w[i]}}
                  for i in range(1, len(w) + 1)]) AS s
   FROM base),
-occ AS (
+tf AS (
   SELECT doc_id, s['w1'] AS w1, s['w2'] AS w2, s['w3'] AS w3,
          count(*) AS tf
   FROM occ0 GROUP BY doc_id, s['w1'], s['w2'], s['w3']),
-c3 AS (SELECT w1, w2, w3, sum(tf) AS c3 FROM occ
+c3 AS (SELECT w1, w2, w3, sum(tf) AS c3 FROM tf
        WHERE w1 <> chr(1) GROUP BY w1, w2, w3),
-c2 AS (SELECT w2, w3, sum(tf) AS c2 FROM occ
+c2 AS (SELECT w2, w3, sum(tf) AS c2 FROM tf
        WHERE w2 <> chr(1) GROUP BY w2, w3),
-c1 AS (SELECT w3, sum(tf) AS c1 FROM occ GROUP BY w3),
+c1 AS (SELECT w3, sum(tf) AS c1 FROM tf GROUP BY w3),
 ntot AS (SELECT sum(c1) AS n FROM c1),
-trip AS (SELECT DISTINCT w1, w2, w3 FROM occ),
-strip AS (
+trip AS (SELECT DISTINCT w1, w2, w3 FROM tf),
+sg AS (
   SELECT t.w1, t.w2, t.w3,
          CASE
            WHEN c3.c3 IS NOT NULL
@@ -1368,16 +1352,11 @@ strip AS (
            ELSE {det_ln_micro_sql('ntot.n', 'c1.c1', 'duckdb')}
                 + (CASE WHEN t.w1 <> chr(1) THEN 2
                         WHEN t.w2 <> chr(1) THEN 1 ELSE 0 END) * {ln25}
-         END AS nll_m
+         END AS nll_m1
   FROM trip t
   LEFT JOIN c3 ON t.w1 = c3.w1 AND t.w2 = c3.w2 AND t.w3 = c3.w3
   LEFT JOIN c2 ON t.w2 = c2.w2 AND t.w3 = c2.w3
   LEFT JOIN c2 ctx ON t.w1 = ctx.w2 AND t.w2 = ctx.w3
   LEFT JOIN c1 ON t.w3 = c1.w3
-  LEFT JOIN c1 cx ON t.w2 = cx.w3, ntot)
-SELECT occ.doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-       CAST((2 * sum(tf * nll_m) + sum(tf)) // (2 * sum(tf)) AS BIGINT)
-         AS nll3_micro
-FROM occ JOIN strip ON occ.w1 = strip.w1 AND occ.w2 = strip.w2
-                   AND occ.w3 = strip.w3
-GROUP BY occ.doc_id"""
+  LEFT JOIN c1 cx ON t.w2 = cx.w3, ntot)""" + _score_docs_sql(
+        ["w1", "w2", "w3"], "n_tokens", "nll3_micro")

@@ -6,11 +6,13 @@ reproduce that red on a synthetically perturbed oracle."""
 
 import importlib.util
 import sys
+from pathlib import Path
 
 
 def _load_tool():
     spec = importlib.util.spec_from_file_location(
-        "check_oracles", "/root/repo/tools/check_oracles.py")
+        "check_oracles",
+        Path(__file__).resolve().parents[1] / "tools" / "check_oracles.py")
     mod = importlib.util.module_from_spec(spec)
     sys.modules["check_oracles"] = mod
     spec.loader.exec_module(mod)

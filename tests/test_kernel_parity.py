@@ -73,6 +73,57 @@ def test_word_shingles_matches_duckdb(corpus):
         want = {i: sorted(sh) for i, sh in con.execute(
             f"SELECT doc_id, {D.shingles_sql('text', k)} FROM docs").fetchall()}
         assert got == want, f"k={k}"
+    # the non-distinct gram stream under the shingles, as ORDERED lists
+    for k in (1, 2, 3, 4):
+        got = {r["doc_id"]: list(r["g"]) for r in
+               df.select("doc_id", D._word_grams(F.col("text"), k).alias("g")).collect()}
+        want = {i: list(g) for i, g in con.execute(
+            f"SELECT doc_id, {D._word_grams_sql('text', k)} FROM docs").fetchall()}
+        assert got == want, f"grams k={k}"
+
+
+@pytest.mark.parametrize("name", [
+    "unigram_logprob", "bigram_logprob", "trigram_backoff_logprob",
+    "pmi_collocations", "repetition_stats"])
+def test_ngram_ops_match_duckdb(corpus, name):
+    """Each n-gram operator equals its ``*_sql`` twin row for row (PMI
+    at ``min_count=1``: no pair of the corpus reaches the default 5)."""
+    df, con = corpus
+    kw = {"min_count": 1} if name == "pmi_collocations" else {}
+    got_df = getattr(T, name)(df, **kw)
+    cur = con.execute(getattr(T, name + "_sql")(source="docs", **kw))
+    assert got_df.columns == [c[0] for c in cur.description]
+    want = sorted(cur.fetchall())
+    assert want
+    assert sorted(tuple(r) for r in got_df.collect()) == want
+
+
+def test_micro_mean_rounds_half_up_on_both_engines(spark):
+    """The LMs' integer mean, ``(2·Σnll_m + Σtf) div (2·Σtf)``, at exact
+    .5 ties and both neighbours of each: 2.5 -> 3 (half-even would give
+    2), and 3400381.5 (a round-4 gate document's tie) -> 3400382."""
+    rows = [(1, 1, 2), (1, 1, 3),                       # 5/2 = 2.5
+            (2, 1, 4), (2, 1, 3),                       # 7/2 = 3.5
+            (3, 3, 10), (3, 1, 0),                      # 10/4 = 2.5
+            (4, 3, 9), (4, 1, 0),                       # 9/4 = 2.25
+            (5, 3, 11), (5, 1, 0),                      # 11/4 = 2.75
+            (6, 2, 13601525), (6, 2, 0),                # 3400381.25
+            (7, 1, 6800763), (7, 1, 0),                 # 3400381.5
+            (8, 2, 13601526), (8, 2, 0),                # 3400381.5
+            (9, 3, 13601527), (9, 1, 0)]                # 3400381.75
+    want = {1: 3, 2: 4, 3: 3, 4: 2, 5: 3,
+            6: 3400381, 7: 3400382, 8: 3400382, 9: 3400382}
+    df = spark.createDataFrame(rows, "doc long, tf long, nll_m long")
+    got = {r["doc"]: r["m"] for r in df.groupBy("doc").agg(
+        T._micro_mean("nll_m", "tf").alias("m")).collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (doc BIGINT, tf BIGINT, nll_m BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    tbl = con.execute(f"SELECT doc, {T._micro_mean_sql('nll_m', 'tf')} AS m "
+                      "FROM t GROUP BY doc").fetch_arrow_table()
+    assert str(tbl.schema.field("m").type) == "int64"
+    assert dict(zip(*(c.to_pylist() for c in tbl.columns))) == want
 
 
 def test_dup_ngram_fraction_matches_duckdb(corpus):
