@@ -490,23 +490,20 @@ def _sketch_registers_sql() -> str:
 
 def _sketch_estimate_sql() -> str:
     from pandarus_spark.operators import sketch as K
-    toks = ("(SELECT unnest(string_split(lower(coalesce(text, '')), ' ')) "
-            "AS t FROM documents)")
+    toks = f"(SELECT unnest({D.WORDS_SQL.format(t='text')}) AS t FROM documents)"
     return K.hll_estimate_sql("t", 10, source=toks)
 
 
 def _sketch_by_lang_sql() -> str:
     from pandarus_spark.operators import sketch as K
-    toks = ("(SELECT lang, unnest(string_split(lower(coalesce(text, '')), "
-            "' ')) AS t FROM documents)")
+    toks = f"(SELECT lang, unnest({D.WORDS_SQL.format(t='text')}) AS t FROM documents)"
     sql = K.hll_estimate_by_sql("t", "lang", p=8, source=toks)
     return f"SELECT grp AS lang, m, n_zero, int_sum, estimate_micro FROM ({sql})"
 
 
 def _cms_counts_sql() -> str:
     from pandarus_spark.operators import sketch as K
-    toks = ("(SELECT doc_id, unnest(string_split(lower(coalesce(text, '')), "
-            "' ')) AS t FROM documents)")
+    toks = f"(SELECT doc_id, unnest({D.WORDS_SQL.format(t='text')}) AS t FROM documents)"
     probe = f"SELECT t AS k FROM {toks} p WHERE doc_id < 8"
     sql = K.cms_lookup_sql("t", probe, d=4, w=512, source=toks)
     return f"SELECT k AS t, est FROM ({sql})"

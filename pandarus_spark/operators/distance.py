@@ -17,9 +17,11 @@ Scale notes (the 100 TB shape): ONE shuffle on the cell key; the
 right-side fan-out is bounded (3 rows of cells, ``2·kx+1`` columns
 where kx grows only near the poles and is capped at a full ring);
 each surviving pair is produced exactly once because the left point's
-cell is unique — no post-join dedup shuffle.  Hot cells (dense urban
-clusters) are ordinary join skew: AQE's skew-join split handles the
-probe side, and the residual filter runs inside the join stage.
+cell is unique — no post-join dedup shuffle.  The right side's ring of
+cells is ``cells.neighbourhood_cells`` (the helper kNN's k-ring uses),
+and hot cells (dense urban clusters) go through ``cells._salted_join``,
+the one hot-key salt the overlay and the interval join share; the
+residual filter runs inside the join stage.
 
 Candidate superset proof sketch: if hav(l, r) ≤ radius then
 |Δlat|·M_PER_DEG ≤ radius (meridional component is a lower bound), so
@@ -38,7 +40,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..tiling.cells import LAT_SPAN, LON_SPAN, MAX_RES, RES_SHIFT, Y_SHIFT, point_index_sql
+from ..tiling import cells as C
 
 EARTH_R = 6371008.8                       # IUGG mean Earth radius, metres
 M_PER_DEG = math.pi / 180.0 * EARTH_R     # metres per degree of latitude
@@ -69,9 +71,9 @@ def radius_resolution(radius_m: float) -> int:
     ≥ ``radius_m``, so a vertical k-ring of 1 always suffices."""
     if radius_m <= 0:
         raise ValueError("radius_m must be positive")
-    height_m = LAT_SPAN * M_PER_DEG  # world height in metres
+    height_m = C.LAT_SPAN * M_PER_DEG  # world height in metres
     res = int(math.floor(math.log2(height_m / radius_m))) if radius_m < height_m else 0
-    return max(0, min(MAX_RES, res))
+    return max(0, min(C.MAX_RES, res))
 
 
 def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
@@ -89,34 +91,28 @@ def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
     denser cells; finer is rejected because the vertical ring of 1
     would miss neighbours).
 
-    ``salt_buckets`` > 1 enables hot-cell salting (r3 verdict #8, the
-    same scheme the overlay uses for join-output amplification AQE
-    cannot see: AQE splits oversized shuffle PARTITIONS, but a single
-    dense urban CELL is one key and lands in one task either way).
-    Cells whose LEFT row count reaches ``salt_threshold`` split the
-    left side across ``salt_buckets`` deterministic hash-salt keys and
-    replicate the right side's rows in that cell across all salts —
-    per-task work drops by ~salt_buckets on the hot cell; each
-    surviving pair is still produced exactly once (the left row keeps
-    ONE salt), so the result is salting-invariant (pinned by test)."""
+    ``salt_buckets`` > 1 enables hot-cell salting through
+    ``cells._salted_join`` (the overlay's scheme, for the join-output
+    amplification AQE cannot see): cells whose LEFT row count reaches
+    ``salt_threshold`` split the left rows across ``salt_buckets``
+    salts and replicate the right rows in that cell to every salt —
+    per-task work drops by ~salt_buckets on the hot cell, and each
+    pair is still produced once (pinned by test)."""
     auto = radius_resolution(radius_m)
     if res is None:
         res = auto
     elif res > auto:
         raise ValueError(f"res={res} is finer than the radius allows ({auto})")
     n = 1 << res
-    height_deg = LAT_SPAN / n
-    width_deg = LON_SPAN / n
+    width_deg = C.LON_SPAN / n
     radius_deg = radius_m / M_PER_DEG
 
-    def pt(df: DataFrame, side: int) -> DataFrame:
+    def pt(df: DataFrame, side: int, *keys: Column) -> DataFrame:
         sfx = suffixes[side]
         cols = [F.col(c).alias(c + sfx if c in (lon_col, lat_col)
                                or c in common else c)
                 for c in df.columns]
-        ix = F.expr(point_index_sql(f"`{lon_col}`", "x", res))
-        iy = F.expr(point_index_sql(f"`{lat_col}`", "y", res))
-        return df.select(*cols, ix.alias("__ix"), iy.alias("__iy"))
+        return df.select(*cols, *keys)
 
     common = set(left.columns) & set(right.columns) - {lon_col, lat_col}
     reserved = {"__ix", "__iy", "__cell", "__salt", "__hot", "dist_m"}
@@ -124,8 +120,10 @@ def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
     if clash:
         raise ValueError(f"reserved column names in input: {clash}")
 
-    l = pt(left, 0)
-    r = pt(right, 1)
+    lon, lat = f"`{lon_col}`", f"`{lat_col}`"
+    l = pt(left, 0, F.expr(C.point_cell_sql(lon, lat, res)).alias("__cell"))
+    r = pt(right, 1, F.expr(C.point_index_sql(lon, "x", res)).alias("__ix"),
+           F.expr(C.point_index_sql(lat, "y", res)).alias("__iy"))
 
     # per-row horizontal fan-out: longitude degrees shrink by cos(lat);
     # use the most poleward latitude reachable within the radius and the
@@ -136,54 +134,14 @@ def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
                    / (F.lit(M_PER_DEG) * F.cos(F.radians(phi_max))))
     kx = F.least(F.ceil(rad_lon_deg / F.lit(width_deg)) + 1, F.lit(n)).cast("long")
 
-    # right cells: rows iy-1..iy+1 (clipped) × columns ix-kx..ix+kx
-    # (wrapped, deduped after the wrap so a full ring emits each cell once)
-    dy = F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("__dy")
-    r2 = r.select("*", dy).withColumn("__ry", F.col("__iy") + F.col("__dy"))
-    r2 = r2.filter((F.col("__ry") >= 0) & (F.col("__ry") < n))
-    xs = F.array_distinct(F.transform(
-        F.sequence(-kx, kx), lambda d: F.pmod(F.col("__ix") + d, F.lit(n))))
-    r3 = (r2.select("*", F.explode(xs).alias("__rx"))
-          .withColumn("__cell",
-                      F.lit(res << RES_SHIFT)
-                      + F.col("__ry") * F.lit(1 << Y_SHIFT) + F.col("__rx"))
-          .drop("__ix", "__iy", "__dy", "__ry", "__rx"))
-
-    l2 = l.withColumn("__cell",
-                      F.lit(res << RES_SHIFT)
-                      + F.col("__iy") * F.lit(1 << Y_SHIFT) + F.col("__ix")) \
-          .drop("__ix", "__iy")
+    # right cells: rows iy-1..iy+1 (clipped) × columns ix-kx..ix+kx (wrapped)
+    r = C.neighbourhood_cells(r, res, 1, kx, ix="__ix", iy="__iy", cell="__cell")
 
     lonl, latl = F.col(lon_col + suffixes[0]), F.col(lat_col + suffixes[0])
     lonr, latr = F.col(lon_col + suffixes[1]), F.col(lat_col + suffixes[1])
     d = haversine_m(lonl, latl, lonr, latr)
-    if salt_buckets > 1:
-        # checkpoint the keyed left ONCE: the hot-cell scan and the
-        # join both consume it, and without the checkpoint the entire
-        # upstream plan would recompute for the scan — costly when the
-        # left is itself an expensive pipeline (r4 advice; same
-        # discipline as dup_span_stats' shared shingle table)
-        l2 = l2.localCheckpoint(eager=False)
-        hot = (l2.groupBy("__cell").count()
-               .filter(F.col("count") >= salt_threshold)
-               .select("__cell").withColumn("__hot", F.lit(True)))
-        lcols = [c for c in l2.columns if c != "__cell"]
-        l2 = (l2.join(F.broadcast(hot), "__cell", "left")
-              .withColumn("__salt",
-                          F.when(F.col("__hot").isNotNull(),
-                                 F.pmod(F.xxhash64(*lcols), F.lit(salt_buckets)))
-                          .otherwise(F.lit(0).cast("long")))
-              .drop("__hot"))
-        r3 = (r3.join(F.broadcast(hot), "__cell", "left")
-              .withColumn("__salt", F.explode(
-                  F.when(F.col("__hot").isNotNull(),
-                         F.sequence(F.lit(0).cast("long"),
-                                    F.lit(salt_buckets - 1).cast("long")))
-                  .otherwise(F.array(F.lit(0).cast("long")))))
-              .drop("__hot"))
-        joined = l2.join(r3, ["__cell", "__salt"]).drop("__salt")
-    else:
-        joined = l2.join(r3, "__cell")
+    joined = C._salted_join(l, r, "__cell", [c for c in l.columns if c != "__cell"],
+                            salt_buckets, salt_threshold)
     return (joined
             .withColumn("dist_m", d)
             .filter(F.col("dist_m") <= radius_m)
@@ -196,8 +154,7 @@ def distance_join(left: DataFrame, right: DataFrame, radius_m: float,
 
 def spatial_clusters(points: DataFrame, eps_m: float,
                      id_col: str = "pid", lon_col: str = "lon",
-                     lat_col: str = "lat", res: int | None = None,
-                     salt_buckets: int = 0) -> DataFrame:
+                     lat_col: str = "lat", res: int | None = None) -> DataFrame:
     """Great-circle eps-connectivity clusters: points closer than
     ``eps_m`` are linked, connected components are clusters — the
     density-reachability core of DBSCAN (min_pts=2; border/noise
@@ -210,8 +167,8 @@ def spatial_clusters(points: DataFrame, eps_m: float,
 
     Pure composition of two proven kernels, which is the point: the
     eps-graph comes from :func:`distance_join` (cell-bucket
-    candidates + exact haversine, ONE equi-join shuffle, hot-cell
-    salting available — never all-pairs) and the components from
+    candidates + exact haversine, ONE equi-join shuffle — never
+    all-pairs) and the components from
     ``dedup.duplicate_clusters`` (alternating large-star/small-star,
     O(log n) rounds, lineage-checkpointed).  At 10^12 points the
     eps-graph is the dominant cost and inherits the distance join's
@@ -222,8 +179,7 @@ def spatial_clusters(points: DataFrame, eps_m: float,
     pairs = distance_join(
         base.withColumnRenamed(id_col, "__a"),
         base.withColumnRenamed(id_col, "__b"),
-        eps_m, lon_col=lon_col, lat_col=lat_col, res=res,
-        salt_buckets=salt_buckets)
+        eps_m, lon_col=lon_col, lat_col=lat_col, res=res)
     pairs = (pairs.filter(F.col("__a") < F.col("__b"))
                   .select(F.col("__a").alias("doc_a"),
                           F.col("__b").alias("doc_b")))

@@ -25,10 +25,12 @@ Scale design (north_rule):
   cells; features forced coarser emit their cover at a coarser level
   and the opposite side emits the ancestor chain so the pair still
   collides (tiling/cells.py:cover_with_parents rationale).
-* **hot-cell salting**: cells whose build-side row count exceeds
-  ``salt_threshold`` are split across ``salt_buckets`` shuffle keys
-  (deterministic hash salt on one side, explode on the other); pair
-  dedup afterwards makes salting result-invariant.
+* **hot-cell salting**: ``cells._salted_join``, the one hot-key salt
+  the distance and interval joins share — cells whose first-side row
+  count reaches ``salt_threshold`` are split across ``salt_buckets``
+  shuffle keys (deterministic hash salt on that side, explode on the
+  other); each pair meets in exactly one salt, so salting is
+  result-invariant.
 * geometry bytes do NOT travel through the cell shuffle — only ids do;
   WKB is joined back after pair dedup.
 
@@ -40,6 +42,8 @@ scalar kernel.  All three give the scalar kernel's answer.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -190,23 +194,7 @@ def candidate_pairs(features1: DataFrame, features2: DataFrame,
           .withColumnRenamed("native_res", "t_native")
           .withColumnRenamed("minx", "t_minx").withColumnRenamed("miny", "t_miny"))
 
-    if salt_buckets > 1:
-        hot = (c1.groupBy("cell").count().filter(F.col("count") >= salt_threshold)
-               .select("cell").withColumn("hot", F.lit(True)))
-        c1 = (c1.join(F.broadcast(hot), "cell", "left")
-              .withColumn("salt", F.when(F.col("hot").isNotNull(),
-                                         F.pmod(F.xxhash64("from_id"), F.lit(salt_buckets)))
-                          .otherwise(F.lit(0)))
-              .drop("hot"))
-        c2 = (c2.join(F.broadcast(hot), "cell", "left")
-              .withColumn("salt", F.explode(
-                  F.when(F.col("hot").isNotNull(),
-                         F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-                  .otherwise(F.array(F.lit(0)))))
-              .drop("hot"))
-        pairs = c1.join(c2, ["cell", "salt"])
-    else:
-        pairs = c1.join(c2, "cell")
+    pairs = C._salted_join(c1, c2, "cell", ["from_id"], salt_buckets, salt_threshold)
     return pairs.filter(_owner_cell_filter()).select("from_id", "to_id")
 
 
@@ -349,12 +337,20 @@ def _refine_cover_batch(rows, B):
     return handled, _pair_frame(rows.iloc[idxs], measures[idxs], wkbs)
 
 
+# what G.wkb_loads / G.intersection raise on malformed input (truncated
+# or garbage WKB, foreign WKB codes): struct.error and IndexError on a
+# short buffer, ValueError on an unknown code or a coordinate array past
+# the end.  Anything else is a bug and propagates.
+_MALFORMED_GEOMETRY = (ValueError, IndexError, struct.error)
+
+
 def _refine_scalar(pdf):
     """The scalar kernel, one candidate row at a time: the refine's
     tier for holes, multi-part geometry, lines, points, collections and
     oversized rings, and the oracle the batched tiers are tested
-    against.  Topology errors are skipped per row, like the reference
-    (utils/multiprocess.py:102-104)."""
+    against.  A row whose geometry fails to decode or clip is skipped,
+    like the reference's TopologicalError rows
+    (utils/multiprocess.py:102-104); see :data:`_MALFORMED_GEOMETRY`."""
     keep, measures, wkbs = [], [], []
     for pos, (fwkb, kind, twkb) in enumerate(zip(pdf["from_wkb"], pdf["from_kind"],
                                                  pdf["to_wkb"])):
@@ -362,8 +358,8 @@ def _refine_scalar(pdf):
             fg = G.wkb_loads(bytes(fwkb))
             tg = G.wkb_loads(bytes(twkb))
             inter = G.intersection(fg, kind, tg)
-        except Exception:
-            continue  # reference skips TopologicalError rows
+        except _MALFORMED_GEOMETRY:
+            continue
         if inter is None:
             continue
         m = G.measure(inter, kind)

@@ -7,8 +7,10 @@ per query by planar WGS84-degree distance (0 when the point is inside a
 polygon).  Plan:
 
 1. queries land in a tiling cell; the cell's k-ring (Chebyshev radius
-   ``ring``) is exploded → candidate join against the features' cell
-   cover — a hash join, exactly like the overlay join;
+   ``ring``) is exploded in Catalyst (``cells.neighbourhood_cells``, the
+   helper the distance join's ring uses too — no Python stage) →
+   candidate join against the features' cell cover — a hash join,
+   exactly like the overlay join;
 2. exact point→geometry distance in an Arrow batch;
 3. per-query top-k via ``Window.partitionBy(query).orderBy(dist)`` +
    ``row_number() <= k``;
@@ -28,9 +30,10 @@ from ..tiling import cells as C
 DIST_SCHEMA = "query_id bigint, feature_id bigint, dist double"
 
 # cells a single ring pass may enumerate per query before the backstop
-# switches to broadcasting the (small) short side: (2r+1)² int64s per
-# row materialize inside the cell UDF, so unbounded doubling at high
-# res would OOM the executor long before the ring spans the grid
+# switches to broadcasting the (small) short side: each query explodes
+# to (2r+1)² ring rows that all cross the candidate join's shuffle, so
+# unbounded doubling at high res would multiply the shuffle by ~4 per
+# pass long before the ring spans the grid
 _RING_CELL_BUDGET = 4096
 
 
@@ -145,6 +148,21 @@ def _split_distances(cand: DataFrame) -> DataFrame:
     return rect.unionByName(_exact_distances(other))
 
 
+def _ring_pass(queries: DataFrame, fcells: DataFrame, fgeom: DataFrame,
+               res: int, ring: int) -> DataFrame:
+    """(query_id, feature_id, dist) for every feature whose cover meets
+    the k-ring of radius ``ring`` around each query's cell at ``res`` —
+    one ring pass, Catalyst up to the exact-distance split."""
+    pts = queries.selectExpr("query_id", "qx", "qy",
+                             f"{C.point_index_sql('qx', 'x', res)} AS ix",
+                             f"{C.point_index_sql('qy', 'y', res)} AS iy")
+    cand = (C.neighbourhood_cells(pts, res, ring, ring).join(fcells, "cell")
+            .select("query_id", "qx", "qy", "feature_id")
+            .dropDuplicates(["query_id", "feature_id"])
+            .join(fgeom, "feature_id"))
+    return _split_distances(cand)
+
+
 def knn_nearest_feature(queries: DataFrame, features: DataFrame, k: int = 1,
                         res: int = 6, ring: int = 1) -> DataFrame:
     """queries(query_id, qx, qy) × features(feature_id, label, geom_wkb,
@@ -162,17 +180,9 @@ def knn_nearest_feature(queries: DataFrame, features: DataFrame, k: int = 1,
     from ..operators.intersect import _ensure_persisted, cover_features
 
     features = _ensure_persisted(features)
-    qcells_rows = queries.select(
-        "query_id", "qx", "qy",
-        _cell_udf(res, ring)(F.col("qx"), F.col("qy")).alias("cells"))
-    qcells = qcells_rows.select("query_id", "qx", "qy", F.explode("cells").alias("cell"))
-
     fcells = cover_features(features, res, max_cells=256)
     fgeom = _feature_geoms(features)
-    cand = (qcells.join(fcells, "cell")
-            .select("query_id", "qx", "qy", "feature_id").dropDuplicates(["query_id", "feature_id"])
-            .join(fgeom, "feature_id"))
-    dists = _split_distances(cand)
+    dists = _ring_pass(queries, fcells, fgeom, res, ring)
 
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("feature_id").asc())
     ranked = dists.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -193,10 +203,10 @@ def knn_nearest_feature(queries: DataFrame, features: DataFrame, k: int = 1,
         if want == 0 or short.limit(1).count() == 0:
             break
         # brute-force once the NEXT ring would enumerate more cells per
-        # query than the budget (the k-ring UDF materializes (2r+1)²
-        # cell ids per row — at radius n/2 that is the entire grid,
-        # far costlier than broadcasting the short side), or once the
-        # ring already spans the wrapped grid
+        # query than the budget (the ring explodes to (2r+1)² rows per
+        # query — at radius n/2 that is the entire grid, far costlier
+        # than broadcasting the short side), or once the ring already
+        # spans the wrapped grid
         if r >= n_cells // 2 or (2 * (r * 2) + 1) ** 2 > _RING_CELL_BUDGET:
             # last resort: the k-ring already spans the grid, so any
             # still-short query lives in a genuinely sparse region —
@@ -214,16 +224,9 @@ def knn_nearest_feature(queries: DataFrame, features: DataFrame, k: int = 1,
             prev.unpersist()  # _ensure_persisted materialized the child
             break
         r *= 2
-        scells = short.select("query_id", "qx", "qy",
-                              F.explode(_cell_udf(res, r)(F.col("qx"), F.col("qy")))
-                              .alias("cell"))
-        cand_r = (scells.join(fcells, "cell")
-                  .select("query_id", "qx", "qy", "feature_id")
-                  .dropDuplicates(["query_id", "feature_id"])
-                  .join(fgeom, "feature_id"))
         prev = ranked
         ranked = _ensure_persisted(
-            _dedup_union(ranked.drop("rank"), _split_distances(cand_r))
+            _dedup_union(ranked.drop("rank"), _ring_pass(short, fcells, fgeom, res, r))
             .withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k))
         prev.unpersist()  # superseded cache; child already materialized
 
@@ -233,25 +236,3 @@ def knn_nearest_feature(queries: DataFrame, features: DataFrame, k: int = 1,
 
 def _dedup_union(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).dropDuplicates(["query_id", "feature_id"])
-
-
-def _cell_udf(res: int, ring: int = 1):
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("array<bigint>")
-    def cells_for_point(qx, qy):
-        import pandas as pd
-
-        # vectorized k-ring: (2k+1)² offsets broadcast over the batch,
-        # longitude wrapped, out-of-range latitudes dropped per row
-        ix, iy = C.lonlat_to_xy(qx.to_numpy(), qy.to_numpy(), res)
-        n = 1 << res
-        d = np.arange(-ring, ring + 1, dtype=np.int64)
-        dx, dy = np.meshgrid(d, d)
-        xs = (ix[:, None] + dx.ravel()[None, :]) % n
-        ys = iy[:, None] + dy.ravel()[None, :]
-        ok = (ys >= 0) & (ys < n)
-        cells = (np.int64(res) << C.RES_SHIFT) | (ys << C.Y_SHIFT) | xs
-        return pd.Series([cells[i][ok[i]].tolist() for i in range(len(ix))])
-
-    return cells_for_point

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..tiling import cells as C
+
 
 def _epoch_seconds(df: DataFrame, col_name: str):
     """Seconds-as-double for gap/range arithmetic: genuine timestamp
@@ -112,14 +114,14 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     quantize numeric values to microseconds and flip boundary
     membership for sub-microsecond differences).
 
-    ``salt_buckets`` > 1 enables hot-bucket salting (r3 verdict #8):
-    a flash-sale half hour is ONE bucket key whose point×interval
-    output amplification AQE's partition-splitting cannot break up.
-    Buckets whose POINT count reaches ``salt_threshold`` hash-split
-    the point side across ``salt_buckets`` salt keys and replicate
-    that bucket's interval rows across all salts; each (point,
-    interval) pair still survives exactly once (the point keeps ONE
-    salt), so results are salting-invariant (pinned by test)."""
+    ``salt_buckets`` > 1 enables hot-bucket salting through
+    ``cells._salted_join``, the one hot-key salt the overlay and the
+    distance join share: a flash-sale half hour is ONE bucket key whose
+    point×interval output amplification AQE's partition-splitting
+    cannot break up.  Buckets whose POINT count reaches
+    ``salt_threshold`` split the points across ``salt_buckets`` salts
+    and replicate that bucket's intervals to every salt; each (point,
+    interval) pair still survives exactly once (pinned by test)."""
     if bucket_seconds <= 0:
         raise ValueError("bucket_seconds must be positive")
     reserved = {"__bucket", "__p", "__salt", "__hot"}
@@ -142,31 +144,8 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     hi = F.greatest(F.floor(e / bucket_seconds).cast("long"), lo)
     iv = intervals.select("*", F.explode(F.sequence(lo, hi)).alias("__bucket"))
     pt = points.select("*", pb.alias("__bucket"), p.alias("__p"))
-    if salt_buckets > 1:
-        # checkpoint the bucketed point side ONCE: the hot-bucket scan
-        # and the join both consume it (r4 advice — otherwise the whole
-        # upstream plan recomputes for the scan)
-        pt = pt.localCheckpoint(eager=False)
-        hot = (pt.groupBy("__bucket").count()
-               .filter(F.col("count") >= salt_threshold)
-               .select("__bucket").withColumn("__hot", F.lit(True)))
-        pcols = [c for c in points.columns]
-        pt = (pt.join(F.broadcast(hot), "__bucket", "left")
-              .withColumn("__salt",
-                          F.when(F.col("__hot").isNotNull(),
-                                 F.pmod(F.xxhash64(*pcols), F.lit(salt_buckets)))
-                          .otherwise(F.lit(0).cast("long")))
-              .drop("__hot"))
-        iv = (iv.join(F.broadcast(hot), "__bucket", "left")
-              .withColumn("__salt", F.explode(
-                  F.when(F.col("__hot").isNotNull(),
-                         F.sequence(F.lit(0).cast("long"),
-                                    F.lit(salt_buckets - 1).cast("long")))
-                  .otherwise(F.array(F.lit(0).cast("long")))))
-              .drop("__hot"))
-        joined = pt.join(iv, ["__bucket", "__salt"]).drop("__salt")
-    else:
-        joined = pt.join(iv, "__bucket")
+    joined = C._salted_join(pt, iv, "__bucket", points.columns,
+                            salt_buckets, salt_threshold)
     joined = joined.filter((F.col("__p") >= s) & (F.col("__p") < e))
     return joined.drop("__bucket", "__p")
 

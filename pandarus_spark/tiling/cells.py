@@ -30,14 +30,16 @@ Skew handling (the reference has none — SURVEY.md §4):
   cover at every *parent* resolution meeting in the middle, see
   :func:`cover_with_parents`, so features indexed at different
   resolutions still collide on a common key.
-* **hot-cell salting** — done at the DataFrame layer (operators/
-  intersect.py): cells whose candidate count explodes are salted on the
-  build side and replicated on the probe side.
+* **hot-cell salting** — :func:`_salted_join` at the bottom of this
+  module, the one copy the overlay's candidate join, the distance join
+  and the interval join share: keys whose probe-side row count explodes
+  split the probe rows across salts and replicate the build rows.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column, DataFrame, functions as F
 
 MAX_RES = 20          # ~1e-5 degrees at res 20 — far below fixture sizes
 RES_SHIFT = 58
@@ -306,3 +308,72 @@ def native_res_sql(ux0: str, uy0: str, ux1: str, uy1: str,
         f" WHEN {span(ux0, ux1, r)} * {span(uy0, uy1, r)} <= {max_cells} THEN {r}"
         for r in range(min(target_res, MAX_RES), 0, -1))
     return f"CASE WHEN NOT ({finite_sql(ux0, uy0, ux1, uy1)}) THEN 0{whens} ELSE 0 END"
+
+
+# ---------------------------------------------------------------------------
+# Tiled-join plumbing (DataFrame layer): ring keys and the hot-key salt
+# ---------------------------------------------------------------------------
+
+def neighbourhood_cells(df: DataFrame, res: int, ry: int, rx: int | Column,
+                        ix: str = "ix", iy: str = "iy", cell: str = "cell") -> DataFrame:
+    """``df`` with its ``ix``/``iy`` tile indices (:func:`point_index_sql`
+    at ``res``) replaced by ``cell``: one row per cell within ``ry`` rows
+    and ``rx`` columns of the point's tile — rows clipped to [0, 2^res),
+    columns wrapped (longitude), each cell emitted once.  ``rx`` may be a
+    per-row Column.  A column radius whose span ``2·rx+1`` reaches 2^res
+    takes the full row ``sequence(0, 2^res - 1)``, so the wrap needs no
+    dedup.  With ``ry == rx`` this is :func:`kring`'s cell set.
+
+    Two explodes and a codegen'd ``pmod`` + :func:`cell_id_sql` — no
+    Python stage and no per-row lambda."""
+    n = 1 << res
+    rest = [c for c in df.columns if c not in (ix, iy)]
+    x, y = F.col(ix), F.col(iy)
+    rows = F.sequence(F.greatest(y - ry, F.lit(0).cast("long")),
+                      F.least(y + ry, F.lit(n - 1).cast("long")))
+    full = F.sequence(F.lit(0).cast("long"), F.lit(n - 1).cast("long"))
+    if isinstance(rx, Column):
+        cols = F.when(2 * rx + 1 >= n, full).otherwise(F.sequence(x - rx, x + rx))
+    else:
+        cols = full if 2 * rx + 1 >= n else F.sequence(x - rx, x + rx)
+    return (df.select(*rest, x, F.explode(rows).alias(iy))
+            .select(*rest, F.col(iy), F.explode(cols).alias(ix))
+            .select(*rest, F.expr(cell_id_sql(res, f"pmod(`{ix}`, {n})", f"`{iy}`"))
+                    .alias(cell)))
+
+
+def _salted_join(probe: DataFrame, build: DataFrame, key: str, hash_cols: list[str],
+                 salt_buckets: int, salt_threshold: int) -> DataFrame:
+    """Inner equi-join ``probe ⋈ build`` on ``key``, with hot keys split.
+
+    A key whose PROBE row count reaches ``salt_threshold`` is one hot
+    cell or bucket: AQE splits oversized shuffle partitions, but one key
+    lands in one task either way, and the join-output amplification of
+    a dense key is invisible to it.  Each probe row in a hot key takes
+    ONE ``long`` salt, ``pmod(xxhash64(hash_cols), salt_buckets)``; each
+    build row in it is replicated to every salt (cold keys: salt 0 on
+    both sides).  Every output pair is therefore produced exactly once,
+    so the result is salting-invariant.
+
+    The probe is ``localCheckpoint``ed (lazily) first: the hot-key scan
+    and the join both read it, and without the checkpoint its whole
+    upstream plan would run twice.  ``salt_buckets <= 1`` is the plain
+    ``probe.join(build, key)``."""
+    if salt_buckets <= 1:
+        return probe.join(build, key)
+    probe = probe.localCheckpoint(eager=False)
+    hot = (probe.groupBy(key).count().filter(F.col("count") >= salt_threshold)
+           .select(key, F.lit(True).alias("__hot")))
+    is_hot = F.col("__hot").isNotNull()
+    zero = F.lit(0).cast("long")
+    probe = (probe.join(F.broadcast(hot), key, "left")
+             .withColumn("__salt", F.when(is_hot, F.pmod(F.xxhash64(*hash_cols),
+                                                         F.lit(salt_buckets).cast("long")))
+                         .otherwise(zero))
+             .drop("__hot"))
+    build = (build.join(F.broadcast(hot), key, "left")
+             .withColumn("__salt", F.explode(
+                 F.when(is_hot, F.sequence(zero, F.lit(salt_buckets - 1).cast("long")))
+                 .otherwise(F.array(zero))))
+             .drop("__hot"))
+    return probe.join(build, [key, "__salt"]).drop("__salt")

@@ -119,8 +119,8 @@ def test_knn_ring_growth_finds_far_features(spark):
 
 def test_knn_ring_param_is_threaded(spark):
     """ring=4 initial radius must produce the same result rows as
-    ring=1 (growth invariance) — and actually reach _cell_udf (the
-    old code silently ignored it)."""
+    ring=1 (growth invariance) — and actually reach the first ring
+    pass (the old code silently ignored it)."""
     grid = extract_features(pages_df(spark, "grid"))
     q = spark.createDataFrame([(1, 5.0, 0.5), (2, 0.25, 0.25)],
                               "query_id long, qx double, qy double")

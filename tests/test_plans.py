@@ -280,6 +280,30 @@ def test_distance_join_plan_single_equijoin(spark):
     assert ("SortMergeJoin" in plan2) or ("ShuffledHashJoin" in plan2)
 
 
+def test_knn_ring_pass_has_one_python_node(spark):
+    """A kNN ring pass builds its k-ring in Catalyst: the one Python
+    node left is the exact-distance ``mapInPandas`` (a cell UDF would
+    add an ArrowEvalPython per pass)."""
+    import re
+
+    from pandarus_spark.geometry import geom as G
+    from pandarus_spark.operators.intersect import cover_features
+    from pandarus_spark.operators.knn import _feature_geoms, _ring_pass
+
+    ring = [[0.0, 0.0], [1.0, 0.2], [0.8, 1.0], [0.0, 0.0]]
+    wkb = G.wkb_dumps({"type": "Polygon", "coordinates": [ring]})
+    feats = spark.createDataFrame(
+        [(1, "a", wkb, "polygon", 0.0, 0.0, 1.0, 1.0, False)],
+        "feature_id long, label string, geom_wkb binary, kind string, "
+        "minx double, miny double, maxx double, maxy double, is_rect boolean")
+    q = spark.createDataFrame([(1, 0.5, 0.5)], "query_id long, qx double, qy double")
+    dists = _ring_pass(q, cover_features(feats, 6, max_cells=256), _feature_geoms(feats), 6, 2)
+    plan = dists._jdf.queryExecution().executedPlan().toString()
+    python_nodes = re.findall(r"\b(MapInPandas|\w*EvalPython\w*|\w*InArrow\w*)\b", plan)
+    assert python_nodes == ["MapInPandas"]
+    assert sorted(map(tuple, dists.collect())) == [(1, 1, 0.0)]
+
+
 def test_tile_rollup_plan_partial_agg_one_shuffle(spark):
     """Multi-level rollup: map-side partial aggregation collapses the
     exploded (row × levels) stream before ONE hash-partition exchange;

@@ -258,3 +258,40 @@ def test_concave_pair_cap_defers_to_scalar(spark, monkeypatch):
     assert len(got) == len(want) == 1
     assert got[0]["measure"] == want[0]["measure"]
     assert bytes(got[0]["geom_wkb"]) == bytes(want[0]["geom_wkb"])
+
+
+def _scalar_frame(pairs):
+    import pandas as pd
+    return pd.DataFrame({
+        "from_id": np.arange(len(pairs), dtype="int64"),
+        "to_id": np.zeros(len(pairs), dtype="int64"),
+        "from_label": [f"f{i}" for i in range(len(pairs))], "to_label": "t",
+        "from_wkb": [f for f, _ in pairs], "from_kind": "polygon",
+        "to_wkb": [t for _, t in pairs]})
+
+
+def test_refine_scalar_skips_malformed_rows():
+    """Truncated, garbage and foreign-code WKB rows are skipped one by
+    one; the well-formed rows around them are kept."""
+    from pandarus_spark.operators.intersect import _refine_scalar
+    sq = G.wkb_dumps(_hexagon(0.0, 0.0, 1.0))
+    to = G.wkb_dumps(_hexagon(0.5, 0.0, 1.0))
+    bad = [sq[:0], sq[:1], sq[:7], sq[:40], b"\x01" + b"\xff" * 12,
+           b"\x01\x03\x00\x00\x20\x01\x00\x00\x00", bytes(range(64))]
+    pairs = [(sq, to)] + [(b, to) for b in bad] + [(sq, b) for b in bad] + [(to, sq)]
+    out = _refine_scalar(_scalar_frame(pairs))
+    assert out["from_label"].tolist() == ["f0", f"f{len(pairs) - 1}"]
+    assert (out["measure"] > 0).all()
+
+
+def test_refine_scalar_propagates_unexpected_errors(monkeypatch):
+    """Only malformed-geometry errors are skipped: any other exception
+    from the kernel is a bug and must fail the task, not drop the row."""
+    from pandarus_spark.operators.intersect import _refine_scalar
+    sq = G.wkb_dumps(_hexagon(0.0, 0.0, 1.0))
+
+    def boom(*args):
+        raise RuntimeError("kernel bug")
+    monkeypatch.setattr(G, "intersection", boom)
+    with pytest.raises(RuntimeError, match="kernel bug"):
+        _refine_scalar(_scalar_frame([(sq, sq)]))

@@ -98,18 +98,52 @@ def test_batch_cover_matches_scalar_loop():
             assert got.get(i, set()) == want, (i, parents_to)
 
 
-def test_knn_cell_udf_matches_kring(spark):
-    """The vectorized k-ring inside knn's cell UDF must emit the same
-    cell set as the scalar C.kring, including lon wrap and lat edges."""
-    import pandas as pd
-    from pandarus_spark.operators.knn import _cell_udf
-    fn = _cell_udf(6, ring=2).func  # unwrap the pandas_udf
-    qx = pd.Series([0.0, 179.95, -179.95, 0.0, 0.0])
-    qy = pd.Series([0.0, 10.0, -10.0, 89.9, -89.9])
-    got = fn(qx, qy)
-    for x, y, cells in zip(qx, qy, got):
-        ix, iy = C.lonlat_to_xy(np.array([x]), np.array([y]), 6)
-        want = set(C.kring(C.cell_id(6, int(ix[0]), int(iy[0])), 2))
+def _ring_cells(spark, res, ry, rx, points):
+    """cells.neighbourhood_cells over ``points`` (qx, qy[, rx]): one list
+    of cell ids per point, in input order."""
+    from pyspark.sql import functions as F
+    rows = [(i, float(p[0]), float(p[1]), int(p[2]) if len(p) > 2 else 0)
+            for i, p in enumerate(points)]
+    pts = spark.createDataFrame(rows, "i int, qx double, qy double, rx long").selectExpr(
+        "i", "rx", f"{C.point_index_sql('qx', 'x', res)} AS ix",
+        f"{C.point_index_sql('qy', 'y', res)} AS iy")
+    got = {i: [] for i in range(len(points))}
+    radius = F.col("rx") if rx is None else rx
+    for r in C.neighbourhood_cells(pts, res, ry, radius).collect():
+        got[r["i"]].append(r["cell"])
+    return [got[i] for i in range(len(points))]
+
+
+def _point_cell(x, y, res):
+    ix, iy = C.lonlat_to_xy(np.array([x]), np.array([y]), res)
+    return C.cell_id(res, int(ix[0]), int(iy[0]))
+
+
+def test_neighbourhood_cells_matches_kring(spark):
+    """The Catalyst ring (kNN's ring passes, the distance join's right
+    side) emits exactly the scalar C.kring's cell set, each cell once:
+    at the lon wrap, both poles, and rings spanning the whole row
+    (res 3, ring 4: 2·4+1 >= 8 columns)."""
+    cases = [(6, 2, [(0.0, 0.0), (179.95, 10.0), (-179.95, -10.0), (0.0, 89.9), (0.0, -89.9)]),
+             (3, 4, [(0.0, 0.0), (179.95, 89.9), (-180.0, -90.0)]),
+             (12, 1, [(-180.0, 0.0), (179.99, -90.0)])]
+    for res, ring, points in cases:
+        for (x, y), cells in zip(points, _ring_cells(spark, res, ring, ring, points)):
+            assert len(cells) == len(set(cells))
+            assert set(cells) == set(C.kring(_point_cell(x, y, res), ring))
+
+
+def test_neighbourhood_cells_per_row_column_radius(spark):
+    """A per-row Column radius (the distance join's kx): rows ±1
+    clipped, columns ±rx wrapped, the full row once 2·rx+1 >= 2^res."""
+    res, n = 5, 32
+    points = [(0.0, 0.0, 0), (179.0, 10.0, 1), (-179.0, 89.0, 3),
+              (10.0, -89.0, 15), (10.0, 45.0, 16), (10.0, 45.0, 40)]
+    for (x, y, rx), cells in zip(points, _ring_cells(spark, res, 1, None, points)):
+        ix, iy = C.cell_xy(_point_cell(x, y, res))
+        want = {C.cell_id(res, (ix + dx) % n, iy + dy)
+                for dy in (-1, 0, 1) if 0 <= iy + dy < n for dx in range(-rx, rx + 1)}
+        assert len(cells) == len(set(cells))
         assert set(cells) == want
 
 
