@@ -9,16 +9,34 @@ the same operations across N pairs:
 * :func:`decode_simple_polygon_batch` — vectorized WKB decode for
   single-ring Polygon / 1-part MultiPolygon rows (grouped by byte
   layout, one ``np.frombuffer`` per group);
+* :func:`convex_cover_flat` — every ring's disjoint convex cover at
+  once (the ring itself when convex, its trapezoid decomposition
+  otherwise), flat and padded; :func:`convex_cover_ragged` keeps the
+  same pieces unpadded, covering the rings in budget spans, and
+  :func:`gather_pieces` pads a set of them for a clip;
+* :func:`fan_out_pairs` — the ragged (row × piece × piece) cross
+  product both batched clip callers build, box-screened;
+* :func:`budget_spans` — cuts padded work into contiguous spans whose
+  temporaries fit one f8 budget, so one wide ring or piece bounds only
+  the spans around it;
 * :func:`clip_convex_batch` — Sutherland–Hodgman over N (subject,
   convex clip) pairs at once; arithmetic mirrors
   :func:`..geom.clip_ring_convex` operation-for-operation (same inside
   epsilon, same interpolation, same consecutive-vertex dedup and
   closing-point drop), so both paths agree to fp round-off;
 * :func:`ring_area_batch` / :func:`mollweide_area_batch` — masked
-  shoelace over padded rings.
+  shoelace over padded rings; :func:`ring_area_by_count` sums each
+  ring over its own vertices only, so its value does not depend on the
+  batch the ring is padded into.
 
-The only remaining Python loops are over *clip edges* (≤ ring vertex
-count, a small constant) — never over pairs.
+The two callers: the overlay refine's cover tier
+(``operators/intersect._refine_cover_batch``: subject piece × clip
+piece per candidate row) and the zonal coverage weights
+(``operators/raster_stats._coverage_fractions``: zone piece × cell box
+per candidate cell, holes signed −, one clip call per budget span of an
+Arrow batch's pairs).  The only remaining Python loops are over
+*clip edges* (≤ ring vertex count, a small constant) and over distinct
+vertex counts — never over pairs.
 
 Reference semantics: pandarus utils/geometry.py:74-131 (refine) and
 core.py:490-516 (coverage weights); this file changes the execution
@@ -193,6 +211,18 @@ def ring_area_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     return np.abs(signed_ring_area_batch(pts, cnt))
 
 
+def ring_area_by_count(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """:func:`ring_area_batch`, one call per distinct vertex count with
+    the padding sliced off: numpy's pairwise row sum groups its terms
+    by row width, so a ring's area then does not depend on how wide
+    the batch it rides in is.  Rings with ``cnt < 3`` are 0."""
+    area = np.zeros(len(cnt))
+    for c in np.unique(cnt[cnt >= 3]):
+        sel = np.nonzero(cnt == c)[0]
+        area[sel] = ring_area_batch(pts[sel, :c], cnt[sel])
+    return area
+
+
 def mollweide_area_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     """Unsigned Mollweide m² area of padded open rings — the batched
     twin of geom.measure(polygon): project vertices, shoelace."""
@@ -243,6 +273,54 @@ def multipolygon_parts_wkb(parts: list[tuple[np.ndarray, int]]) -> bytes:
         closed = np.concatenate([p[:c], p[0:1]], axis=0)
         chunks.append(closed.astype("<f8").tobytes())
     return b"".join(chunks)
+
+
+# ---------------------------------------------------------------------------
+# Ragged piece-pair fan-out
+# ---------------------------------------------------------------------------
+
+# f8 budget of one chunk's temporaries (~32 MB): the trapezoid sweep's
+# ring chunks and every budget_spans caller
+_COVER_CHUNK_FLOATS = 4_000_000
+
+
+def budget_spans(fan: np.ndarray, floats: np.ndarray):
+    """Contiguous ``[s, e)`` spans of items whose padded temporaries
+    fit ``_COVER_CHUNK_FLOATS``.  Item i stands for ``fan[i]`` rows of a
+    padded array, each costing ``floats[i]`` f8 at item i's own width;
+    a span pads to its widest item, so it costs ``Σ fan × max floats``.
+    One wide item thus shrinks only the spans around it.  Every span
+    holds at least one item."""
+    s = 0
+    while s < len(fan):
+        cost = np.cumsum(fan[s:]) * np.maximum.accumulate(floats[s:])
+        e = s + max(1, int(np.searchsorted(cost, _COVER_CHUNK_FLOATS, side="right")))
+        yield s, e
+        s = e
+
+
+def fan_out_pairs(a_start: np.ndarray, a_n: np.ndarray, a_boxes: np.ndarray,
+                  b_start: np.ndarray, b_n: np.ndarray, b_boxes: np.ndarray
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Ragged cross product of two index ranges per row: for row i,
+    every (a, b) with a in ``a_start[i] : a_start[i] + a_n[i]`` (outer
+    loop) and b in ``b_start[i] : b_start[i] + b_n[i]`` (inner loop).
+    Pairs whose boxes (minx, miny, maxx, maxy rows of ``a_boxes`` /
+    ``b_boxes``) are strictly apart are dropped; touching boxes stay.
+
+    Returns ``(row, a_idx, b_idx)``.  ``row`` ascends and each row keeps
+    the nested-loop order, so an unbuffered ``np.add.at`` over ``row``
+    sums each row's pairs in that order."""
+    fan = a_n * b_n
+    row = np.repeat(np.arange(len(fan)), fan)
+    p = np.arange(len(row)) - np.repeat(np.cumsum(fan) - fan, fan)
+    nb = b_n[row]
+    a_idx = a_start[row] + p // nb
+    b_idx = b_start[row] + p % nb
+    ab, bb = a_boxes[a_idx], b_boxes[b_idx]
+    touch = ~((ab[:, 2] < bb[:, 0]) | (bb[:, 2] < ab[:, 0])
+              | (ab[:, 3] < bb[:, 1]) | (bb[:, 3] < ab[:, 1]))
+    return row[touch], a_idx[touch], b_idx[touch]
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +428,6 @@ def clip_convex_batch(subj_pts: np.ndarray, subj_cnt: np.ndarray,
 # blow the chunk budget while contributing nothing to the common case
 # (web-overlay cells/pages are single-digit-vertex rings)
 COVER_MAX_VERTS = 64
-_COVER_CHUNK_FLOATS = 4_000_000  # ~32 MB of f8 temporaries per chunk
 
 
 def _decompose_chunk(pts: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -555,6 +632,59 @@ def convex_cover_flat(pts: np.ndarray, cnt: np.ndarray) -> tuple[
     boxes[:, 2] = fpts[..., 0].max(axis=1)
     boxes[:, 3] = fpts[..., 1].max(axis=1)
     return fpts, fcnt, starts, boxes
+
+
+def convex_cover_ragged(rings: list[np.ndarray]) -> tuple[
+        np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`convex_cover_flat` of a list of rings, in memory that grows
+    with the widest ring, not with every ring padded to it.
+
+    Returns ``(verts (V, 2), off (P,), cnt (P,), starts (n+1,), boxes
+    (P, 4))``: piece p's open vertices are ``verts[off[p]:off[p] +
+    cnt[p]]``, ring i's pieces are ``starts[i]:starts[i+1]``, and the
+    pieces, their order and their boxes are ``convex_cover_flat``'s.
+    Rings are padded only within :func:`budget_spans` of consecutive
+    rings.  In each span a convex ring is its own piece, copied from its
+    vertices, and only the concave rings go through ``convex_cover_flat``,
+    so their 4-vertex trapezoids never pad to a wide convex ring.
+    :func:`gather_pieces` pads a set of pieces for a clip."""
+    n = len(rings)
+    if not n:
+        return (np.zeros((0, 2)), np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
+                np.zeros(1, dtype=np.int64), np.zeros((0, 4)))
+    parts = []  # (padded pieces, counts, boxes, ring of each piece)
+    width = np.array([len(r) for r in rings], dtype=np.int64)
+    # is_convex_batch holds ~16 f8 per vertex slot
+    for s, e in budget_spans(np.ones(n, dtype=np.int64), 16 * width):
+        pts, cnt = pad_rings(rings[s:e])
+        conv = is_convex_batch(pts, cnt)
+        ci, ki = np.nonzero(conv)[0], np.nonzero(~conv)[0]
+        if len(ci):
+            cp = pts[ci]
+            parts.append((cp, cnt[ci], np.hstack([cp.min(axis=1), cp.max(axis=1)]), s + ci))
+        if len(ki):
+            fpts, fcnt, kstarts, fbox = convex_cover_flat(pts[ki], cnt[ki])
+            parts.append((fpts, fcnt, fbox, s + np.repeat(ki, np.diff(kstarts))))
+    # each piece keeps its own vertices only
+    verts = np.concatenate([p[np.arange(p.shape[1]) < c[:, None]] for p, c, _, _ in parts])
+    pcnt = np.concatenate([c for _, c, _, _ in parts])
+    off = np.cumsum(pcnt) - pcnt
+    # a span lists its convex pieces, then its concave rings' pieces
+    pring = np.concatenate([r for _, _, _, r in parts])
+    perm = np.argsort(pring, kind="stable")
+    starts = np.searchsorted(pring[perm], np.arange(n + 1))
+    boxes = np.concatenate([bx for _, _, bx, _ in parts])
+    return verts, off[perm], pcnt[perm], starts, boxes[perm]
+
+
+def gather_pieces(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray,
+                  idx: np.ndarray) -> np.ndarray:
+    """Pieces ``idx`` of a :func:`convex_cover_ragged` store, padded to
+    the widest of them: ``(len(idx), W, 2)``, pad slots holding each
+    piece's first vertex, as ``convex_cover_flat`` pads."""
+    c = cnt[idx]
+    j = np.arange(int(c.max()) if len(c) else 0)
+    return verts[off[idx][:, None] + np.where(j[None, :] < c[:, None], j[None, :], 0)]
 
 
 def convex_cover_batch(pts: np.ndarray, cnt: np.ndarray) -> list[list[np.ndarray]]:

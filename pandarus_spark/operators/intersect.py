@@ -185,14 +185,13 @@ def candidate_pairs(features1: DataFrame, features2: DataFrame,
     # each side emits ancestors down to the other side's coarsest level,
     # guaranteeing a shared key for any bbox overlap without emitting the
     # root cell globally (tiling/cells.py docstring).
-    c1 = (cover_features(features1, res, max_cells, with_parents_to=min(lo2, res), with_meta=True)
-          .withColumnRenamed("feature_id", "from_id")
-          .withColumnRenamed("native_res", "f_native")
-          .withColumnRenamed("minx", "f_minx").withColumnRenamed("miny", "f_miny"))
-    c2 = (cover_features(features2, res, max_cells, with_parents_to=min(lo1, res), with_meta=True)
-          .withColumnRenamed("feature_id", "to_id")
-          .withColumnRenamed("native_res", "t_native")
-          .withColumnRenamed("minx", "t_minx").withColumnRenamed("miny", "t_miny"))
+    def side(features, lo, id_col, p):
+        return cover_features(features, res, max_cells, with_parents_to=min(lo, res),
+                              with_meta=True).select(
+            F.col("feature_id").alias(id_col), "cell", F.col("native_res").alias(f"{p}_native"),
+            F.col("minx").alias(f"{p}_minx"), F.col("miny").alias(f"{p}_miny"))
+    c1 = side(features1, lo2, "from_id", "f")
+    c2 = side(features2, lo1, "to_id", "t")
 
     pairs = C._salted_join(c1, c2, "cell", ["from_id"], salt_buckets, salt_threshold)
     return pairs.filter(_owner_cell_filter()).select("from_id", "to_id")
@@ -287,25 +286,16 @@ def _refine_cover_batch(rows, B):
     # rings that failed the decode have cnt 0 and so no cover pieces
     fpts, fcnt, starts, boxes = B.convex_cover_flat(u_pts, u_cnt)
     npieces = np.diff(starts)
-    # ragged cross product: every (subject piece x clip piece) of every
-    # row, bbox-screened, in the scalar nested-loop order (sub outer)
-    fanout = np.where(handled, npieces[uf] * npieces[ut], 0)
-    handled &= fanout <= _CONCAVE_PAIR_CAP
+    handled &= npieces[uf] * npieces[ut] <= _CONCAVE_PAIR_CAP
     if not handled.any():
         return handled, None
     hidx = np.nonzero(handled)[0]
-    uf, ut, fanout = uf[hidx], ut[hidx], fanout[hidx]
-    rep = np.repeat(np.arange(len(hidx)), fanout)
-    ends = np.cumsum(fanout)
-    p = np.arange(len(rep)) - np.repeat(ends - fanout, fanout)
-    nt = npieces[ut][rep]
-    sub_idx = starts[uf][rep] + p // nt
-    clip_idx = starts[ut][rep] + p % nt
-    sb, cb = boxes[sub_idx], boxes[clip_idx]
-    touch = ~((sb[:, 2] < cb[:, 0]) | (cb[:, 2] < sb[:, 0])
-              | (sb[:, 3] < cb[:, 1]) | (cb[:, 3] < sb[:, 1]))
-    sub_idx, clip_idx = sub_idx[touch], clip_idx[touch]
-    piece_row = hidx[rep[touch]]
+    uf, ut = uf[hidx], ut[hidx]
+    # ragged cross product: every (subject piece x clip piece) of every
+    # row, bbox-screened, in the scalar nested-loop order (sub outer)
+    rep, sub_idx, clip_idx = B.fan_out_pairs(starts[uf], npieces[uf], boxes,
+                                             starts[ut], npieces[ut], boxes)
+    piece_row = hidx[rep]
     if not len(piece_row):
         return handled, None
     cp = B.ensure_ccw_batch(fpts[clip_idx], fcnt[clip_idx])

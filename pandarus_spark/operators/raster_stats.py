@@ -120,9 +120,9 @@ def _tile_candidates(features: DataFrame, cells: DataFrame,
     from .intersect import _explode_cells, _min_emit_res, _with_units, cover_features
 
     lo = _min_emit_res(features, res, max_cells)
-    fcov = (cover_features(features, res, max_cells, with_meta=True)
-            .withColumnRenamed("native_res", "f_native")
-            .withColumnRenamed("minx", "f_minx").withColumnRenamed("miny", "f_miny"))
+    fcov = cover_features(features, res, max_cells, with_meta=True).select(
+        "feature_id", "cell", F.col("native_res").alias("f_native"),
+        F.col("minx").alias("f_minx"), F.col("miny").alias("f_miny"))
     feats_geom = features.select("feature_id", "label", "geom_wkb")
     fcov = fcov.join(feats_geom, "feature_id")
 
@@ -176,86 +176,24 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
     if strategy == "tiles":
         cand = _tile_candidates(features, cells, res, max_cells)
     else:
-        feats = F.broadcast(features.select("label", "geom_wkb", "minx", "miny", "maxx", "maxy")
-                            .withColumnRenamed("minx", "fminx").withColumnRenamed("miny", "fminy")
-                            .withColumnRenamed("maxx", "fmaxx").withColumnRenamed("maxy", "fmaxy"))
+        feats = F.broadcast(features.select(
+            "label", "geom_wkb", *(F.col(c).alias(f"f{c}") for c in ("minx", "miny", "maxx", "maxy"))))
         # bbox-overlap candidate join (pushes down as range predicates)
         cand = cells.join(feats, (F.col("minx") < F.col("fmaxx")) & (F.col("maxx") > F.col("fminx"))
                           & (F.col("miny") < F.col("fmaxy")) & (F.col("maxy") > F.col("fminy")))
 
+    # the weight of each candidate row, one Arrow batch at a time.
+    # Coverage is one batched kernel per batch (_coverage_fractions):
+    # each distinct zone decoded once, all convex covers built at once,
+    # every (cell × zone piece) pair whose boxes touch clipped against
+    # the cell box in one clip_convex_batch call per budget span of
+    # pairs, and the signed piece areas (holes −) summed per row with
+    # np.add.at.  Centers tests cell centers zone by zone.
     centers = method == "centers"
 
     def gen(batches):
-        import pandas as pd
-
-        from ..geometry import batch as B
         for pdf in batches:
-            out = {"label": [], "value": [], "weight": []}
-            if has_w:
-                out["wval"] = []
-            for wkb, grp in pdf.groupby("geom_wkb", sort=False):
-                geom = G.wkb_loads(bytes(wkb))
-                rings_list = G.extract_kind_parts(geom, "polygon")
-                mnx = grp["minx"].to_numpy(); mny = grp["miny"].to_numpy()
-                mxx = grp["maxx"].to_numpy(); mxy = grp["maxy"].to_numpy()
-                vals = grp["value"].to_numpy()
-                labels = grp["label"].to_numpy()
-                wvals = grp["wval"].to_numpy() if has_w else None
-                if centers:
-                    pts = np.column_stack([(mnx + mxx) / 2.0, (mny + mxy) / 2.0])
-                    mask = np.zeros(len(pts), dtype=bool)
-                    for rings in rings_list:
-                        # strict interior test for centers (rasterstats
-                        # all_touched=False): nudge by excluding boundary
-                        mask |= _centers_in(pts, rings)
-                    out["label"].extend(labels[mask]); out["value"].extend(vals[mask])
-                    out["weight"].extend([1.0] * int(mask.sum()))
-                else:
-                    # batched coverage weights: clip each feature ring's
-                    # CONVEX COVER (the ring itself when convex, its
-                    # trapezoid decomposition otherwise) against every
-                    # cell box in vectorized S-H passes.  Covers are
-                    # needed because S-H drops area for a concave
-                    # subject whose intersection with the box is
-                    # disconnected (round-2 fuzz, same fix as the
-                    # overlay kernel); cover pieces partition the
-                    # ring's region, so per-cell piece areas sum to
-                    # area(box∩ring).  Holes subtract (they lie inside
-                    # their exterior): area(box∩poly) =
-                    # area(box∩ext) − Σ area(box∩hole), the same value
-                    # the scalar decomposition sums.
-                    ncell = len(vals)
-                    clip_pts = np.stack([
-                        np.column_stack([mnx, mny]), np.column_stack([mxx, mny]),
-                        np.column_stack([mxx, mxy]), np.column_stack([mnx, mxy])],
-                        axis=1)  # (N, 4, 2) CCW
-                    clip_cnt = np.full(ncell, 4, dtype=np.int64)
-                    area_tot = np.zeros(ncell)
-                    for rings in rings_list:
-                        for ri, ring in enumerate(rings):
-                            cover = G._convex_cover(
-                                np.asarray(ring, dtype=np.float64))
-                            for piece in cover:
-                                sp, sc = B.pad_rings([piece])
-                                subj = np.broadcast_to(sp, (ncell,) + sp.shape[1:])
-                                scnt = np.full(ncell, sc[0], dtype=np.int64)
-                                op, oc = B.clip_convex_batch(subj, scnt,
-                                                             clip_pts, clip_cnt)
-                                a = B.ring_area_batch(op, oc)
-                                area_tot += a if ri == 0 else -a
-                    cell_area = (mxx - mnx) * (mxy - mny)
-                    frac = area_tot / cell_area
-                    keep = frac > 1e-12
-                    out["label"].extend(labels[keep]); out["value"].extend(vals[keep])
-                    out["weight"].extend(np.minimum(frac[keep], 1.0))
-                    if has_w:
-                        out["wval"].extend(wvals[keep])
-            cols = {"label": pd.Series(out["label"], dtype="object"),
-                    "value": pd.Series(out["value"], dtype="float64"),
-                    "weight": pd.Series(out["weight"], dtype="float64")}
-            if has_w:
-                cols["wval"] = pd.Series(out["wval"], dtype="float64")
-            yield pd.DataFrame(cols)
+            yield _weight_frame(pdf, centers, has_w)
 
     schema = WEIGHT_SCHEMA + (", wval double" if has_w else "")
     weighted = cand.mapInPandas(gen, schema=schema)
@@ -282,6 +220,131 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
         sel += [F.col("vwmean").cast("float").cast("double").alias("weighted_mean"),
                 F.col("vwsum").cast("float").cast("double").alias("weighted_sum")]
     return stats.select(*sel)
+
+
+def _weight_frame(pdf, centers: bool, has_w: bool):
+    """One Arrow batch of (cell, zone) candidate rows → its
+    :data:`WEIGHT_SCHEMA` rows (plus ``wval`` when ``has_w``), zone by
+    zone in :func:`_zone_order`.  ``centers``: weight 1 per cell whose
+    center is in its zone.  Coverage: the covered fraction of the cell,
+    kept above 1e-12 and capped at 1, from ONE batched kernel over the
+    whole batch (:func:`_coverage_fractions`) — no per-zone loop."""
+    import pandas as pd
+    box = [pdf[k].to_numpy() for k in ("minx", "miny", "maxx", "maxy")]
+    if centers:
+        rows = _center_rows(pdf["geom_wkb"], *box)
+        weight = np.ones(len(rows))
+    else:
+        order, frac = _coverage_fractions(pdf["geom_wkb"], *box)
+        keep = frac > 1e-12
+        rows, weight = order[keep], np.minimum(frac[keep], 1.0)
+    cols = {"label": pd.Series(pdf["label"].to_numpy()[rows], dtype="object"),
+            "value": pd.Series(pdf["value"].to_numpy()[rows], dtype="float64"),
+            "weight": pd.Series(weight, dtype="float64")}
+    if has_w:
+        cols["wval"] = pd.Series(pdf["wval"].to_numpy()[rows], dtype="float64")
+    return pd.DataFrame(cols)
+
+
+def _zone_order(wkbs) -> tuple[np.ndarray, np.ndarray, object]:
+    """Factorize the zone WKBs of one Arrow batch: ``(order, codes,
+    uniq)``.  ``order`` lists the row positions zone by zone, zones in
+    order of first appearance and rows in input order within a zone —
+    ``groupby("geom_wkb", sort=False)``'s order, so the aggregate
+    downstream sums in the same order — without the null-zone rows.
+    ``codes[k]`` is row ``order[k]``'s index into ``uniq``."""
+    import pandas as pd
+    codes, uniq = pd.factorize(wkbs)
+    order = np.argsort(codes, kind="stable")
+    order = order[codes[order] >= 0]
+    return order, codes[order], uniq
+
+
+def _center_rows(wkbs, mnx, mny, mxx, mxy) -> np.ndarray:
+    """``method="centers"``: the row positions, in :func:`_zone_order`,
+    whose cell center lies in the row's zone (one loop pass per zone)."""
+    order, codes, uniq = _zone_order(wkbs)
+    bounds = np.searchsorted(codes, np.arange(len(uniq) + 1))
+    out = [order[:0]]
+    for z, wkb in enumerate(uniq):
+        seg = order[bounds[z]:bounds[z + 1]]
+        pts = np.column_stack([(mnx[seg] + mxx[seg]) / 2.0, (mny[seg] + mxy[seg]) / 2.0])
+        mask = np.zeros(len(seg), dtype=bool)
+        for rings in G.extract_kind_parts(G.wkb_loads(bytes(wkb)), "polygon"):
+            # strict interior test for centers (rasterstats
+            # all_touched=False): nudge by excluding boundary
+            mask |= _centers_in(pts, rings)
+        out.append(seg[mask])
+    return np.concatenate(out)
+
+
+def _coverage_fractions(wkbs, mnx, mny, mxx, mxy) -> tuple[np.ndarray, np.ndarray]:
+    """Coverage weights of one Arrow batch of (cell, zone) candidate
+    rows in one batched kernel: ``(order, frac)``, the rows in
+    :func:`_zone_order` and each one's covered fraction of its cell box
+    (the caller keeps ``frac > 1e-12`` and caps it at 1).
+
+    Each distinct zone is decoded once and its polygon rings flattened
+    in (part, ring) order, exteriors signed +, holes −; their convex
+    covers all come from one ``convex_cover_ragged`` (covers, not rings:
+    Sutherland–Hodgman drops area when a concave subject's clip is
+    disconnected; the pieces partition the ring, so per-cell piece
+    areas sum to area(box ∩ ring)).  Every (cell row × piece of its
+    zone) pair whose boxes touch is clipped against the cell box, one
+    ``clip_convex_batch`` per budget span of pairs of like width, and the signed
+    areas sum per row with ``np.add.at`` in piece order: area(box ∩
+    poly) = Σ area(box ∩ exterior pieces) − Σ area(box ∩ hole pieces),
+    the value the scalar decomposition sums.  Every temporary is
+    bounded by ``batch.budget_spans``, so one wide ring costs memory by
+    its own width only.  A row's value depends on its own zone and cell
+    only, not on the rest of the batch (pinned by
+    tests/test_coverage_kernel.py)."""
+    from ..geometry import batch as B
+    order, codes, uniq = _zone_order(wkbs)
+    mnx, mny, mxx, mxy = mnx[order], mny[order], mxx[order], mxy[order]
+    n = len(order)
+    rings, ring_zone, sign = [], [], []
+    for z, wkb in enumerate(uniq):
+        for part in G.extract_kind_parts(G.wkb_loads(bytes(wkb)), "polygon"):
+            for ri, ring in enumerate(part):
+                rings.append(ring)
+                ring_zone.append(z)
+                sign.append(1.0 if ri == 0 else -1.0)
+    area = np.zeros(n)
+    if n and rings:
+        verts, off, pcnt, starts, boxes = B.convex_cover_ragged(rings)
+        piece_sign = np.repeat(sign, np.diff(starts))
+        # a zone's rings, and so its pieces, are one contiguous run
+        z_start = starts[np.searchsorted(ring_zone, np.arange(len(uniq) + 1))]
+        z_n = np.diff(z_start)
+        cell_box = np.column_stack([mnx, mny, mxx, mxy])
+        clip = np.stack([np.column_stack([mnx, mny]), np.column_stack([mxx, mny]),
+                         np.column_stack([mxx, mxy]), np.column_stack([mnx, mxy])],
+                        axis=1)  # (n, 4, 2) CCW
+        fan = z_n[codes]
+        # the fan-out holds ~16 f8-sized values per pair before the screen
+        for s, e in B.budget_spans(fan, np.full(len(fan), 16)):
+            c = codes[s:e]
+            # the cell side of each pair is its own row: b_idx is the row
+            _, piece, row = B.fan_out_pairs(z_start[c], z_n[c], boxes, np.arange(s, e),
+                                            np.ones(e - s, dtype=np.int64), cell_box)
+            # clip the pairs narrowest piece first, so a wide piece pads
+            # only its own span: a clip pads its pairs to the widest piece
+            # and each box edge can add a vertex, ~16 f8 per vertex slot
+            # (points, next points, crossings, the compacted copy, sides,
+            # parameters)
+            by_w = np.argsort(pcnt[piece], kind="stable")
+            pair_area = np.empty(len(row))
+            for a, b in B.budget_spans(np.ones(len(row), dtype=np.int64),
+                                       16 * (pcnt[piece[by_w]] + 4)):
+                k = by_w[a:b]
+                out_pts, out_cnt = B.clip_convex_batch(
+                    B.gather_pieces(verts, off, pcnt, piece[k]), pcnt[piece[k]],
+                    clip[row[k]], np.full(len(k), 4, dtype=np.int64))
+                pair_area[k] = B.ring_area_by_count(out_pts, out_cnt)
+            # unbuffered, in pair order: each row sums its pieces in order
+            np.add.at(area, row, piece_sign[piece] * pair_area)
+    return order, area / ((mxx - mnx) * (mxy - mny))
 
 
 def _coverage_weights_scalar(rings_list: list, mnx: np.ndarray, mny: np.ndarray,
