@@ -3,39 +3,31 @@
 Round-2 scale work: the general (non-rect) refine and the zonal
 coverage weights previously ran the clip kernel per row inside the
 Arrow batch — correct, but 100% scalar Python for real-polygon
-workloads (VERDICT round 1, "What's wrong" #4).  This module batches
-the same operations across N pairs:
+workloads (VERDICT round 1, "What's wrong" #4).  Both now run one
+pipeline over all pairs of a batch:
 
-* :func:`decode_simple_polygon_batch` — vectorized WKB decode for
-  single-ring Polygon / 1-part MultiPolygon rows (grouped by byte
-  layout, one ``np.frombuffer`` per group);
-* :func:`convex_cover_flat` — every ring's disjoint convex cover at
-  once (the ring itself when convex, its trapezoid decomposition
-  otherwise), flat and padded; :func:`convex_cover_ragged` keeps the
-  same pieces unpadded, covering the rings in budget spans, and
-  :func:`gather_pieces` pads a set of them for a clip;
+* :func:`polygon_rings` — the rings of each decoded geometry, flat;
+* :func:`convex_cover_ragged` — every ring's disjoint convex cover (the
+  ring itself when convex, its trapezoid decomposition otherwise),
+  unpadded; :func:`gather_pieces` pads a set of pieces for a clip;
 * :func:`fan_out_pairs` — the ragged (row × piece × piece) cross
-  product both batched clip callers build, box-screened;
-* :func:`budget_spans` — cuts padded work into contiguous spans whose
-  temporaries fit one f8 budget, so one wide ring or piece bounds only
-  the spans around it;
-* :func:`clip_convex_batch` — Sutherland–Hodgman over N (subject,
-  convex clip) pairs at once; arithmetic mirrors
-  :func:`..geom.clip_ring_convex` operation-for-operation (same inside
-  epsilon, same interpolation, same consecutive-vertex dedup and
-  closing-point drop), so both paths agree to fp round-off;
-* :func:`ring_area_batch` / :func:`mollweide_area_batch` — masked
-  shoelace over padded rings; :func:`ring_area_by_count` sums each
-  ring over its own vertices only, so its value does not depend on the
-  batch the ring is padded into.
+  product, box-screened;
+* :func:`clip_pairs` — THE clip driver: (piece, convex clip ring) pairs
+  clipped narrowest first by :func:`clip_convex_batch`, Sutherland–
+  Hodgman over N pairs at once whose arithmetic mirrors
+  :func:`..geom.clip_ring_convex` operation for operation;
+* :func:`ring_area_by_count` — shoelace over each ring's own vertices,
+  so a ring's area does not depend on the batch it rides in.
 
-The two callers: the overlay refine's cover tier
+Its callers: the overlay refine's cover tier
 (``operators/intersect._refine_cover_batch``: subject piece × clip
-piece per candidate row) and the zonal coverage weights
+piece per candidate row, clip pieces oriented once by
+:func:`ccw_pieces`, parts encoded by :func:`multipolygon_wkb_ragged`)
+and the zonal coverage weights
 (``operators/raster_stats._coverage_fractions``: zone piece × cell box
-per candidate cell, holes signed −, one clip call per budget span of an
-Arrow batch's pairs).  The only remaining Python loops are over
-*clip edges* (≤ ring vertex count, a small constant) and over distinct
+per candidate cell, holes signed −).  Every padded temporary is cut
+into :func:`budget_spans`, so one wide ring costs memory by its own
+width.  Python loops run over clip edges, budget spans and distinct
 vertex counts — never over pairs.
 
 Reference semantics: pandarus utils/geometry.py:74-131 (refine) and
@@ -96,11 +88,11 @@ def _gather_next(arr: np.ndarray, cnt: np.ndarray) -> np.ndarray:
 _POLY_HDR = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00"            # Polygon, 1 ring
 _MPOLY_HDR = (b"\x01\x06\x00\x00\x00\x01\x00\x00\x00" + _POLY_HDR)  # MultiPolygon[1]
 
-# rows above this vertex count take the scalar path: the batch decode
-# pads every row to the widest ring in the batch, so one 50k-vertex
-# coastline in a 5k-row Arrow batch would otherwise allocate
-# 5000×50001×16 B ≈ 4 GB (round-2 review finding).  4096 bounds the
-# dense array at maxRecordsPerBatch to a few hundred MB worst case.
+# decode_simple_polygon_batch rejects rings above this vertex count: it
+# pads every row to the widest ring it decodes, so one 50k-vertex
+# coastline among 5k rows would allocate 5000×50001×16 B ≈ 4 GB.  The
+# refine no longer decodes through it (it covers rings unpadded, see
+# convex_cover_ragged), so this bounds only that padded decode.
 BATCH_MAX_VERTS = 4096
 
 
@@ -158,19 +150,29 @@ def decode_simple_polygon_batch(wkbs: list) -> tuple[np.ndarray, np.ndarray, np.
     return pts, cnt, ok
 
 
+def polygon_rings(geoms: list) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+    """The polygon rings of geometry dicts, flattened in (geometry,
+    part, ring) order: ``(rings, geometry index of each ring, exterior
+    flag)``.  Rings are as decoded (closed); non-polygon components and
+    ``None`` geometries contribute none."""
+    from . import geom as G
+    rings, geom_idx, exterior = [], [], []
+    for gi, g in enumerate(geoms):
+        for part in (G.extract_kind_parts(g, "polygon") if g is not None else ()):
+            rings.extend(part)
+            geom_idx.extend([gi] * len(part))
+            exterior.extend(j == 0 for j in range(len(part)))
+    return rings, np.array(geom_idx, dtype=np.int64), np.array(exterior, dtype=bool)
+
+
 def is_convex_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     """Vectorized convexity test on padded open rings (matches
     geom.is_convex: no strictly-mixed cross-product signs)."""
     n, m = pts.shape[:2]
     if m == 0:
         return np.zeros(n, dtype=bool)
-    idx1 = np.arange(1, m + 1)[None, :].repeat(n, axis=0)
-    idx1[idx1 >= cnt[:, None]] = 0
-    idx2 = idx1 + 1
-    idx2[idx2 >= cnt[:, None]] = 0
-    rows = np.arange(n)[:, None]
-    b = pts[rows, idx1]
-    c = pts[rows, idx2]
+    b = _gather_next(pts, cnt)
+    c = _gather_next(b, cnt)
     v1 = b - pts
     v2 = c - b
     cross = v1[..., 0] * v2[..., 1] - v1[..., 1] * v2[..., 0]
@@ -182,17 +184,34 @@ def is_convex_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
 
 def ensure_ccw_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     """Reverse rows whose signed area is negative (clip rings must be
-    CCW so 'inside' is left of each edge — geom.clip_ring_convex)."""
+    CCW so 'inside' is left of each edge — geom.clip_ring_convex).
+    Pad slots keep their values."""
     area = signed_ring_area_batch(pts, cnt)
     cw = area < 0
     if not cw.any():
         return pts
-    n, m = pts.shape[:2]
+    j = np.arange(pts.shape[1])[None, :]
+    c = cnt[cw][:, None]
     out = pts.copy()
-    rows = np.nonzero(cw)[0]
-    for i in rows:  # rows needing reversal are rare; per-row flip is fine
-        c = cnt[i]
-        out[i, :c] = pts[i, :c][::-1]
+    out[cw] = np.take_along_axis(pts[cw], np.where(j < c, c - 1 - j, j)[..., None], axis=1)
+    return out
+
+
+def _count_groups(off: np.ndarray, cnt: np.ndarray):
+    """Per distinct vertex count ``c >= 3`` of a ragged ring store: the
+    rings with that count and the ``(k, c)`` indices of their vertices."""
+    for c in np.unique(cnt[cnt >= 3]):
+        sel = np.nonzero(cnt == c)[0]
+        yield sel, off[sel][:, None] + np.arange(c)
+
+
+def ccw_pieces(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """A ragged store's vertices with every clockwise ring reversed
+    (:func:`ensure_ccw_batch` per vertex count), so a clip piece is
+    oriented once however many pairs it clips."""
+    out = verts.copy()
+    for sel, idx in _count_groups(off, cnt):
+        out[idx] = ensure_ccw_batch(verts[idx], cnt[sel])
     return out
 
 
@@ -211,15 +230,16 @@ def ring_area_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     return np.abs(signed_ring_area_batch(pts, cnt))
 
 
-def ring_area_by_count(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
-    """:func:`ring_area_batch`, one call per distinct vertex count with
-    the padding sliced off: numpy's pairwise row sum groups its terms
-    by row width, so a ring's area then does not depend on how wide
-    the batch it rides in is.  Rings with ``cnt < 3`` are 0."""
+def ring_area_by_count(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """Unsigned area of each ring of a ragged store (ring i's open
+    vertices are ``verts[off[i]:off[i] + cnt[i]]``), one
+    :func:`ring_area_batch` per distinct vertex count with no padding:
+    numpy's pairwise row sum groups its terms by row width, so a ring's
+    area then does not depend on the batch it rides in.  Rings with
+    ``cnt < 3`` are 0."""
     area = np.zeros(len(cnt))
-    for c in np.unique(cnt[cnt >= 3]):
-        sel = np.nonzero(cnt == c)[0]
-        area[sel] = ring_area_batch(pts[sel, :c], cnt[sel])
+    for sel, idx in _count_groups(off, cnt):
+        area[sel] = ring_area_batch(verts[idx], cnt[sel])
     return area
 
 
@@ -231,48 +251,52 @@ def mollweide_area_batch(pts: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     return ring_area_batch(proj, cnt)
 
 
+def _u32_bytes(v: np.ndarray) -> np.ndarray:
+    return v.astype("<u4").view(np.uint8).reshape(len(v), 4)
+
+
+def multipolygon_wkb_ragged(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray,
+                            nparts: np.ndarray) -> list[bytes]:
+    """One MultiPolygon WKB per row from a ragged store of open rings:
+    row i holds the next ``nparts[i]`` rings, in store order, each one
+    a single-ring Polygon closed on the wire.  The byte layout is
+    ``geom.wkb_dumps``' on the scalar kernel's MultiPolygon output; the
+    whole batch is one byte assembly, sliced per row."""
+    c1 = cnt + 1                                   # closed vertex count
+    part_len = 13 + 16 * c1
+    prow = np.repeat(np.arange(len(nparts)), nparts)
+    row_len = 9 + np.bincount(prow, weights=part_len, minlength=len(nparts)).astype(np.int64)
+    row_at = np.cumsum(row_len) - row_len
+    # each row's 9-byte header precedes its parts
+    part_at = np.cumsum(part_len) - part_len + 9 * (prow + 1)
+    buf = np.empty(int(row_len.sum()), dtype=np.uint8)
+    buf[row_at[:, None] + np.arange(5)] = np.frombuffer(b"\x01\x06\x00\x00\x00", dtype=np.uint8)
+    buf[row_at[:, None] + np.arange(5, 9)] = _u32_bytes(nparts)
+    buf[part_at[:, None] + np.arange(9)] = np.frombuffer(_POLY_HDR, dtype=np.uint8)
+    buf[part_at[:, None] + np.arange(9, 13)] = _u32_bytes(c1)
+    k = np.arange(int(c1.sum())) - np.repeat(np.cumsum(c1) - c1, c1)   # slot in its ring
+    src = np.repeat(off, c1) + np.where(k == np.repeat(cnt, c1), 0, k)  # last slot closes
+    dst = np.repeat(part_at + 13, c1) + 16 * k
+    buf[dst[:, None] + np.arange(16)] = verts[src].astype("<f8").view(np.uint8).reshape(-1, 16)
+    raw = buf.tobytes()
+    return [raw[a:a + n] for a, n in zip(row_at.tolist(), row_len.tolist())]
+
+
 def multipolygon_wkb_batch(pts: np.ndarray, cnt: np.ndarray) -> list[bytes | None]:
     """Encode padded open rings as MultiPolygon[1 Polygon[1 ring]] WKBs
-    (closed on the wire), grouped by vertex count so each group is one
-    bulk byte assembly — the general-shape twin of the rect fast path's
-    inline WKB builder (operators/intersect.py).
+    (closed on the wire) — the general-shape twin of the rect fast
+    path's inline WKB builder (operators/intersect.py).
 
     Rows with ``cnt < 3`` (degenerate after clipping) stay ``None`` —
     callers must filter them out or tolerate nulls in the column."""
-    n = len(cnt)
-    out: list[bytes | None] = [None] * n
-    for c in np.unique(cnt):
-        c = int(c)
-        idxs = np.nonzero(cnt == c)[0]
-        if c < 3:
-            continue
-        npts = c + 1
-        hdr = (b"\x01\x06\x00\x00\x00\x01\x00\x00\x00"
-               b"\x01\x03\x00\x00\x00\x01\x00\x00\x00" + struct.pack("<I", npts))
-        row_len = len(hdr) + 16 * npts
-        buf = np.empty((len(idxs), row_len), dtype=np.uint8)
-        buf[:, :len(hdr)] = np.frombuffer(hdr, dtype=np.uint8)
-        closed = np.concatenate([pts[idxs, :c], pts[idxs, 0:1]], axis=1)
-        buf[:, len(hdr):] = closed.astype("<f8").view(np.uint8).reshape(len(idxs), 16 * npts)
-        raw = buf.tobytes()
-        for k, i in enumerate(idxs):
-            out[i] = raw[k * row_len:(k + 1) * row_len]
+    out: list[bytes | None] = [None] * len(cnt)
+    ok = np.nonzero(cnt >= 3)[0]
+    c = cnt[ok]
+    verts = pts[ok][np.arange(pts.shape[1])[None, :] < c[:, None]]
+    wkbs = multipolygon_wkb_ragged(verts, np.cumsum(c) - c, c, np.ones(len(ok), dtype=np.int64))
+    for i, w in zip(ok.tolist(), wkbs):
+        out[i] = w
     return out
-
-
-def multipolygon_parts_wkb(parts: list[tuple[np.ndarray, int]]) -> bytes:
-    """MultiPolygon WKB from ORDERED (padded open ring, cnt) parts —
-    the multi-part sibling of :func:`multipolygon_wkb_batch`, used by
-    the concave refine tier whose rows carry one part per surviving
-    (subject piece × clip piece).  Byte layout matches
-    ``geom.wkb_dumps`` on the scalar kernel's MultiPolygon output
-    (closed rings on the wire)."""
-    chunks = [b"\x01\x06\x00\x00\x00" + struct.pack("<I", len(parts))]
-    for p, c in parts:
-        chunks.append(_POLY_HDR + struct.pack("<I", c + 1))
-        closed = np.concatenate([p[:c], p[0:1]], axis=0)
-        chunks.append(closed.astype("<f8").tobytes())
-    return b"".join(chunks)
 
 
 # ---------------------------------------------------------------------------
@@ -308,19 +332,34 @@ def fan_out_pairs(a_start: np.ndarray, a_n: np.ndarray, a_boxes: np.ndarray,
     Pairs whose boxes (minx, miny, maxx, maxy rows of ``a_boxes`` /
     ``b_boxes``) are strictly apart are dropped; touching boxes stay.
 
+    The unscreened pairs, ~16 f8-sized values each, are built in
+    :func:`budget_spans`, and a row whose own pairs overrun the budget
+    is cut into runs of its a range, so no fan-out is unbounded.
+
     Returns ``(row, a_idx, b_idx)``.  ``row`` ascends and each row keeps
     the nested-loop order, so an unbuffered ``np.add.at`` over ``row``
     sums each row's pairs in that order."""
+    per = np.maximum(1, _COVER_CHUNK_FLOATS // (16 * np.maximum(b_n, 1)))  # a items per run
+    runs = -(-a_n // per)
+    run_row = np.repeat(np.arange(len(a_n)), runs)
+    k = (np.arange(len(run_row)) - np.repeat(np.cumsum(runs) - runs, runs)) * per[run_row]
+    a_start, a_n = a_start[run_row] + k, np.minimum(per[run_row], a_n[run_row] - k)
+    b_start, b_n = b_start[run_row], b_n[run_row]
     fan = a_n * b_n
-    row = np.repeat(np.arange(len(fan)), fan)
-    p = np.arange(len(row)) - np.repeat(np.cumsum(fan) - fan, fan)
-    nb = b_n[row]
-    a_idx = a_start[row] + p // nb
-    b_idx = b_start[row] + p % nb
-    ab, bb = a_boxes[a_idx], b_boxes[b_idx]
-    touch = ~((ab[:, 2] < bb[:, 0]) | (bb[:, 2] < ab[:, 0])
-              | (ab[:, 3] < bb[:, 1]) | (bb[:, 3] < ab[:, 1]))
-    return row[touch], a_idx[touch], b_idx[touch]
+    out = [np.zeros((3, 0), dtype=np.int64)]
+    for s, e in budget_spans(fan, np.full(len(fan), 16)):
+        f = fan[s:e]
+        run = np.repeat(np.arange(s, e), f)
+        p = np.arange(len(run)) - np.repeat(np.cumsum(f) - f, f)
+        nb = b_n[run]
+        a_idx = a_start[run] + p // nb
+        b_idx = b_start[run] + p % nb
+        ab, bb = a_boxes[a_idx], b_boxes[b_idx]
+        touch = ~((ab[:, 2] < bb[:, 0]) | (bb[:, 2] < ab[:, 0])
+                  | (ab[:, 3] < bb[:, 1]) | (bb[:, 3] < ab[:, 1]))
+        out.append(np.stack([run_row[run[touch]], a_idx[touch], b_idx[touch]]))
+    row, a_idx, b_idx = np.concatenate(out, axis=1)
+    return row, a_idx, b_idx
 
 
 # ---------------------------------------------------------------------------
@@ -346,16 +385,20 @@ def _compact(pts: np.ndarray, emit_a: np.ndarray, a_vals: np.ndarray,
     return new_pts[:, :max(m_new, 1)], new_cnt
 
 
-def _dedup_and_unclose(pts: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-pass cleanup, mirroring the scalar kernel: drop consecutive
-    duplicate vertices (atol 1e-12), then drop the last vertex when it
-    re-closes onto the first (atol 1e-12, rtol 0)."""
+def _dedup_and_unclose(pts: np.ndarray, cnt: np.ndarray,
+                       active: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-pass cleanup of the ``active`` rows, mirroring the scalar
+    kernel: drop consecutive duplicate vertices (atol 1e-12), then drop
+    the last vertex when it re-closes onto the first (atol 1e-12,
+    rtol 0).  Other rows pass unchanged: the scalar kernel cleans once
+    per clip edge, so a row whose clip ring is done is not cleaned
+    again for the longer clip rings beside it."""
     n, m = pts.shape[:2]
     valid = np.arange(m)[None, :] < cnt[:, None]
     keep = valid.copy()
     if m > 1:
         diff_ok = (np.abs(pts[:, 1:] - pts[:, :-1]) > 1e-12).any(axis=2)
-        keep[:, 1:] &= diff_ok
+        keep[:, 1:] &= diff_ok | ~active[:, None]
     none = np.zeros_like(keep)
     pts, cnt = _compact(pts, keep, pts, none, pts)
     # closing-point drop
@@ -363,7 +406,7 @@ def _dedup_and_unclose(pts: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np
     rows = np.arange(n)
     last = pts[rows, np.maximum(cnt - 1, 0)]
     first = pts[:, 0]
-    reclosed = (cnt > 1) & (np.abs(first - last) <= 1e-12).all(axis=1)
+    reclosed = active & (cnt > 1) & (np.abs(first - last) <= 1e-12).all(axis=1)
     cnt = np.where(reclosed, cnt - 1, cnt)
     return pts, cnt
 
@@ -414,9 +457,41 @@ def clip_convex_batch(subj_pts: np.ndarray, subj_cnt: np.ndarray,
             t = np.where(np.abs(d) > _EPS, side / np.where(d == 0.0, 1.0, d), 0.0)
         ip = pts + t[..., None] * (nxt - pts)
         pts, cnt = _compact(pts, cur_emit, pts, cross_emit, ip)
-        pts, cnt = _dedup_and_unclose(pts, cnt)
+        pts, cnt = _dedup_and_unclose(pts, cnt, active)
     cnt = np.where(cnt < 3, 0, cnt)
     return pts, cnt
+
+
+def clip_pairs(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray, sub: np.ndarray,
+               clip_verts: np.ndarray, clip_off: np.ndarray, clip_cnt: np.ndarray,
+               clip: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The clip driver both batched callers share: for every pair i,
+    ring ``sub[i]`` of the ragged store ``(verts, off, cnt)`` clipped by
+    the convex CCW ring ``clip[i]`` of ``(clip_verts, clip_off,
+    clip_cnt)``.
+
+    A clip pads its pairs to the widest and each clip edge can add a
+    vertex, ~16 f8 per vertex slot (points, next points, crossings, the
+    compacted copy, sides, parameters).  So the pairs are clipped
+    narrowest first, one :func:`clip_convex_batch` per
+    :func:`budget_spans` span, and a wide piece pads only its own span.
+    Returns the clipped open rings as a ragged store ``(verts, off,
+    cnt)`` in pair order; ``cnt`` 0 is empty."""
+    width = cnt[sub] + clip_cnt[clip]
+    by_w = np.argsort(width, kind="stable")
+    out_off = np.zeros(len(sub), dtype=np.int64)
+    out_cnt = np.zeros(len(sub), dtype=np.int64)
+    chunks, at = [np.zeros((0, 2))], 0
+    for a, b in budget_spans(np.ones(len(sub), dtype=np.int64), 16 * width[by_w]):
+        k = by_w[a:b]
+        pts, c = clip_convex_batch(
+            gather_pieces(verts, off, cnt, sub[k]), cnt[sub[k]],
+            gather_pieces(clip_verts, clip_off, clip_cnt, clip[k]), clip_cnt[clip[k]])
+        chunks.append(pts[np.arange(pts.shape[1])[None, :] < c[:, None]])
+        out_off[k] = at + np.cumsum(c) - c
+        out_cnt[k] = c
+        at += int(c.sum())
+    return np.concatenate(chunks), out_off, out_cnt
 
 
 # ---------------------------------------------------------------------------
@@ -445,8 +520,7 @@ def _decompose_chunk(pts: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.n
       when |shoelace| > 1e-18, in (slab, pair) order.
 
     Returns flat ``(ring_idx (P,), quads (P, 5, 2))`` sorted by
-    (ring, slab, pair) — callers regroup per ring or keep the flat
-    layout (``convex_cover_flat``).
+    (ring, slab, pair).
     """
     r, m = pts.shape[:2]
     rows = np.arange(r)[:, None]
@@ -539,99 +613,62 @@ def _decompose_chunk(pts: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.n
     return ri[keep][lex], quads[keep][lex]
 
 
-def convex_cover_flat(pts: np.ndarray, cnt: np.ndarray) -> tuple[
-        np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """``geom._convex_cover`` for every padded open ring at once, in a
-    FLAT layout built for the refine tier's piece-pair fan-out:
-
-    Returns ``(fpts (P, W, 2), fcnt (P,), starts (n+1,), boxes (P, 4))``
-    — padded OPEN cover pieces (ring i's pieces are
-    ``starts[i]:starts[i+1]``, in the scalar call's order), their vertex
-    counts, and their bboxes (minx, miny, maxx, maxy), all computed
-    without any per-piece Python.  Piece VALUES are bit-identical to
-    ``geom._convex_cover`` with the closing vertex stripped (pinned by
-    the differential fuzz in tests/test_refine_batch.py).  Convex rings
-    are their own single piece; small concave rings take the batched
-    trapezoid sweep; rings wider than ``COVER_MAX_VERTS`` defer to the
-    scalar decompose."""
+def _cover_parts(pts: np.ndarray, cnt: np.ndarray) -> list:
+    """``geom._convex_cover`` of every padded open ring: a list of
+    (padded open pieces, their counts, ring of each piece).  Convex
+    rings are their own piece; small concave rings take the batched
+    trapezoid sweep, in chunks within the budget; rings wider than
+    ``COVER_MAX_VERTS`` take the scalar decompose.  Each ring's pieces
+    are in one entry, in the scalar call's order."""
     from . import geom as G
-    n = len(cnt)
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return np.zeros((0, 0, 2)), z, np.zeros(1, dtype=np.int64), np.zeros((0, 4))
     conv = is_convex_batch(pts, cnt)
-    small = ~conv & (cnt >= 3) & (cnt <= COVER_MAX_VERTS)
-    big_idx = np.nonzero(~conv & (cnt > COVER_MAX_VERTS))[0]
-    big_covers: dict[int, list[np.ndarray]] = {}
-    for i in big_idx:
-        c = int(cnt[i])
-        big_covers[int(i)] = G.polygon_region_decompose(
-            [np.concatenate([pts[i, :c], pts[i, :1]], axis=0)])
-    # batched sweep over the small concave rings, flat output
-    small_idx = np.nonzero(small)[0]
-    q_ring = np.zeros(0, dtype=np.int64)
-    quads = np.zeros((0, 5, 2))
-    if len(small_idx):
-        m = int(cnt[small_idx].max())
+    ci = np.nonzero(conv)[0]
+    parts = [(pts[ci], cnt[ci], ci)]
+    small = np.nonzero(~conv & (cnt >= 3) & (cnt <= COVER_MAX_VERTS))[0]
+    if len(small):
+        m = int(cnt[small].max())
         per_ring = m * m * 8 + m * 6  # crossing cube + slab planes, floats
         step = max(1, _COVER_CHUNK_FLOATS // per_ring)
-        parts = []
-        for s in range(0, len(small_idx), step):
-            sel = small_idx[s:s + step]
-            ri, qs = _decompose_chunk(pts[sel, :m], cnt[sel])
-            parts.append((sel[ri], qs))
-        q_ring = np.concatenate([p[0] for p in parts])
-        quads = np.concatenate([p[1] for p in parts]) if parts else quads
-    # piece counts per ring -> starts
-    npieces = np.zeros(n, dtype=np.int64)
-    npieces[conv] = 1
-    if len(q_ring):
-        np.add.at(npieces, q_ring, 1)
-    for i, cov in big_covers.items():
-        npieces[i] = len(cov)
-    starts = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(npieces, out=starts[1:])
-    total = int(starts[-1])
-    w = 4
-    if conv.any():
-        w = max(w, int(cnt[conv].max()))
-    for cov in big_covers.values():
-        for p in cov:
-            w = max(w, len(p) - 1)
-    fpts = np.zeros((total, w, 2), dtype=np.float64)
-    fcnt = np.zeros(total, dtype=np.int64)
-    # convex rings: one piece each, copied in bulk per source width
-    conv_idx = np.nonzero(conv)[0]
-    if len(conv_idx):
-        pos = starts[conv_idx]
-        mw = min(pts.shape[1], w)
-        fpts[pos, :mw] = pts[conv_idx, :mw]
-        if mw < w:  # pad slots hold the first vertex (projection safety)
-            fpts[pos, mw:] = fpts[pos, :1]
-        fcnt[pos] = cnt[conv_idx]
-    # trapezoid quads: open 4-vertex pieces, already in (ring, slab,
-    # pair) order and grouped by ring (q_ring ascending within chunk;
-    # chunks cover disjoint ascending ring ranges)
-    if len(q_ring):
-        # q_ring is sorted; slot within its ring = index - first occurrence
-        within = np.arange(len(q_ring)) - np.searchsorted(q_ring, q_ring)
-        pos = starts[q_ring] + within
-        fpts[pos, :4] = quads[:, :4]
-        fpts[pos, 4:] = quads[:, :1]
-        fcnt[pos] = 4
-    for i, cov in big_covers.items():
-        for j, p in enumerate(cov):
-            c = len(p) - 1
-            pos = int(starts[i]) + j
-            fpts[pos, :c] = p[:c]
-            fpts[pos, c:] = p[:1]
-            fcnt[pos] = c
-    boxes = np.empty((total, 4), dtype=np.float64)
-    boxes[:, 0] = fpts[..., 0].min(axis=1)
-    boxes[:, 1] = fpts[..., 1].min(axis=1)
-    boxes[:, 2] = fpts[..., 0].max(axis=1)
-    boxes[:, 3] = fpts[..., 1].max(axis=1)
-    return fpts, fcnt, starts, boxes
+        for s in range(0, len(small), step):
+            sel = small[s:s + step]
+            ri, quads = _decompose_chunk(pts[sel, :m], cnt[sel])
+            parts.append((quads[:, :4], np.full(len(ri), 4), sel[ri]))
+    for i in np.nonzero(~conv & (cnt > COVER_MAX_VERTS))[0]:
+        c = int(cnt[i])
+        cover = G.polygon_region_decompose(
+            [np.concatenate([pts[i, :c], pts[i, :1]], axis=0)])
+        parts += [(p[None, :-1], np.array([len(p) - 1]), np.array([i])) for p in cover]
+    return parts
+
+
+def _ragged_cover(parts: list, n: int) -> tuple[
+        np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`convex_cover_ragged`'s store from :func:`_cover_parts`
+    entries of ``n`` rings."""
+    verts = np.concatenate([np.zeros((0, 2))] + [p[np.arange(p.shape[1]) < c[:, None]]
+                                                 for p, c, _ in parts])
+    pcnt = np.concatenate([np.zeros(0, dtype=np.int64)] + [c for _, c, _ in parts])
+    off = np.cumsum(pcnt) - pcnt
+    boxes = np.hstack([np.minimum.reduceat(verts, off, axis=0),
+                       np.maximum.reduceat(verts, off, axis=0)]) if len(off) else np.zeros((0, 4))
+    pring = np.concatenate([np.zeros(0, dtype=np.int64)] + [r for _, _, r in parts])
+    perm = np.argsort(pring, kind="stable")
+    starts = np.searchsorted(pring[perm], np.arange(n + 1))
+    return verts, off[perm], pcnt[perm], starts, boxes[perm]
+
+
+def convex_cover_flat(pts: np.ndarray, cnt: np.ndarray) -> tuple[
+        np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``geom._convex_cover`` for every padded open ring at once, padded:
+    ``(fpts (P, W, 2), fcnt (P,), starts (n+1,), boxes (P, 4))`` — open
+    cover pieces padded with their first vertex (ring i's pieces are
+    ``starts[i]:starts[i+1]``, in the scalar call's order), their vertex
+    counts and their bboxes (minx, miny, maxx, maxy).  Piece VALUES are
+    bit-identical to ``geom._convex_cover`` with the closing vertex
+    stripped (pinned by the differential fuzz in
+    tests/test_refine_batch.py)."""
+    verts, off, fcnt, starts, boxes = _ragged_cover(_cover_parts(pts, cnt), len(cnt))
+    return gather_pieces(verts, off, fcnt, np.arange(len(fcnt))), fcnt, starts, boxes
 
 
 def convex_cover_ragged(rings: list[np.ndarray]) -> tuple[
@@ -644,37 +681,15 @@ def convex_cover_ragged(rings: list[np.ndarray]) -> tuple[
     cnt[p]]``, ring i's pieces are ``starts[i]:starts[i+1]``, and the
     pieces, their order and their boxes are ``convex_cover_flat``'s.
     Rings are padded only within :func:`budget_spans` of consecutive
-    rings.  In each span a convex ring is its own piece, copied from its
-    vertices, and only the concave rings go through ``convex_cover_flat``,
-    so their 4-vertex trapezoids never pad to a wide convex ring.
-    :func:`gather_pieces` pads a set of pieces for a clip."""
-    n = len(rings)
-    if not n:
-        return (np.zeros((0, 2)), np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
-                np.zeros(1, dtype=np.int64), np.zeros((0, 4)))
-    parts = []  # (padded pieces, counts, boxes, ring of each piece)
+    rings, and a piece keeps its own vertices only, so 4-vertex
+    trapezoids never pad to a wide convex ring.  :func:`gather_pieces`
+    pads a set of pieces for a clip."""
     width = np.array([len(r) for r in rings], dtype=np.int64)
+    parts = []
     # is_convex_batch holds ~16 f8 per vertex slot
-    for s, e in budget_spans(np.ones(n, dtype=np.int64), 16 * width):
-        pts, cnt = pad_rings(rings[s:e])
-        conv = is_convex_batch(pts, cnt)
-        ci, ki = np.nonzero(conv)[0], np.nonzero(~conv)[0]
-        if len(ci):
-            cp = pts[ci]
-            parts.append((cp, cnt[ci], np.hstack([cp.min(axis=1), cp.max(axis=1)]), s + ci))
-        if len(ki):
-            fpts, fcnt, kstarts, fbox = convex_cover_flat(pts[ki], cnt[ki])
-            parts.append((fpts, fcnt, fbox, s + np.repeat(ki, np.diff(kstarts))))
-    # each piece keeps its own vertices only
-    verts = np.concatenate([p[np.arange(p.shape[1]) < c[:, None]] for p, c, _, _ in parts])
-    pcnt = np.concatenate([c for _, c, _, _ in parts])
-    off = np.cumsum(pcnt) - pcnt
-    # a span lists its convex pieces, then its concave rings' pieces
-    pring = np.concatenate([r for _, _, _, r in parts])
-    perm = np.argsort(pring, kind="stable")
-    starts = np.searchsorted(pring[perm], np.arange(n + 1))
-    boxes = np.concatenate([bx for _, _, bx, _ in parts])
-    return verts, off[perm], pcnt[perm], starts, boxes[perm]
+    for s, e in budget_spans(np.ones(len(rings), dtype=np.int64), 16 * width):
+        parts += [(p, c, s + r) for p, c, r in _cover_parts(*pad_rings(rings[s:e]))]
+    return _ragged_cover(parts, len(rings))
 
 
 def gather_pieces(verts: np.ndarray, off: np.ndarray, cnt: np.ndarray,

@@ -52,7 +52,9 @@ def mollweide_forward(lon_deg: np.ndarray, lat_deg: np.ndarray) -> tuple[np.ndar
     Solves ``2*theta + sin(2*theta) = pi*sin(phi)`` by Newton iteration
     until the update underflows double precision, then
     ``x = (2*sqrt(2)/pi) * R * lambda * cos(theta)``,
-    ``y = sqrt(2) * R * sin(theta)``.
+    ``y = sqrt(2) * R * sin(theta)``.  Each coordinate stops at its own
+    convergence, so its value does not depend on the other coordinates
+    projected with it.
     """
     # deliberately NOT wrapped: this is the MEASURE projection, and the
     # projected-CRS inverses hand back antimeridian-crossing geometries
@@ -63,13 +65,17 @@ def mollweide_forward(lon_deg: np.ndarray, lat_deg: np.ndarray) -> tuple[np.ndar
     phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
     theta = phi.copy()
     target = np.pi * np.sin(phi)
+    flat, goal = theta.reshape(-1), target.reshape(-1)
+    live = np.arange(flat.size)
     for _ in range(60):
-        f = 2.0 * theta + np.sin(2.0 * theta) - target
-        fp = 2.0 + 2.0 * np.cos(2.0 * theta)
+        th = flat[live]
+        f = 2.0 * th + np.sin(2.0 * th) - goal[live]
+        fp = 2.0 + 2.0 * np.cos(2.0 * th)
         # fp -> 0 only at the poles where theta = phi = ±pi/2 is exact.
         d = np.where(np.abs(fp) > 1e-14, f / np.where(fp == 0.0, 1.0, fp), 0.0)
-        theta -= d
-        if not np.any(np.abs(d) > 1e-17):
+        flat[live] = th - d
+        live = live[np.abs(d) > 1e-17]
+        if not len(live):
             break
     x = (2.0 * _SQRT2 / np.pi) * WGS84_A * lam * np.cos(theta)
     y = _SQRT2 * WGS84_A * np.sin(theta)

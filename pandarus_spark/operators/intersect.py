@@ -36,9 +36,11 @@ Scale design (north_rule):
 
 The refine (:func:`refine_pairs`) has three tiers, one per input shape:
 rect × rect pairs take a closed-form bbox clip; simple single-ring
-polygon pairs (convex or concave) take one batched convex-cover clip
-per Arrow batch; holes, multi-part geometry, lines and points take the
-scalar kernel.  All three give the scalar kernel's answer.
+polygon pairs (convex or concave, of any width or fan-out) take the
+batched convex-cover clip, the pipeline the zonal coverage weights
+share (``geometry/batch``); holes, multi-part geometry, lines, points
+and malformed WKB take the scalar kernel.  All three give the scalar
+kernel's answer.
 """
 
 from __future__ import annotations
@@ -248,82 +250,67 @@ def _pair_frame(rows, measures, wkbs):
         "geom_wkb": wkbs})
 
 
-_CONCAVE_PAIR_CAP = 4096  # piece pairs per row above this defer to scalar
+def _loads_or_none(wkb):
+    """The decoded geometry, or None when the WKB is malformed (the
+    scalar tier then skips the row, see :data:`_MALFORMED_GEOMETRY`)."""
+    try:
+        return G.wkb_loads(bytes(wkb))
+    except _MALFORMED_GEOMETRY:
+        return None
 
 
 def _refine_cover_batch(rows, B):
     """Batched tier for every SIMPLE single-ring polygon pair, convex or
-    concave.  Mirrors the scalar kernel exactly: each ring is reduced to
-    its disjoint convex cover (geom._convex_cover — the ring itself when
-    convex, its trapezoid decomposition otherwise), candidate (subject
-    piece × clip piece) pairs are bbox-screened in the scalar's
-    nested-loop order, and ALL surviving pairs across the whole Arrow
-    batch run ONE clip_convex_batch (Sutherland–Hodgman is area-exact
-    only for convex subjects, hence the cover).  Per-row measures sum
-    the piece areas in that same order and the MultiPolygon parts are
-    emitted in it, so output is bit-identical to :func:`_refine_scalar`
-    (pinned by tests).  Rows whose cover fan-out exceeds
-    ``_CONCAVE_PAIR_CAP`` defer to scalar.
-
-    Each distinct geometry is decoded and covered ONCE (a feature
-    typically appears in several candidate pairs of the same Arrow
-    batch — the cell join emits one row per neighbour).  Returns
-    (handled_mask, result_frame or None); unhandled rows (holes,
-    multi-part, foreign WKB, oversized fan-out) stay for the scalar
-    tier."""
+    concave, of any width.  Mirrors the scalar kernel exactly: each ring
+    is reduced to its disjoint convex cover (geom._convex_cover — the
+    ring itself when convex, its trapezoid decomposition otherwise),
+    candidate (subject piece × clip piece) pairs are bbox-screened in
+    the scalar's nested-loop order and clipped by the shared driver
+    ``batch.clip_pairs`` (Sutherland–Hodgman is area-exact only for
+    convex subjects, hence the cover).  Per-row measures sum the piece
+    areas in that same order and the MultiPolygon parts are emitted in
+    it, so the WKB is bit-identical to :func:`_refine_scalar`'s (pinned
+    by tests).  Each distinct geometry is decoded and covered ONCE (the
+    cell join emits one row per neighbour), each clip piece is oriented
+    once, and areas are summed per vertex count, so a row's values do
+    not depend on the rest of its batch.  Returns (handled_mask,
+    result_frame or None); unhandled rows (holes, multi-part, malformed
+    WKB) stay for the scalar tier."""
     import pandas as pd
     n = len(rows)
-    handled = np.zeros(n, dtype=bool)
     codes, uniq = pd.factorize(np.concatenate(
         [rows["from_wkb"].to_numpy(), rows["to_wkb"].to_numpy()]))
-    if not len(uniq):
-        return handled, None
-    u_pts, u_cnt, u_ok = B.decode_simple_polygon_batch(list(uniq))
-    uf, ut = codes[:n], codes[n:]
-    handled = (uf >= 0) & (ut >= 0) & u_ok[uf] & u_ok[ut]
-    if not handled.any():
-        return handled, None
-    # rings that failed the decode have cnt 0 and so no cover pieces
-    fpts, fcnt, starts, boxes = B.convex_cover_flat(u_pts, u_cnt)
-    npieces = np.diff(starts)
-    handled &= npieces[uf] * npieces[ut] <= _CONCAVE_PAIR_CAP
+    rings, ring_geom, _ = B.polygon_rings([_loads_or_none(w) for w in uniq])
+    # the ring of each single-ring geometry; -1 for the rest and, in the
+    # extra last slot, for null WKB (code -1)
+    simple = np.nonzero(np.bincount(ring_geom, minlength=len(uniq))[ring_geom] == 1)[0]
+    ring_of = np.full(len(uniq) + 1, -1)
+    ring_of[ring_geom[simple]] = np.arange(len(simple))
+    f, t = ring_of[codes[:n]], ring_of[codes[n:]]
+    handled = (f >= 0) & (t >= 0)
     if not handled.any():
         return handled, None
     hidx = np.nonzero(handled)[0]
-    uf, ut = uf[hidx], ut[hidx]
-    # ragged cross product: every (subject piece x clip piece) of every
-    # row, bbox-screened, in the scalar nested-loop order (sub outer)
-    rep, sub_idx, clip_idx = B.fan_out_pairs(starts[uf], npieces[uf], boxes,
-                                             starts[ut], npieces[ut], boxes)
-    piece_row = hidx[rep]
-    if not len(piece_row):
-        return handled, None
-    cp = B.ensure_ccw_batch(fpts[clip_idx], fcnt[clip_idx])
-    out_pts, out_cnt = B.clip_convex_batch(fpts[sub_idx], fcnt[sub_idx], cp, fcnt[clip_idx])
-    keep = out_cnt >= 3
-    if keep.any():
-        keep[keep] &= B.ring_area_batch(out_pts[keep], out_cnt[keep]) > 1e-18
-    if not keep.any():
-        return handled, None
-    kept_rows, kept_pts, kept_cnt = piece_row[keep], out_pts[keep], out_cnt[keep]
-    # np.add.at is unbuffered and applies in index order; kept_rows
-    # ascends, so each row sums its pieces in the scalar loop's order
-    measures = np.zeros(n, dtype=np.float64)
-    np.add.at(measures, kept_rows, B.mollweide_area_batch(kept_pts, kept_cnt))
-    idxs = np.nonzero(handled & (measures > 0))[0]
+    f, t = f[hidx], t[hidx]
+    verts, off, cnt, starts, boxes = B.convex_cover_ragged([rings[i] for i in simple])
+    ccw = B.ccw_pieces(verts, off, cnt)
+    npieces = np.diff(starts)
+    # every (subject piece × clip piece) of every row, bbox-screened, in
+    # the scalar nested-loop order (subject outer)
+    rep, sub, clip = B.fan_out_pairs(starts[f], npieces[f], boxes, starts[t], npieces[t], boxes)
+    out_verts, out_off, out_cnt = B.clip_pairs(verts, off, cnt, sub, ccw, off, cnt, clip)
+    keep = B.ring_area_by_count(out_verts, out_off, out_cnt) > 1e-18
+    row, out_off, out_cnt = hidx[rep[keep]], out_off[keep], out_cnt[keep]
+    moll = np.column_stack(mollweide_forward(out_verts[:, 0], out_verts[:, 1]))
+    # np.add.at is unbuffered and applies in index order; row ascends,
+    # so each row sums its pieces in the scalar loop's order
+    measures = np.zeros(n)
+    np.add.at(measures, row, B.ring_area_by_count(moll, out_off, out_cnt))
+    out = measures[row] > 0
+    idxs, nparts = np.unique(row[out], return_counts=True)
     if not len(idxs):
         return handled, None
-    first = np.searchsorted(kept_rows, idxs)
-    nparts = np.searchsorted(kept_rows, idxs, side="right") - first
-    # one-part rows: bulk encode; several parts: per-row MultiPolygon
-    wkbs: list = [None] * len(idxs)
-    one = np.nonzero(nparts == 1)[0]
-    for j, w in zip(one, B.multipolygon_wkb_batch(kept_pts[first[one]], kept_cnt[first[one]])):
-        wkbs[j] = w
-    for j in np.nonzero(nparts > 1)[0]:
-        s = first[j]
-        wkbs[j] = B.multipolygon_parts_wkb(
-            [(kept_pts[k], int(kept_cnt[k])) for k in range(s, s + nparts[j])])
+    wkbs = B.multipolygon_wkb_ragged(out_verts, out_off[out], out_cnt[out], nparts)
     return handled, _pair_frame(rows.iloc[idxs], measures[idxs], wkbs)
 
 
@@ -336,8 +323,8 @@ _MALFORMED_GEOMETRY = (ValueError, IndexError, struct.error)
 
 def _refine_scalar(pdf):
     """The scalar kernel, one candidate row at a time: the refine's
-    tier for holes, multi-part geometry, lines, points, collections and
-    oversized rings, and the oracle the batched tiers are tested
+    tier for holes, multi-part geometry, lines, points and collections,
+    and the oracle the batched tiers are tested
     against.  A row whose geometry fails to decode or clip is skipped,
     like the reference's TopologicalError rows
     (utils/multiprocess.py:102-104); see :data:`_MALFORMED_GEOMETRY`."""
@@ -371,13 +358,14 @@ def refine_pairs(pairs_with_geoms: DataFrame) -> DataFrame:
 
     1. rect × rect polygon pairs — closed-form bbox clip, pure numpy
        (``_refine_rects``);
-    2. simple single-ring polygon pairs, convex or concave — per-ring
-       convex cover (the ring itself when convex, its trapezoid
-       decomposition otherwise), then ONE batched Sutherland–Hodgman
-       over all (subject piece × clip piece) candidates in the Arrow
-       batch (``_refine_cover_batch``);
+    2. simple single-ring polygon pairs, convex or concave, of any
+       width — per-ring convex cover (the ring itself when convex, its
+       trapezoid decomposition otherwise), then batched
+       Sutherland–Hodgman over all (subject piece × clip piece)
+       candidates of the Arrow batch in budget spans, through the clip
+       driver the zonal weights share (``_refine_cover_batch``);
     3. everything else (holes, multi-part, lines, points, collections,
-       oversized rings) — the scalar kernel per row
+       malformed WKB) — the scalar kernel per row
        (``_refine_scalar``)."""
 
     def gen(batches):

@@ -186,9 +186,10 @@ def raster_statistics(features: DataFrame, cells: DataFrame,
     # Coverage is one batched kernel per batch (_coverage_fractions):
     # each distinct zone decoded once, all convex covers built at once,
     # every (cell × zone piece) pair whose boxes touch clipped against
-    # the cell box in one clip_convex_batch call per budget span of
-    # pairs, and the signed piece areas (holes −) summed per row with
-    # np.add.at.  Centers tests cell centers zone by zone.
+    # the cell box by the shared clip driver (batch.clip_pairs, one
+    # clip_convex_batch per budget span of pairs), and the signed piece
+    # areas (holes −) summed per row with np.add.at.  Centers tests
+    # cell centers zone by zone.
     centers = method == "centers"
 
     def gen(batches):
@@ -285,65 +286,44 @@ def _coverage_fractions(wkbs, mnx, mny, mxx, mxy) -> tuple[np.ndarray, np.ndarra
     (the caller keeps ``frac > 1e-12`` and caps it at 1).
 
     Each distinct zone is decoded once and its polygon rings flattened
-    in (part, ring) order, exteriors signed +, holes −; their convex
-    covers all come from one ``convex_cover_ragged`` (covers, not rings:
-    Sutherland–Hodgman drops area when a concave subject's clip is
-    disconnected; the pieces partition the ring, so per-cell piece
-    areas sum to area(box ∩ ring)).  Every (cell row × piece of its
-    zone) pair whose boxes touch is clipped against the cell box, one
-    ``clip_convex_batch`` per budget span of pairs of like width, and the signed
-    areas sum per row with ``np.add.at`` in piece order: area(box ∩
-    poly) = Σ area(box ∩ exterior pieces) − Σ area(box ∩ hole pieces),
-    the value the scalar decomposition sums.  Every temporary is
-    bounded by ``batch.budget_spans``, so one wide ring costs memory by
-    its own width only.  A row's value depends on its own zone and cell
-    only, not on the rest of the batch (pinned by
+    in (part, ring) order (``batch.polygon_rings``), exteriors signed +,
+    holes −; their convex covers all come from one
+    ``convex_cover_ragged`` (covers, not rings: Sutherland–Hodgman drops
+    area when a concave subject's clip is disconnected; the pieces
+    partition the ring, so per-cell piece areas sum to area(box ∩
+    ring)).  Every (cell row × piece of its zone) pair whose boxes touch
+    is clipped against the cell box, passed as a 4-vertex clip ring, by
+    the shared driver ``batch.clip_pairs``, and the signed areas sum per
+    row with ``np.add.at`` in piece order: area(box ∩ poly) = Σ area(box
+    ∩ exterior pieces) − Σ area(box ∩ hole pieces), the value the scalar
+    decomposition sums.  Every temporary is bounded by
+    ``batch.budget_spans``, so one wide ring costs memory by its own
+    width only.  A row's value depends on its own zone and cell only,
+    not on the rest of the batch (pinned by
     tests/test_coverage_kernel.py)."""
     from ..geometry import batch as B
     order, codes, uniq = _zone_order(wkbs)
     mnx, mny, mxx, mxy = mnx[order], mny[order], mxx[order], mxy[order]
     n = len(order)
-    rings, ring_zone, sign = [], [], []
-    for z, wkb in enumerate(uniq):
-        for part in G.extract_kind_parts(G.wkb_loads(bytes(wkb)), "polygon"):
-            for ri, ring in enumerate(part):
-                rings.append(ring)
-                ring_zone.append(z)
-                sign.append(1.0 if ri == 0 else -1.0)
+    rings, ring_zone, exterior = B.polygon_rings([G.wkb_loads(bytes(w)) for w in uniq])
     area = np.zeros(n)
     if n and rings:
         verts, off, pcnt, starts, boxes = B.convex_cover_ragged(rings)
-        piece_sign = np.repeat(sign, np.diff(starts))
+        piece_sign = np.repeat(np.where(exterior, 1.0, -1.0), np.diff(starts))
         # a zone's rings, and so its pieces, are one contiguous run
         z_start = starts[np.searchsorted(ring_zone, np.arange(len(uniq) + 1))]
         z_n = np.diff(z_start)
         cell_box = np.column_stack([mnx, mny, mxx, mxy])
-        clip = np.stack([np.column_stack([mnx, mny]), np.column_stack([mxx, mny]),
-                         np.column_stack([mxx, mxy]), np.column_stack([mnx, mxy])],
-                        axis=1)  # (n, 4, 2) CCW
-        fan = z_n[codes]
-        # the fan-out holds ~16 f8-sized values per pair before the screen
-        for s, e in B.budget_spans(fan, np.full(len(fan), 16)):
-            c = codes[s:e]
-            # the cell side of each pair is its own row: b_idx is the row
-            _, piece, row = B.fan_out_pairs(z_start[c], z_n[c], boxes, np.arange(s, e),
-                                            np.ones(e - s, dtype=np.int64), cell_box)
-            # clip the pairs narrowest piece first, so a wide piece pads
-            # only its own span: a clip pads its pairs to the widest piece
-            # and each box edge can add a vertex, ~16 f8 per vertex slot
-            # (points, next points, crossings, the compacted copy, sides,
-            # parameters)
-            by_w = np.argsort(pcnt[piece], kind="stable")
-            pair_area = np.empty(len(row))
-            for a, b in B.budget_spans(np.ones(len(row), dtype=np.int64),
-                                       16 * (pcnt[piece[by_w]] + 4)):
-                k = by_w[a:b]
-                out_pts, out_cnt = B.clip_convex_batch(
-                    B.gather_pieces(verts, off, pcnt, piece[k]), pcnt[piece[k]],
-                    clip[row[k]], np.full(len(k), 4, dtype=np.int64))
-                pair_area[k] = B.ring_area_by_count(out_pts, out_cnt)
-            # unbuffered, in pair order: each row sums its pieces in order
-            np.add.at(area, row, piece_sign[piece] * pair_area)
+        # row i's cell box is ring i of a store of CCW 4-vertex rings
+        box_verts = cell_box[:, [0, 1, 2, 1, 2, 3, 0, 3]].reshape(-1, 2)
+        box_off, box_cnt = 4 * np.arange(n), np.full(n, 4)
+        # the cell side of each pair is its own row: b_idx is the row
+        _, piece, row = B.fan_out_pairs(z_start[codes], z_n[codes], boxes, np.arange(n),
+                                        np.ones(n, dtype=np.int64), cell_box)
+        pair_area = B.ring_area_by_count(*B.clip_pairs(
+            verts, off, pcnt, piece, box_verts, box_off, box_cnt, row))
+        # unbuffered, in pair order: each row sums its pieces in order
+        np.add.at(area, row, piece_sign[piece] * pair_area)
     return order, area / ((mxx - mnx) * (mxy - mny))
 
 

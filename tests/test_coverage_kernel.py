@@ -6,8 +6,9 @@
 * a row's fraction depends on its own zone and cell only — the kernel
   on a whole frame equals, bit for bit, the kernel on each zone group;
 * fractions match the per-cell exact clip ``_coverage_weights_scalar``
-  (rel 1e-9) on concave stars, holes, multi-part and collection zones,
-  edge/corner touches and a degenerate sliver ring;
+  (rel 1e-9) on concave stars, holes, multi-part and collection zones
+  (one holding a ring-less polygon), edge/corner touches and a
+  degenerate sliver ring;
 * one ``clip_convex_batch`` call per budget span, not one per piece,
   and a wide zone splits the batch into bounded spans;
 * one wide ring among many small ones costs memory by its own width,
@@ -143,6 +144,23 @@ def test_fractions_match_scalar_clip():
     # the zones' areas come back as the sum of their fractions
     for label, area in (("donut", 4.0 - 0.64), ("grid_square", 1.0)):
         assert frac[labels == label].sum() * 0.25 ** 2 == pytest.approx(area, rel=1e-12)
+
+
+def test_collection_with_empty_polygon_part():
+    # clean_geom turns a polygon with a degenerate exterior into one with
+    # no rings and keeps it inside a collection: it must add no ring and
+    # shift no other ring's exterior/hole sign
+    zone = G.clean_geom({"type": "GeometryCollection", "geometries": [
+        {"type": "Polygon", "coordinates": [np.array([[0.0, 0.0], [1.0, 1.0]])]},
+        {"type": "Polygon", "coordinates": [_box(0.0, 0.0, 2.0, 2.0), _box(0.6, 0.6, 1.4, 1.4)]},
+        {"type": "Polygon", "coordinates": [_ring([[2.1, 1.0], [2.2, 1.2], [2.05, 1.4]])]}]})
+    assert zone["geometries"][0]["coordinates"] == []
+    pdf = _frame({"empty_part": zone, **_zones()})
+    order, frac = _fractions(pdf)
+    np.testing.assert_allclose(frac, _scalar(pdf, order), rtol=1e-9, atol=1e-12)
+    labels = pdf["label"].to_numpy()[order]
+    area = 4.0 - 0.64 + 0.025  # the donut and the triangle
+    assert frac[labels == "empty_part"].sum() * 0.25 ** 2 == pytest.approx(area, rel=1e-12)
 
 
 def test_weight_frame_keeps_rows_aligned():

@@ -239,25 +239,99 @@ def test_convex_cover_batch_bit_identical_to_scalar():
             assert w.shape == g.shape and np.array_equal(w, g), f"ring {i}"
 
 
-def test_concave_pair_cap_defers_to_scalar(spark, monkeypatch):
-    """Rows whose cover fan-out exceeds _CONCAVE_PAIR_CAP must fall to
-    the scalar tier and still produce the identical result."""
-    import pandarus_spark.operators.intersect as I
-    from pandarus_spark.geometry import batch as B
+def _pairs_frame(froms, tos):
+    """A refine input frame, without Spark: every from × to pair."""
+    import pandas as pd
+    names = [c.split()[0] for c in _PAIRS_SCHEMA.split(", ")]
+    return pd.DataFrame([tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                         for r in _pair_rows(froms, tos)], columns=names)
 
-    star = _star(0.8, 0.9, 0.3, 0.9, n=9)     # 18-vertex concave: 16 quads
+
+def _ngon(cx, cy, r, n, rot=0.0):
+    ang = rot + 2 * np.pi * np.arange(n) / n
+    ring = np.column_stack([cx + r * np.cos(ang), cy + r * np.sin(ang)])
+    return {"type": "Polygon", "coordinates": [np.vstack([ring, ring[0]])]}
+
+
+def test_high_fan_out_and_wide_rings_stay_in_cover_tier():
+    """Every simple single-ring pair takes the cover tier, however many
+    piece pairs it fans out to and however wide its rings are: a star ×
+    box, two wide stars (past 4,096 piece pairs) and a 5,000-vertex ring
+    × hexagon.  WKB bytes equal the scalar kernel's, measures agree to
+    rel 1e-12."""
+    import pandas as pd
+
+    from pandarus_spark.geometry import batch as B
+    from pandarus_spark.operators.intersect import _refine_cover_batch, _refine_scalar
+
     box = {"type": "Polygon", "coordinates": [np.array(
         [[0, 0], [1.5, 0], [1.5, 1.5], [0, 1.5], [0, 0]], dtype=float)]}
-    df = spark.createDataFrame(_pair_rows([star], [box]), _PAIRS_SCHEMA).coalesce(1)
-    want = _scalar_rows(df)
+    stars = (_star(0.8, 0.9, 0.3, 0.9, n=40), _star(1.0, 0.7, 0.4, 1.1, n=30))
+    wide = _ngon(0.5, 0.5, 1.0, 5000)
+    assert np.prod([len(G._convex_cover(g["coordinates"][0])) for g in stars]) > 4096
+    pdf = pd.concat([_pairs_frame([_star(0.8, 0.9, 0.3, 0.9, n=9)], [box]),
+                     _pairs_frame(stars[:1], stars[1:]),
+                     _pairs_frame([wide], [_hexagon(1.4, 0.6, 0.3)])], ignore_index=True)
+    handled, got = _refine_cover_batch(pdf, B)
+    assert handled.all()
+    want = _refine_scalar(pdf)
+    assert len(got) == len(want) == 3
+    for g, w in zip(got.itertuples(), want.itertuples()):
+        assert g.from_label == w.from_label
+        assert bytes(g.geom_wkb) == bytes(w.geom_wkb)
+        assert g.measure == pytest.approx(w.measure, rel=1e-12)
 
-    monkeypatch.setattr(I, "_CONCAVE_PAIR_CAP", 4)   # force the deferral
-    handled, _ = I._refine_cover_batch(df.toPandas(), B)
-    assert not handled.any()
-    got = I.refine_pairs(df).collect()
-    assert len(got) == len(want) == 1
-    assert got[0]["measure"] == want[0]["measure"]
-    assert bytes(got[0]["geom_wkb"]) == bytes(want[0]["geom_wkb"])
+
+def test_cover_tier_is_batch_invariant():
+    """A row's measure and WKB do not depend on the rows it is batched
+    with: the tier on a whole frame equals, bit for bit, the tier on
+    each row alone.  The frame holds one wide-output pair (an 80-gon ×
+    hexagon) next to hexagon pairs whose 3–7-vertex outputs would sum
+    differently if padded to its width."""
+    from pandarus_spark.geometry import batch as B
+    from pandarus_spark.operators.intersect import _refine_cover_batch
+
+    rng = np.random.default_rng(1)
+    froms, tos = [_ngon(10.0, 45.0, 0.5, 80, 0.1)], [_ngon(10.2, 45.1, 0.6, 6, 0.3)]
+    for _ in range(60):
+        cx, cy = rng.uniform(-20, 20), rng.uniform(-60, 60)
+        froms.append(_ngon(cx, cy, rng.uniform(0.5, 1), 6, rng.uniform(0, 1)))
+        tos.append(_ngon(cx + rng.uniform(-0.5, 0.5), cy + rng.uniform(-0.5, 0.5),
+                         rng.uniform(0.5, 1), 6, rng.uniform(0, 1)))
+    pdf = _pairs_frame(froms, tos)
+    pdf = pdf[pdf["from_id"] == pdf["to_id"]].reset_index(drop=True)
+    _, whole = _refine_cover_batch(pdf, B)
+    assert len(whole) == len(pdf)
+    for i in range(len(pdf)):
+        _, alone = _refine_cover_batch(pdf.iloc[[i]], B)
+        assert whole["from_id"].iloc[i] == alone["from_id"].iloc[0] == i
+        assert whole["measure"].iloc[i] == alone["measure"].iloc[0]   # bit for bit
+        assert bytes(whole["geom_wkb"].iloc[i]) == bytes(alone["geom_wkb"].iloc[0])
+
+
+def test_wide_ring_rows_stay_bounded():
+    """200 rows of one 4,000-vertex convex ring × a hexagon on its
+    edge: padding every pair of the batch to the ring's width peaked at
+    ~160 MB; clipping in budget spans keeps to a few ~32 MB chunks."""
+    import tracemalloc
+
+    from pandarus_spark.geometry import batch as B
+    from pandarus_spark.operators.intersect import _refine_cover_batch, _refine_scalar
+
+    ang = 2 * np.pi * np.arange(200) / 200
+    pdf = _pairs_frame([_ngon(0.0, 0.0, 1.0, 4000)],
+                       [_hexagon(np.cos(a), np.sin(a), 0.05) for a in ang])
+    tracemalloc.start()
+    try:
+        handled, got = _refine_cover_batch(pdf, B)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 80e6
+    assert handled.all() and len(got) == 200
+    want = _refine_scalar(pdf.iloc[::50])
+    assert [bytes(w) for w in got["geom_wkb"].iloc[::50]] == [bytes(w) for w in want["geom_wkb"]]
+    np.testing.assert_allclose(got["measure"].iloc[::50], want["measure"], rtol=1e-12)
 
 
 def _scalar_frame(pairs):
